@@ -13,14 +13,52 @@ Delta-``MERGE``-shaped: WHEN MATCHED UPDATE, WHEN NOT MATCHED INSERT,
 WHEN NOT MATCHED BY SOURCE DELETE). A real Delta/Iceberg adapter is
 this class with the apply step swapped for ``DeltaTable.merge`` /
 ``MERGE INTO`` — the op derivation and the pipeline wiring stay as-is.
+
+:class:`TransactionalParquetBackend` is the lock-free multi-writer
+store. It shares its data plane with ``DocumentStore``: the row-level
+operations (``delete_where_build``, ``update_where_build``,
+``merge_into_build``, ``restore_build``), the commit change feed,
+bin-packing and Z-order clustering are each defined once in
+:mod:`.store` and build a private candidate directory. Only the
+publish differs — ``DocumentStore`` flips its pointer under a flock,
+this module creates the next record of an append-only CAS log in one
+place (:meth:`TransactionalParquetBackend._try_publish`) and retries
+against the winner when a rival takes the version number.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import time
+import uuid
 from typing import Optional, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from far_finer_airtable_firestore_sync_spark.sources.store import (
+    ConcurrentCommitError,
+    _append_images,
+    _binpack_classify,
+    _drop_skip_manifests,
+    _link_candidate,
+    _masked_scan_with_positions,
+    _version_live_rows,
+    _write_commit_changes,
+    _write_json_durable,
+    binpack_build,
+    delete_where_build,
+    derive_merge_clauses,
+    merge_into_build,
+    read_with_deletion_vectors,
+    restore_build,
+    update_where_build,
+    write_deletion_vectors,
+    write_zone_manifest,
+    zorder_cluster,
+)
 
 
 @runtime_checkable
@@ -164,6 +202,18 @@ class TransactionalParquetBackend:
     its post-state and retries (:meth:`commit_with`, the bounded-retry
     CAS loop).
 
+    Data plane vs publish: every commit builds a private candidate
+    version directory first — a full parquet write (:meth:`commit`),
+    a shared DML builder from :mod:`.store` (:meth:`delete_where`,
+    :meth:`update_where`, :meth:`merge_into`, :meth:`restore`; the
+    same builders ``DocumentStore`` calls), or a maintenance rewrite
+    (:meth:`_maintenance_publish`) — and then publishes it through
+    :meth:`_try_publish`, the one place a log record is created. A
+    lost race returns ``None`` there; each caller then either
+    re-derives its candidate against the winner (DML), replays the
+    winner's recorded DML onto it (maintenance) or raises
+    (``expected_version`` CAS, clone).
+
     Atomic publish: the record is fully written to a scratch file and
     published with ``os.link`` — hard-link creation is atomic and
     fails if the target exists, so a reader can never observe a
@@ -201,9 +251,6 @@ class TransactionalParquetBackend:
         key_col: str = "doc_id",
         writer_id: Optional[str] = None,
     ):
-        import os
-        import uuid
-
         self.spark = spark
         self.root = root
         self.key_col = key_col
@@ -213,18 +260,12 @@ class TransactionalParquetBackend:
     # -- log primitives ---------------------------------------------------
 
     def _log_dir(self) -> str:
-        import os
-
         return os.path.join(self.root, self._LOG)
 
     def _record_path(self, version: int) -> str:
-        import os
-
         return os.path.join(self._log_dir(), f"{version:0{self._WIDTH}d}.json")
 
     def _checkpoint_path(self) -> str:
-        import os
-
         return os.path.join(self._log_dir(), "_last_checkpoint")
 
     def _write_checkpoint(self, version: int) -> None:
@@ -236,18 +277,11 @@ class TransactionalParquetBackend:
         correctness. (Two writers replacing concurrently can regress
         the hint to the older of the two versions; same benign
         outcome, so no lock.)"""
-        import json
-        import os
-        import uuid
-
         tmp = os.path.join(
             self._log_dir(), f"_tmp-ckpt-{uuid.uuid4().hex}.json"
         )
         try:
-            with open(tmp, "w") as fh:
-                json.dump({"version": version}, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
+            _write_json_durable(tmp, {"version": version})
             os.replace(tmp, self._checkpoint_path())
         except OSError:
             # advisory only — the commit that triggered this has
@@ -261,9 +295,6 @@ class TransactionalParquetBackend:
         """Probe start from the `_last_checkpoint` hint; 0 when the
         hint is missing, unreadable, or names a record that does not
         exist (a hint can never be trusted past what the log shows)."""
-        import json
-        import os
-
         try:
             with open(self._checkpoint_path()) as fh:
                 cand = json.load(fh).get("version", 0)
@@ -290,9 +321,6 @@ class TransactionalParquetBackend:
         read, quadratic over the store's lifetime). A record is fully
         written and fsync'd BEFORE its atomic link publish, so an
         existing path always reads back complete."""
-        import json
-        import os
-
         v = self._checkpoint_version()
         while os.path.exists(self._record_path(v + 1)):
             v += 1
@@ -312,17 +340,10 @@ class TransactionalParquetBackend:
         published by :meth:`delete_where` carries a positional mask;
         every reader — including :meth:`commit_with`'s re-derive —
         must see the post-delete view)."""
-        import os
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            read_with_deletion_vectors,
-        )
-
         _v, rec = self.latest()
         if rec is None:
             return None
-        vd = os.path.join(self.root, rec["version_dir"])
-        return read_with_deletion_vectors(self.spark, vd)
+        return read_with_deletion_vectors(self.spark, self._version_path(rec))
 
     def read_or_empty(self, like: DataFrame) -> DataFrame:
         df = self.read()
@@ -337,12 +358,6 @@ class TransactionalParquetBackend:
         one O(1) record read; a version whose data directory was
         retention-vacuumed (:meth:`vacuum_versions`) fails loudly —
         never partial state."""
-        import os
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            read_with_deletion_vectors,
-        )
-
         rec = self._read_record(version)  # raises on unknown version
         vd = os.path.join(self.root, rec["version_dir"])
         if not os.path.isdir(vd):
@@ -380,9 +395,6 @@ class TransactionalParquetBackend:
         UNREFERENCED crash debris; this removes referenced-but-expired
         snapshots. Travel past the window then fails loudly in
         :meth:`read_version`."""
-        import os
-        import shutil
-
         if keep_last < 1:
             raise ValueError(
                 "vacuum_versions: keep_last must be >= 1 — the head's "
@@ -443,15 +455,6 @@ class TransactionalParquetBackend:
         on — when ``os.link`` wins version N+1, the diff's left side
         IS version N by construction, so the feed can never describe
         the wrong predecessor."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-        )
 
         def stale(base_v: int) -> bool:
             # "txn://0" is the explicit EMPTY-base handle: a CAS from an
@@ -463,15 +466,16 @@ class TransactionalParquetBackend:
                 and f"txn://{base_v}" != expected_version
             )
 
+        stale_msg = (
+            f"store {self.root}: log advanced past "
+            f"{expected_version!r}; base snapshot is stale"
+        )
         # Fail-fast BEFORE the (cluster-wide) parquet write: a base
         # already stale at call time must not pay a full table write
         # just to delete it (review finding; same shape as
         # DocumentStore.commit's pre-write check).
         if stale(self.latest()[0]):
-            raise ConcurrentCommitError(
-                f"store {self.root}: log advanced past "
-                f"{expected_version!r}; base snapshot is stale"
-            )
+            raise ConcurrentCommitError(stale_msg)
 
         rel = f"v-{uuid.uuid4().hex}"
         out = os.path.join(self.root, rel)
@@ -482,91 +486,80 @@ class TransactionalParquetBackend:
 
         while True:
             base_v, base_rec = self.latest()
-            if stale(base_v):
-                shutil.rmtree(out, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"store {self.root}: log advanced past "
-                    f"{expected_version!r}; base snapshot is stale"
-                )
-            if cdf:
-                self._write_commit_cdf(out, base_rec)
-            record = {
-                "version_dir": rel,
-                "writer": self.writer_id,
-                "ts_ms": int(time.time() * 1000),
-                "txns": dict((base_rec or {}).get("txns", {})),
-                # op metadata: snapshot commits are NOT replayable by a
-                # racing maintenance rewrite (the version_dir IS the
-                # whole new state) — a compaction that loses to one
-                # must rebuild (see _maintenance_publish)
-                "op": {"kind": "snapshot"},
-            }
-            if txn is not None:
-                record["txns"][txn[0]] = str(txn[1])
-            tmp = os.path.join(
-                self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = self._record_path(base_v + 1)
             try:
-                os.link(tmp, target)  # atomic put-if-absent
-                return self._published(base_v + 1)
-            except FileExistsError:
-                # Either a rival owns version base_v+1 — or OUR link
-                # succeeded server-side and only the reply was lost (an
-                # NFS retransmit returns EEXIST for a link this writer
-                # actually won; review finding). The tmp file's link
-                # count disambiguates: 2 means the target IS our record.
-                if os.stat(tmp).st_nlink == 2:
-                    return self._published(base_v + 1)
-                continue
-            finally:
-                os.unlink(tmp)
+                if stale(base_v):
+                    raise ConcurrentCommitError(stale_msg)
+                if cdf:
+                    _write_commit_changes(
+                        self.spark, out, self._version_path(base_rec),
+                        self.key_col,
+                    )
+            except Exception:
+                shutil.rmtree(out, ignore_errors=True)
+                raise
+            # op metadata: snapshot commits are NOT replayable by a
+            # racing maintenance rewrite (the version_dir IS the whole
+            # new state) — a compaction that loses to one must rebuild
+            # (see _maintenance_publish)
+            handle = self._try_publish(
+                base_v, base_rec, rel, {"kind": "snapshot"}, txn
+            )
+            if handle is not None:
+                return handle
 
-    def _write_commit_cdf(self, out: str, base_rec: Optional[dict]) -> None:
-        """(Re)write ``out``'s ``_changes/`` sidecar as the diff of the
-        committed data against ``base_rec``'s masked snapshot (every
-        row an insert when the log is empty). Called inside commit's
-        publish loop so a CAS retry re-derives the feed against the
-        base it will actually land on."""
-        import os
-        import shutil
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            diff_frames,
-            read_with_deletion_vectors,
+    def _version_path(self, rec: Optional[dict]) -> Optional[str]:
+        """Data directory of a log record (None for no record)."""
+        return None if rec is None else os.path.join(
+            self.root, rec["version_dir"]
         )
 
-        ch = os.path.join(out, "_changes")
-        shutil.rmtree(ch, ignore_errors=True)
-        new_df = self.spark.read.parquet(out)
-        if base_rec is None:
-            cols = [c for c in new_df.columns if c != self.key_col]
-            types = dict(new_df.dtypes)
-            changes = new_df.select(
-                F.col(self.key_col),
-                F.lit("insert").alias("change_type"),
-                *cols,
-                *[
-                    F.lit(None).cast(types[c]).alias(f"old_{c}")
-                    for c in cols
-                ],
-            )
-        else:
-            base_dir = os.path.join(self.root, base_rec["version_dir"])
-            base_df = read_with_deletion_vectors(self.spark, base_dir)
-            changes = diff_frames(
-                base_df, new_df, self.key_col, include_old=True
-            )
-        changes.write.mode("errorifexists").parquet(ch)
+    def _try_publish(
+        self,
+        base_v: int,
+        base_rec: Optional[dict],
+        rel: str,
+        op: dict,
+        txn: Optional[tuple[str, str]],
+    ) -> Optional[str]:
+        """Publish the data directory ``rel`` as log version
+        ``base_v + 1`` — the ONE place a commit record is created.
+
+        The record carries ``base_rec``'s per-app ``txns`` replay map
+        forward (plus ``txn``, if given) inside the same atomic create,
+        so no interleaving can lose a marker. It is written durably to
+        a scratch file (:func:`~.store._write_json_durable`) and
+        published with ``os.link`` — atomic put-if-absent. Returns the
+        ``txn://N`` handle, or None when a rival already owns version
+        ``base_v + 1`` (the caller decides: retry, replay or raise).
+
+        Lost-reply disambiguation: an NFS retransmit can report EEXIST
+        for a link this writer actually WON (review finding); the
+        scratch file's link count tells — 2 means the target IS our
+        record."""
+        record = {
+            "version_dir": rel,
+            "writer": self.writer_id,
+            "ts_ms": int(time.time() * 1000),
+            "txns": dict((base_rec or {}).get("txns", {})),
+            "op": op,
+        }
+        if txn is not None:
+            record["txns"][txn[0]] = str(txn[1])
+        tmp = os.path.join(self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json")
+        _write_json_durable(tmp, record)
+        try:
+            os.link(tmp, self._record_path(base_v + 1))  # put-if-absent
+        except FileExistsError:
+            if os.stat(tmp).st_nlink != 2:
+                return None  # a rival owns base_v + 1
+        finally:
+            os.unlink(tmp)
+        return self._published(base_v + 1)
 
     def _published(self, version: int) -> str:
-        """Post-publish bookkeeping shared by both commit-win paths:
-        roll the `_last_checkpoint` hint every CHECKPOINT_INTERVAL
-        commits, then hand back the ``txn://N`` handle."""
+        """Post-publish bookkeeping of a won :meth:`_try_publish`: roll
+        the `_last_checkpoint` hint every CHECKPOINT_INTERVAL commits,
+        then hand back the ``txn://N`` handle."""
         if version % self.CHECKPOINT_INTERVAL == 0:
             self._write_checkpoint(version)
         return f"txn://{version}"
@@ -582,11 +575,6 @@ class TransactionalParquetBackend:
         O(commits) — which is fine for an explicit maintenance call
         (unlike ``latest()``, which is on every read path). Returns
         the removed directory paths."""
-        import json
-        import os
-        import shutil
-        import time
-
         referenced = set()
         for n in os.listdir(self._log_dir()):
             if n.endswith(".json") and n[:-5].isdigit():
@@ -629,123 +617,21 @@ class TransactionalParquetBackend:
 
         Returns ``(txn://N handle, total_masked)``; a predicate
         adding no new positions publishes nothing and returns the
-        current handle."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from pyspark import StorageLevel
-        from pyspark.sql import functions as F
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-            _POS_FP,
-            _POS_RI,
-            _dv_position_count,
-            _link_tree,
-            _masked_scan_with_positions,
-            write_deletion_vectors,
-        )
-
-        for _attempt in range(max_retries + 1):
-            base_v, base_rec = self.latest()
-            if base_rec is None:
-                raise ValueError(
-                    f"store {self.root} is empty; nothing to delete"
-                )
-            src = os.path.join(self.root, base_rec["version_dir"])
-            prior = _dv_position_count(src)
-            rel = f"v-{uuid.uuid4().hex}"
-            out = os.path.join(self.root, rel)
-            _link_tree(src, out)
-            # inherited _changes describes the predecessor's commit
-            shutil.rmtree(os.path.join(out, "_changes"), ignore_errors=True)
-            # ONE-PASS when cdf (round 11, the DocumentStore shape):
-            # the masked matched sliver is computed once; positions
-            # and CDF pre-images project from the same cached frame.
-            matched = None
-            try:
-                if cdf:
-                    matched = _masked_scan_with_positions(
-                        self.spark, src
-                    ).filter(predicate).persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
-                    n_total = write_deletion_vectors(
-                        self.spark, out, legacy_dir=src,
-                        positions=matched.select(_POS_FP, _POS_RI),
-                    )
-                else:
-                    n_total = write_deletion_vectors(
-                        self.spark, out, predicate, legacy_dir=src
-                    )
-                if n_total == prior:  # no new positions: publish nothing
-                    shutil.rmtree(out, ignore_errors=True)
-                    return f"txn://{base_v}", prior
-                if cdf:
-                    data_cols = [
-                        c for c in matched.columns
-                        if c not in (_POS_FP, _POS_RI)
-                    ]
-                    cols = [
-                        c for c in data_cols if c != self.key_col
-                    ]
-                    types = dict(matched.dtypes)
-                    matched.select(
-                        F.col(self.key_col),
-                        F.lit("delete").alias("change_type"),
-                        *[
-                            F.lit(None).cast(types[c]).alias(c)
-                            for c in cols
-                        ],
-                        *[F.col(c).alias(f"old_{c}") for c in cols],
-                    ).write.mode("errorifexists").parquet(
-                        os.path.join(out, "_changes")
-                    )
-            finally:
-                if matched is not None:
-                    matched.unpersist()
-            record = {
-                "version_dir": rel,
-                "writer": self.writer_id,
-                "ts_ms": int(time.time() * 1000),
-                "txns": dict(base_rec.get("txns", {})),
-                # predicate DML is REPLAYABLE: applied to any version
-                # with the same logical content it masks the same
-                # logical rows — what lets a racing compaction
-                # reconcile instead of rebuilding (Delta-OPTIMIZE
-                # conflict-resolution shape; _maintenance_publish)
-                "op": {"kind": "delete_where", "predicate": predicate},
-            }
-            if txn is not None:
-                record["txns"][txn[0]] = str(txn[1])
-            tmp = os.path.join(
-                self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = self._record_path(base_v + 1)
-            try:
-                os.link(tmp, target)  # atomic put-if-absent
-                return self._published(base_v + 1), n_total
-            except FileExistsError:
-                # lost-reply disambiguation as in commit (NFS
-                # retransmit can EEXIST a link this writer WON)
-                if os.stat(tmp).st_nlink == 2:
-                    return self._published(base_v + 1), n_total
-                # a rival owns base_v+1: our positional mask is stale
-                # by construction — discard and re-derive
-                shutil.rmtree(out, ignore_errors=True)
-                continue
-            finally:
-                os.unlink(tmp)
-        raise ConcurrentCommitError(
-            f"store {self.root}: delete_where CAS failed after "
-            f"{max_retries + 1} attempts (writer {self.writer_id})"
+        current handle. The candidate is built by the shared
+        :func:`~.store.delete_where_build`."""
+        return self._dml_publish(
+            "delete",
+            # predicate DML is REPLAYABLE: applied to any version with
+            # the same logical content it masks the same logical rows —
+            # what lets a racing compaction reconcile instead of
+            # rebuilding (Delta-OPTIMIZE conflict-resolution shape;
+            # _maintenance_publish)
+            {"kind": "delete_where", "predicate": predicate},
+            lambda base, out: delete_where_build(
+                self.spark, base, out, predicate, self.key_col, cdf
+            ),
+            txn,
+            max_retries,
         )
 
     def update_where(
@@ -768,153 +654,25 @@ class TransactionalParquetBackend:
         and the derived images, so the loop discards the candidate
         and re-derives against the winner (bounded retries — the
         no-lost-update contract). Returns ``(txn://N handle,
-        n_updated)``; an empty match publishes nothing."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from pyspark import StorageLevel
-        from pyspark.sql import functions as F
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-            _POS_FP,
-            _POS_RI,
-            _dv_position_count,
-            _hive_partition_cols,
-            _link_tree,
-            _masked_scan_with_positions,
-            _run_concurrently,
-            write_deletion_vectors,
-        )
-
-        for _attempt in range(max_retries + 1):
-            base_v, base_rec = self.latest()
-            if base_rec is None:
-                raise ValueError(
-                    f"store {self.root} is empty; nothing to update"
-                )
-            src = os.path.join(self.root, base_rec["version_dir"])
-            # ONE-PASS (round 11, the DocumentStore.update_where
-            # shape): one masked scan carrying positions; the matched
-            # sliver is cached and positions, images and CDF rows all
-            # project from it — three predicate scans become one.
-            snap_pos = _masked_scan_with_positions(self.spark, src)
-            data_cols = [
-                c for c in snap_pos.columns
-                if c not in (_POS_FP, _POS_RI)
-            ]
-            unknown = [c for c in set_exprs if c not in data_cols]
-            if unknown:
-                raise ValueError(f"update_where: unknown columns {unknown}")
-            types = dict(snap_pos.dtypes)
-            matched = snap_pos.filter(predicate).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            # n_updated falls out of the mask write (new distinct
-            # positions == predicate matches visible through the prior
-            # mask) — no eager count pre-pass (round 11, the
-            # DocumentStore.update_where shape)
-            prior_total = _dv_position_count(src)
-            rel = f"v-{uuid.uuid4().hex}"
-            out = os.path.join(self.root, rel)
-            _link_tree(src, out)
-            # inherited _changes describes the predecessor's commit
-            shutil.rmtree(os.path.join(out, "_changes"), ignore_errors=True)
-            # mask BEFORE append (the DocumentStore ordering contract),
-            # then right-sized partition-aware append, then drop the
-            # now-stale skip sidecars (lossy otherwise)
-            try:
-                n_total = write_deletion_vectors(
-                    self.spark, out, legacy_dir=src,
-                    positions=matched.select(_POS_FP, _POS_RI),
-                )
-                n = n_total - prior_total
-                if n == 0:  # positions are distinct: equal == no match
-                    shutil.rmtree(out)
-                    return f"txn://{base_v}", 0
-                updated = matched.select(*data_cols).withColumns(
-                    {
-                        c: F.expr(e).cast(types[c])
-                        for c, e in set_exprs.items()
-                    }
-                )
-                n_files = max(1, -(-n // 1_000_000))
-                writer = updated.coalesce(n_files).write.mode("append")
-                pcols = _hive_partition_cols(src)
-                if pcols:
-                    writer = writer.partitionBy(*pcols)
-                writes = [lambda: writer.parquet(out)]
-                if cdf:
-                    cols = [
-                        c for c in data_cols if c != self.key_col
-                    ]
-                    changes = matched.select(
-                        F.col(self.key_col),
-                        F.lit("update").alias("change_type"),
-                        *[
-                            (
-                                F.expr(set_exprs[c]).cast(types[c])
-                                if c in set_exprs
-                                else F.col(c)
-                            ).alias(c)
-                            for c in cols
-                        ],
-                        *[F.col(c).alias(f"old_{c}") for c in cols],
-                    )
-                    writes.append(
-                        lambda: changes.write.mode(
-                            "errorifexists"
-                        ).parquet(os.path.join(out, "_changes"))
-                    )
-                # both writes project the cached matched sliver into
-                # disjoint directories — overlap them (guide §2.6)
-                _run_concurrently(*writes)
-            finally:
-                matched.unpersist()
-            for f in os.listdir(out):
-                if f == "_zone_manifest.json" or f.startswith("_bloom_"):
-                    os.remove(os.path.join(out, f))
-            record = {
-                "version_dir": rel,
-                "writer": self.writer_id,
-                "ts_ms": int(time.time() * 1000),
-                "txns": dict(base_rec.get("txns", {})),
-                # replayable like delete_where: set_exprs evaluate
-                # per-row against the pre-update image, so applying
-                # them to logically-equal content yields logically-
-                # equal results (_maintenance_publish reconciliation)
-                "op": {
-                    "kind": "update_where",
-                    "predicate": predicate,
-                    "set_exprs": dict(set_exprs),
-                },
-            }
-            if txn is not None:
-                record["txns"][txn[0]] = str(txn[1])
-            tmp = os.path.join(
-                self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = self._record_path(base_v + 1)
-            try:
-                os.link(tmp, target)  # atomic put-if-absent
-                return self._published(base_v + 1), n
-            except FileExistsError:
-                if os.stat(tmp).st_nlink == 2:  # lost-reply win
-                    return self._published(base_v + 1), n
-                shutil.rmtree(out, ignore_errors=True)
-                continue
-            finally:
-                os.unlink(tmp)
-        raise ConcurrentCommitError(
-            f"store {self.root}: update_where CAS failed after "
-            f"{max_retries + 1} attempts (writer {self.writer_id})"
+        n_updated)``; an empty match publishes nothing. The candidate
+        is built by the shared :func:`~.store.update_where_build`."""
+        return self._dml_publish(
+            "update",
+            # replayable like delete_where: set_exprs evaluate per-row
+            # against the pre-update image, so applying them to
+            # logically-equal content yields logically-equal results
+            # (_maintenance_publish reconciliation)
+            {
+                "kind": "update_where",
+                "predicate": predicate,
+                "set_exprs": dict(set_exprs),
+            },
+            lambda base, out: update_where_build(
+                self.spark, base, out, predicate, set_exprs, self.key_col,
+                cdf,
+            ),
+            txn,
+            max_retries,
         )
 
     def merge_into(
@@ -958,141 +716,67 @@ class TransactionalParquetBackend:
         deterministic seam race tests and the driver entry inject
         rivals through — same contract as
         :meth:`_maintenance_publish`)."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
 
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-            _MIXED_SCHEMA_MARKER,
-            _hive_partition_cols,
-            _link_tree,
-            _masked_scan_with_positions,
-            _run_concurrently,
-            derive_merge_clauses,
-            merge_changes_frame,
-            write_deletion_vectors,
-        )
-
-        for _attempt in range(max_retries + 1):
-            base_v, base_rec = self.latest()
-            if base_rec is None:
-                raise ValueError(
-                    f"store {self.root} is empty; nothing to merge"
-                )
-            src = os.path.join(self.root, base_rec["version_dir"])
+        def build(base: str, out: str) -> tuple[bool, dict]:
             # ONE-PASS (round 11): positions ride the clause-tagged
-            # join; the DV mask projects off the same cached frame —
-            # no second scan + key semi-join of the version
-            snap = _masked_scan_with_positions(self.spark, src)
+            # join; the DV mask projects off the same cached frame
             plan = derive_merge_clauses(
-                snap, source, self.key_col,
-                when_matched_update, update_condition,
+                _masked_scan_with_positions(self.spark, base), source,
+                self.key_col, when_matched_update, update_condition,
                 when_matched_delete, when_not_matched_insert,
                 when_not_matched_by_source_delete, schema_evolution,
                 reject_null_source_key,
             )
-            counts = plan["counts"]
-            if not any(counts.values()):
-                plan["materialized"].unpersist()
-                return f"txn://{base_v}", counts
+            return merge_into_build(
+                self.spark, base, out, plan, self.key_col,
+                when_matched_update, cdf,
+            )
+
+        return self._dml_publish(
+            "merge", {"kind": "merge_into"}, build, txn, max_retries,
+            test_hook,
+        )
+
+    def _dml_publish(
+        self,
+        what: str,
+        op: dict,
+        build,
+        txn: Optional[tuple[str, str]],
+        max_retries: int,
+        test_hook=None,
+    ) -> tuple[str, object]:
+        """The DML CAS loop: build a candidate from the head with
+        ``build(base_dir, out_dir) -> (publish, result)`` (a
+        :mod:`.store` builder), publish it, and on a lost race DISCARD
+        the candidate and re-derive against the winner — its positional
+        mask and derived images were computed from a stale snapshot by
+        construction. This is the no-lost-update contract of
+        :meth:`commit_with` for DML; each retry costs the changed
+        sliver's scan plus O(filecount) links, never a table rewrite.
+        Returns ``(txn://N handle, result)``; a build with nothing to
+        publish returns the current handle. ``test_hook`` fires once
+        between the first candidate build and its publish attempt."""
+        for _attempt in range(max_retries + 1):
+            base_v, base_rec = self.latest()
+            if base_rec is None:
+                raise ValueError(
+                    f"store {self.root} is empty; nothing to {what}"
+                )
             rel = f"v-{uuid.uuid4().hex}"
             out = os.path.join(self.root, rel)
-            _link_tree(src, out)
-            # inherited _changes describes the predecessor's commit
-            shutil.rmtree(os.path.join(out, "_changes"), ignore_errors=True)
-            try:
-                # mask/append/CDF are projections of the same cached
-                # clause-tagged join into disjoint outputs (the
-                # positions form never scans the commit directory, so
-                # mask-before-append holds by construction) — overlap
-                # the write jobs (round 12, guide §2.6; the
-                # DocumentStore.merge_into shape)
-                writes = []
-                if counts["updated"] or counts["deleted"] \
-                        or counts["deleted_by_source"]:
-                    writes.append(
-                        lambda: write_deletion_vectors(
-                            self.spark, out, legacy_dir=src,
-                            positions=plan["touched_positions"],
-                        )
-                    )
-                n_app = counts["updated"] + counts["inserted"]
-                if n_app:
-                    n_files = max(1, -(-n_app // 1_000_000))
-                    writer = (
-                        plan["appended"].coalesce(n_files)
-                        .write.mode("append")
-                    )
-                    pcols = _hive_partition_cols(src)
-                    if pcols:
-                        writer = writer.partitionBy(*pcols)
-                    writes.append(lambda: writer.parquet(out))
-                if cdf:
-                    ch = merge_changes_frame(
-                        plan, self.key_col, plan["columns"],
-                        when_matched_update,
-                    )
-                    writes.append(
-                        lambda: ch.write.mode("errorifexists").parquet(
-                            os.path.join(out, "_changes")
-                        )
-                    )
-                _run_concurrently(*writes)
-                if plan["evolved"]:
-                    # linked files keep the narrow schema; readers
-                    # footer-merge from now on (_MIXED_SCHEMA_MARKER)
-                    with open(
-                        os.path.join(out, _MIXED_SCHEMA_MARKER), "w"
-                    ) as fh:
-                        fh.write("")
-            except Exception:
-                shutil.rmtree(out, ignore_errors=True)
-                raise
-            finally:
-                # the cached clause-tagged join fed its last consumer
-                # (the writes above); release before the CAS attempt —
-                # a rival-forced retry re-derives and re-persists
-                plan["materialized"].unpersist()
-            for f in os.listdir(out):
-                if f == "_zone_manifest.json" or f.startswith("_bloom_"):
-                    os.remove(os.path.join(out, f))
+            publish, result = build(self._version_path(base_rec), out)
+            if not publish:
+                return f"txn://{base_v}", result
             if test_hook is not None:
                 test_hook()
                 test_hook = None  # fire exactly once
-            record = {
-                "version_dir": rel,
-                "writer": self.writer_id,
-                "ts_ms": int(time.time() * 1000),
-                "txns": dict(base_rec.get("txns", {})),
-                "op": {"kind": "merge_into"},
-            }
-            if txn is not None:
-                record["txns"][txn[0]] = str(txn[1])
-            tmp = os.path.join(
-                self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = self._record_path(base_v + 1)
-            try:
-                os.link(tmp, target)  # atomic put-if-absent
-                return self._published(base_v + 1), counts
-            except FileExistsError:
-                if os.stat(tmp).st_nlink == 2:  # lost-reply win
-                    return self._published(base_v + 1), counts
-                # a rival owns base_v+1: mask and clause outcomes are
-                # stale by construction — discard and re-derive
-                shutil.rmtree(out, ignore_errors=True)
-                continue
-            finally:
-                os.unlink(tmp)
+            handle = self._try_publish(base_v, base_rec, rel, op, txn)
+            if handle is not None:
+                return handle, result
+            shutil.rmtree(out, ignore_errors=True)
         raise ConcurrentCommitError(
-            f"store {self.root}: merge_into CAS failed after "
+            f"store {self.root}: {op['kind']} CAS failed after "
             f"{max_retries + 1} attempts (writer {self.writer_id})"
         )
 
@@ -1111,26 +795,14 @@ class TransactionalParquetBackend:
         WINNER's snapshot and re-derive. Every retry recomputes from
         the latest committed state, so no concurrent writer's rows are
         ever lost — the property the two-writer seam test pins."""
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-        )
-
         last: Optional[ConcurrentCommitError] = None
         for _attempt in range(max_retries + 1):
             base_v, base_rec = self.latest()
-            if base_rec is None:
-                cur = None
-            else:
-                import os
-
-                from far_finer_airtable_firestore_sync_spark.sources.store import (
-                    read_with_deletion_vectors,
-                )
-
-                vd = os.path.join(self.root, base_rec["version_dir"])
-                # DV-masked: a post-state derived from a
-                # delete_where-published base must not resurrect rows
-                cur = read_with_deletion_vectors(self.spark, vd)
+            # DV-masked: a post-state derived from a
+            # delete_where-published base must not resurrect rows
+            cur = None if base_rec is None else read_with_deletion_vectors(
+                self.spark, self._version_path(base_rec)
+            )
             try:
                 return self.commit(
                     build_post_state(cur),
@@ -1151,8 +823,6 @@ class TransactionalParquetBackend:
     # -- maintenance on the lock-free log (r9 VERDICT #1) -------------------
 
     def _read_record(self, version: int) -> dict:
-        import json
-
         with open(self._record_path(version)) as fh:
             return json.load(fh)
 
@@ -1167,16 +837,6 @@ class TransactionalParquetBackend:
         the same predicate/set_exprs here yields the same logical
         result. The candidate is private until published, so in-place
         mutation races nothing."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            _hive_partition_cols,
-            read_with_deletion_vectors,
-            write_deletion_vectors,
-        )
-
         if op["kind"] == "delete_where":
             write_deletion_vectors(self.spark, candidate_dir, op["predicate"])
             return
@@ -1198,17 +858,8 @@ class TransactionalParquetBackend:
         n = updated.count()
         write_deletion_vectors(self.spark, candidate_dir, op["predicate"])
         if n:
-            n_files = max(1, -(-n // 1_000_000))
-            writer = updated.coalesce(n_files).write.mode("append")
-            pcols = _hive_partition_cols(candidate_dir)
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(candidate_dir)
-        # appended files are invisible to copied skip sidecars —
-        # a stale manifest would be LOSSY; drop so they rebuild lazily
-        for f in os.listdir(candidate_dir):
-            if f == "_zone_manifest.json" or f.startswith("_bloom_"):
-                os.remove(os.path.join(candidate_dir, f))
+            _append_images(updated, n, candidate_dir, candidate_dir)()
+        _drop_skip_manifests(candidate_dir)
 
     def _maintenance_publish(
         self,
@@ -1246,15 +897,6 @@ class TransactionalParquetBackend:
         ``test_hook`` fires once between the candidate write and the
         first publish attempt — the deterministic seam race tests
         inject rivals through."""
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-        )
-
         budget = max_retries + 1
         while budget > 0:
             base_v, base_rec = self.latest()
@@ -1262,11 +904,10 @@ class TransactionalParquetBackend:
                 raise ValueError(
                     f"store {self.root} is empty; nothing to {op_kind}"
                 )
-            src = os.path.join(self.root, base_rec["version_dir"])
             rel = f"v-{uuid.uuid4().hex}"
             out = os.path.join(self.root, rel)
             try:
-                build_candidate(src, out)
+                build_candidate(self._version_path(base_rec), out)
             except Exception:
                 shutil.rmtree(out, ignore_errors=True)
                 raise
@@ -1274,57 +915,31 @@ class TransactionalParquetBackend:
                 test_hook()
                 test_hook = None  # fire exactly once
             cur_v, cur_rec = base_v, base_rec
-            discarded = False
             while budget > 0:
                 budget -= 1
-                record = {
-                    "version_dir": rel,
-                    "writer": self.writer_id,
-                    "ts_ms": int(time.time() * 1000),
-                    "txns": dict(cur_rec.get("txns", {})),
-                    "op": {"kind": op_kind},
-                }
-                tmp = os.path.join(
-                    self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
+                handle = self._try_publish(
+                    cur_v, cur_rec, rel, {"kind": op_kind}, None
                 )
-                with open(tmp, "w") as fh:
-                    import json
-
-                    json.dump(record, fh)
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                target = self._record_path(cur_v + 1)
-                try:
-                    os.link(tmp, target)  # atomic put-if-absent
-                    return self._published(cur_v + 1)
-                except FileExistsError:
-                    # lost-reply disambiguation as in commit (NFS
-                    # retransmit can EEXIST a link this writer WON)
-                    if os.stat(tmp).st_nlink == 2:
-                        return self._published(cur_v + 1)
-                    head_v, head_rec = self.latest()
-                    rivals = [
-                        self._read_record(v)
-                        for v in range(cur_v + 1, head_v + 1)
-                    ]
-                    if all(
-                        (r.get("op") or {}).get("kind")
-                        in ("delete_where", "update_where")
-                        for r in rivals
-                    ):
-                        for r in rivals:
-                            self._replay_dml(out, r["op"])
-                        cur_v, cur_rec = head_v, head_rec
-                        continue
+                if handle is not None:
+                    return handle
+                head_v, head_rec = self.latest()
+                rivals = [
+                    self._read_record(v)
+                    for v in range(cur_v + 1, head_v + 1)
+                ]
+                if not all(
+                    (r.get("op") or {}).get("kind")
+                    in ("delete_where", "update_where")
+                    for r in rivals
+                ):
                     # a snapshot/maintenance rival replaced the whole
                     # state: the candidate is stale in full — rebuild
-                    shutil.rmtree(out, ignore_errors=True)
-                    discarded = True
                     break
-                finally:
-                    os.unlink(tmp)
-            if not discarded:  # budget exhausted mid-replay loop
-                shutil.rmtree(out, ignore_errors=True)
+                for r in rivals:
+                    self._replay_dml(out, r["op"])
+                cur_v, cur_rec = head_v, head_rec
+            # rebuild from the new head, or the budget ran out
+            shutil.rmtree(out, ignore_errors=True)
         raise ConcurrentCommitError(
             f"store {self.root}: {op_kind} CAS failed after "
             f"{max_retries + 1} attempts (writer {self.writer_id})"
@@ -1347,10 +962,6 @@ class TransactionalParquetBackend:
         candidate, rival snapshot commits force a rebuild. Sizing is
         footer-metadata only (``_version_live_rows`` — no count
         pre-pass; r9 VERDICT #6)."""
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            _version_live_rows,
-            read_with_deletion_vectors,
-        )
 
         def build(src: str, out: str) -> None:
             df = read_with_deletion_vectors(self.spark, src)
@@ -1387,37 +998,23 @@ class TransactionalParquetBackend:
         returns the current handle; the (unlocked) pre-check can race
         a commit, in which case the builder links the new head
         verbatim — a metadata-only no-op commit, never a wrong one."""
-        import os
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            _binpack_classify,
-            _link_tree,
-            binpack_build,
-        )
-
         head_v, head_rec = self.latest()
         if head_rec is None:
             raise ValueError(
                 f"store {self.root} is empty; nothing to optimize"
             )
-        src0 = os.path.join(self.root, head_rec["version_dir"])
         small, _big = _binpack_classify(
-            src0, min_rows_per_file, partition_values
+            self._version_path(head_rec), min_rows_per_file, partition_values
         )
         if not small:
             return f"txn://{head_v}"
 
         def build(src: str, out: str) -> None:
-            import shutil
-
             probe, _ = _binpack_classify(
                 src, min_rows_per_file, partition_values
             )
             if not probe:  # head moved and is already packed
-                _link_tree(src, out)
-                shutil.rmtree(
-                    os.path.join(out, "_changes"), ignore_errors=True
-                )
+                _link_candidate(src, out)
                 return
             binpack_build(
                 self.spark, src, out, min_rows_per_file,
@@ -1446,11 +1043,6 @@ class TransactionalParquetBackend:
         positional mask — zones over-keep masked rows and stay
         loss-free; a rival update drops the manifest (appended images
         are outside it) and pruning rebuilds lazily."""
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            read_with_deletion_vectors,
-            write_zone_manifest,
-            zorder_cluster,
-        )
 
         def build(src: str, out: str) -> None:
             df = read_with_deletion_vectors(self.spark, src)
@@ -1494,89 +1086,37 @@ class TransactionalParquetBackend:
         rebuilds (``_maintenance_publish`` whitelists only predicate
         DML), and a restore losing its own race re-derives. A
         retention-vacuumed target fails loudly up front."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-            _link_tree,
-            diff_frames,
-            read_with_deletion_vectors,
-        )
-
         target_rec = self._read_record(version)  # raises on unknown
-        target_rel = target_rec["version_dir"]
-        target_dir = os.path.join(self.root, target_rel)
+        target_dir = os.path.join(self.root, target_rec["version_dir"])
         if not os.path.isdir(target_dir):
             raise ValueError(
                 f"store {self.root}: version {version}'s data was "
                 "removed by retention vacuum; cannot restore to it"
             )
+        # snapshot-class: rivals of a maintenance rewrite must rebuild,
+        # never replay (the merge_into rule)
+        op = {"kind": "restore", "to": version}
+        if cdf:
+            # the feed is the diff head -> target, re-derived on each
+            # attempt against the base the publish actually lands on
+            return self._dml_publish(
+                "restore", op,
+                lambda head, out: (True, restore_build(
+                    self.spark, target_dir, out, self.key_col, head
+                )),
+                None, max_retries, test_hook,
+            )[0]
         for _attempt in range(max_retries + 1):
             base_v, base_rec = self.latest()
-            assert base_rec is not None  # version N exists => log does
-            out = None
-            if cdf:
-                rel = f"v-{uuid.uuid4().hex}"
-                out = os.path.join(self.root, rel)
-                _link_tree(target_dir, out)
-                # inherited _changes describes the TARGET's commit
-                shutil.rmtree(
-                    os.path.join(out, "_changes"), ignore_errors=True
-                )
-                try:
-                    head_dir = os.path.join(
-                        self.root, base_rec["version_dir"]
-                    )
-                    diff_frames(
-                        read_with_deletion_vectors(self.spark, head_dir),
-                        read_with_deletion_vectors(self.spark, target_dir),
-                        self.key_col,
-                        include_old=True,
-                    ).write.mode("errorifexists").parquet(
-                        os.path.join(out, "_changes")
-                    )
-                except Exception:
-                    shutil.rmtree(out, ignore_errors=True)
-                    raise
-            else:
-                rel = target_rel  # point at the old dir: O(1) restore
             if test_hook is not None:
                 test_hook()
                 test_hook = None  # fire exactly once
-            record = {
-                "version_dir": rel,
-                "writer": self.writer_id,
-                "ts_ms": int(time.time() * 1000),
-                "txns": dict(base_rec.get("txns", {})),
-                # snapshot-class: rivals of a maintenance rewrite
-                # must rebuild, never replay (the merge_into rule)
-                "op": {"kind": "restore", "to": version},
-            }
-            tmp = os.path.join(
-                self._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
+            # point at the target's dir: O(1) restore, nothing to discard
+            handle = self._try_publish(
+                base_v, base_rec, target_rec["version_dir"], op, None
             )
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = self._record_path(base_v + 1)
-            try:
-                os.link(tmp, target)  # atomic put-if-absent
-                return self._published(base_v + 1)
-            except FileExistsError:
-                if os.stat(tmp).st_nlink == 2:  # lost-reply win
-                    return self._published(base_v + 1)
-                # a rival owns base_v+1: the cdf diff (if any) named
-                # the wrong predecessor — discard and re-derive
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                continue
-            finally:
-                os.unlink(tmp)
+            if handle is not None:
+                return handle
         raise ConcurrentCommitError(
             f"store {self.root}: restore CAS failed after "
             f"{max_retries + 1} attempts (writer {self.writer_id})"
@@ -1596,69 +1136,34 @@ class TransactionalParquetBackend:
         (``txns: {}``) and its record names the source root + version
         for lineage. Vacuuming the source keeps the clone alive:
         hard links hold inodes until every referent is gone."""
-        import json
-        import os
-        import shutil
-        import time
-        import uuid
-
-        from far_finer_airtable_firestore_sync_spark.sources.store import (
-            ConcurrentCommitError,
-            _link_tree,
-        )
-
         head_v, rec = self.latest()
         if rec is None:
             raise ValueError(
                 f"store {self.root} has no committed version to clone"
             )
-        src_dir = os.path.join(self.root, rec["version_dir"])
+        # the clone's first record names this writer, as every record
+        # names the writer that created it
         dest = TransactionalParquetBackend(
-            self.spark, dest_root, self.key_col
+            self.spark, dest_root, self.key_col, self.writer_id
         )
         rel = f"v-{uuid.uuid4().hex}"
         out = os.path.join(dest_root, rel)
-        _link_tree(src_dir, out)
         # the inherited _changes describes the SOURCE's last commit;
         # the clone's version 1 is logically a fresh full state
-        shutil.rmtree(os.path.join(out, "_changes"), ignore_errors=True)
-        record = {
-            "version_dir": rel,
-            "writer": self.writer_id,
-            "ts_ms": int(time.time() * 1000),
-            "txns": {},
-            "op": {
-                "kind": "clone",
-                "source": self.root,
-                "source_version": head_v,
-            },
-        }
-        tmp = os.path.join(
-            dest._log_dir(), f"_tmp-{uuid.uuid4().hex}.json"
-        )
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, dest._record_path(1))
-        except FileExistsError:
-            if os.stat(tmp).st_nlink != 2:  # genuine rival clone/commit
-                shutil.rmtree(out, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"clone target {dest_root} already has a version 1"
-                )
-        finally:
-            os.unlink(tmp)
+        _link_candidate(self._version_path(rec), out)
+        op = {"kind": "clone", "source": self.root, "source_version": head_v}
+        if dest._try_publish(0, None, rel, op, None) is None:
+            # a genuine rival clone/commit owns version 1
+            shutil.rmtree(out, ignore_errors=True)
+            raise ConcurrentCommitError(
+                f"clone target {dest_root} already has a version 1"
+            )
         return dest
 
     def history(self) -> DataFrame:
         """Commit lineage from the log: one row per version (version
         number, writer id, commit ts, data dir) — the DESCRIBE HISTORY
         shape, read from O(versions) small JSON records."""
-        import json
-        import os
-
         rows = []
         for n in sorted(os.listdir(self._log_dir())):
             if not (n.endswith(".json") and n[: -5].isdigit()):

@@ -19,6 +19,7 @@ mutations — the anti-pattern SURVEY.md §4 flags in the reference.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -94,6 +95,18 @@ class ConcurrentCommitError(RuntimeError):
     """The store's pointer moved between read() and commit()."""
 
 
+def _write_json_durable(tmp_path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``tmp_path`` and fsync it — the durable
+    first half of every metadata publish (pointer flip, CAS log
+    record, ``_last_checkpoint`` hint): the caller's rename or link
+    that follows must never expose a file whose bytes are still only
+    in the page cache."""
+    with open(tmp_path, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+
+
 def _run_concurrently(*thunks) -> None:
     """Run independent Spark write actions from a small thread pool
     (guide §2.6 — actions are only sequential because the driver calls
@@ -103,9 +116,11 @@ def _run_concurrently(*thunks) -> None:
     scheduling + planning latency per commit. Callers only pass
     order-independent writes (the deletion-vector no-op check and the
     mask-before-append contract are satisfied before these run: the
-    one-pass positions forms never scan the commit directory). The
-    first failure propagates after all thunks finish — the caller's
-    directory-cleanup guard then sees no in-flight writer."""
+    one-pass positions forms never scan the commit directory). Every
+    thunk finishes before anything propagates — the caller's
+    directory-cleanup guard then sees no in-flight writer — and the
+    first failure is raised with every other failure attached as a
+    note, so no diagnostic is lost."""
     if not thunks:
         return
     if len(thunks) == 1:
@@ -115,8 +130,13 @@ def _run_concurrently(*thunks) -> None:
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
-    for f in futures:
-        f.result()
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(
+                f"concurrent write also failed: {type(other).__name__}: {other}"
+            )
+        raise errors[0]
 
 
 class DocumentStore:
@@ -249,71 +269,46 @@ class DocumentStore:
         records carry op kinds and the feed SKIPS maintenance
         versions outright.
         """
-        prev = self.current_version_dir()
-        if expected_version is not None and prev != expected_version:
-            raise ConcurrentCommitError(
-                f"store {self.root}: pointer moved past {expected_version!r} "
-                "since read(); refusing to clobber the concurrent commit"
-            )
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
+        prev = self._base_for(expected_version)
+        rel, out = self._new_version()
         writer = post_state.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
-        if cdf_empty:
-            try:
-                like = (
-                    _version_reader(self.spark, out)
-                    .parquet(out)
-                    .filter(F.lit(False))
-                )
-                # coalesce(1): guarantee one schema-carrying file (an
-                # empty multi-partition write can produce no files,
-                # and the stream source anchors its schema on the
-                # newest sidecar's parquet footer)
-                diff_frames(
-                    like, like, self.key_col, include_old=True
-                ).coalesce(1).write.mode("errorifexists").parquet(
-                    os.path.join(out, _CHANGES_DIR)
-                )
-            except Exception:
-                shutil.rmtree(out, ignore_errors=True)
-                raise
-        if cdf:
-            try:
-                new_df = self.spark.read.parquet(out)
-                if prev is None:
-                    cols = [
-                        c for c in new_df.columns if c != self.key_col
-                    ]
-                    types = dict(new_df.dtypes)
-                    changes = new_df.select(
-                        F.col(self.key_col),
-                        F.lit("insert").alias("change_type"),
-                        *cols,
-                        *[
-                            F.lit(None).cast(types[c]).alias(f"old_{c}")
-                            for c in cols
-                        ],
-                    )
-                else:
-                    changes = diff_frames(
-                        self.read_version(prev),
-                        new_df,
-                        self.key_col,
-                        include_old=True,
-                    )
-                changes.write.mode("errorifexists").parquet(
-                    os.path.join(out, _CHANGES_DIR)
-                )
-            except Exception:
-                # no phantom versions on a failed change-sidecar write
-                # (same guard as the DML paths)
-                shutil.rmtree(out, ignore_errors=True)
-                raise
+        try:
+            if cdf_empty:
+                _write_empty_changes(self.spark, out, self.key_col)
+            if cdf:
+                _write_commit_changes(self.spark, out, prev, self.key_col)
+        except Exception:
+            # no phantom versions on a failed change-sidecar write
+            # (same guard as the DML paths)
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         self._flip_pointer(rel, out, expected_version, tag, txn)
         return out
+
+    def _base_for(
+        self, expected_version: Optional[str], op: Optional[str] = None
+    ) -> Optional[str]:
+        """The current version a commit derives from, after the
+        pre-write stale-base check: a base already stale at call time
+        must not pay a full write just to be refused. DML (``op``
+        names it) also refuses an empty store."""
+        cur = self.current_version_dir()
+        if op is not None and cur is None:
+            raise ValueError(f"store {self.root} is empty; nothing to {op}")
+        if expected_version is not None and cur != expected_version:
+            raise ConcurrentCommitError(
+                f"store {self.root}: pointer moved past {expected_version!r} "
+                "since read(); refusing to clobber the concurrent commit"
+            )
+        return cur
+
+    def _new_version(self) -> tuple[str, str]:
+        """(name, path) of a fresh, not yet existing version directory."""
+        rel = _new_version_dir_name(self._next_commit_ms())
+        return rel, os.path.join(self.root, rel)
 
     def _next_commit_ms(self) -> int:
         """Strictly-increasing commit ms per store: two commits inside
@@ -339,7 +334,9 @@ class DocumentStore:
     ) -> None:
         """Atomically point the store at the (already written) version
         directory ``out`` — the flip half of the commit protocol,
-        shared by :meth:`commit` and :meth:`delete_where`.
+        shared by every commit method. The pointer is written through
+        :func:`_write_json_durable` and the store directory is fsync'd
+        after the replace, so a flip that returned survives a crash.
 
         The txn carry-forward is a read-modify-write of the pointer:
         serialize it under an exclusive flock so a concurrent commit
@@ -379,9 +376,15 @@ class DocumentStore:
                 pointer["txns"][app_id] = version
             if tag is not None:
                 pointer["tag"] = tag
-            with open(tmp, "w") as fh:
-                json.dump(pointer, fh)
+            _write_json_durable(tmp, pointer)
             os.replace(tmp, self._pointer_path())
+            # the replace is durable only once the directory holding
+            # the new entry is fsync'd too
+            dfd = os.open(self.root, os.O_RDONLY)
+            try:
+                os.fsync(dfd)
+            finally:
+                os.close(dfd)
 
     def read_as_of(self, epoch_ms: int) -> Optional[DataFrame]:
         """Time travel by TIMESTAMP (the Delta `timestampAsOf` shape):
@@ -452,78 +455,13 @@ class DocumentStore:
         maintenance deletes must not churn version history or shift
         the vacuum retention window (review finding; mirrors
         :meth:`update_where`'s no-op contract)."""
-        cur = self.current_version_dir()
-        if cur is None:
-            raise ValueError(f"store {self.root} is empty; nothing to delete")
-        if expected_version is not None and cur != expected_version:
-            raise ConcurrentCommitError(
-                f"store {self.root}: pointer moved past {expected_version!r} "
-                "since read(); refusing to clobber the concurrent commit"
-            )
-        prior_total = _dv_position_count(cur)
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
-        # Hard-link the data files + copy sidecars (including any
-        # existing DV mask, which write_deletion_vectors merges with;
-        # legacy_dir re-roots an inherited absolute-URI-format mask).
-        # A failing predicate (typo'd column, failed job) must not
-        # leave the already-linked directory behind (r9 ADVICE,
-        # medium): list_versions() is name-pattern-based, so a phantom
-        # would become visible to read_as_of / describe_history /
-        # vacuum accounting / change_feed's default bounds while
-        # serving never-committed pre-delete state.
-        _link_tree(cur, out)
-        # an inherited _changes sidecar describes the PREDECESSOR's
-        # commit — each version's change feed is its own commit only
-        shutil.rmtree(os.path.join(out, _CHANGES_DIR), ignore_errors=True)
-        # ONE-PASS when cdf (round 11, the update_where shape): the
-        # masked matched sliver is computed once and both the
-        # positions and the CDF pre-images project from it — the
-        # previous shape paid a second full predicate scan for the
-        # change rows. Without cdf the positions are the only
-        # consumer, so nothing is cached.
-        matched = None
-        try:
-            if cdf:
-                matched = _masked_scan_with_positions(
-                    self.spark, cur
-                ).filter(predicate).persist(StorageLevel.MEMORY_AND_DISK)
-                n_total = write_deletion_vectors(
-                    self.spark, out, legacy_dir=cur,
-                    positions=matched.select(_POS_FP, _POS_RI),
-                )
-            else:
-                n_total = write_deletion_vectors(
-                    self.spark, out, predicate, legacy_dir=cur
-                )
-            if cdf and n_total != prior_total:
-                # newly masked rows == matching rows of the MASKED
-                # prior snapshot (already-masked rows can't re-delete);
-                # the change sidecar needs NO diff join for DML —
-                # predicate DML knows its own delta
-                data_cols = [
-                    c for c in matched.columns
-                    if c not in (_POS_FP, _POS_RI)
-                ]
-                cols = [c for c in data_cols if c != self.key_col]
-                types = dict(matched.dtypes)
-                matched.select(
-                    F.col(self.key_col),
-                    F.lit("delete").alias("change_type"),
-                    *[F.lit(None).cast(types[c]).alias(c) for c in cols],
-                    *[F.col(c).alias(f"old_{c}") for c in cols],
-                ).write.mode("errorifexists").parquet(
-                    os.path.join(out, _CHANGES_DIR)
-                )
-        except Exception:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        finally:
-            if matched is not None:
-                matched.unpersist()
-        if n_total == prior_total:  # positions are distinct: equal
-            shutil.rmtree(out)      # count == no new masked rows
-            return cur, prior_total
+        cur = self._base_for(expected_version, "delete")
+        rel, out = self._new_version()
+        changed, n_total = delete_where_build(
+            self.spark, cur, out, predicate, self.key_col, cdf
+        )
+        if not changed:
+            return cur, n_total
         self._flip_pointer(rel, out, expected_version, None, None)
         return out, n_total
 
@@ -793,23 +731,10 @@ class DocumentStore:
                 f"{version_dir!r} is not a committed version of {self.root}"
             )
         cur = self.current_version_dir()
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
-        _link_tree(version_dir, out)
-        shutil.rmtree(os.path.join(out, _CHANGES_DIR), ignore_errors=True)
-        if cdf:
-            try:
-                diff_frames(
-                    self.read_version(cur),
-                    self.read_version(version_dir),
-                    self.key_col,
-                    include_old=True,
-                ).write.mode("errorifexists").parquet(
-                    os.path.join(out, _CHANGES_DIR)
-                )
-            except Exception:
-                shutil.rmtree(out, ignore_errors=True)
-                raise
+        rel, out = self._new_version()
+        restore_build(
+            self.spark, version_dir, out, self.key_col, cur if cdf else None
+        )
         self._flip_pointer(rel, out, None, None, None)
         return out
 
@@ -980,8 +905,7 @@ class DocumentStore:
                 "rows_rewritten": 0,
                 "n_files_written": 0,
             }
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
+        rel, out = self._new_version()
         try:
             stats = binpack_build(
                 self.spark, vd, out, min_rows_per_file,
@@ -990,16 +914,7 @@ class DocumentStore:
             if cdf:
                 # row-neutral maintenance: zero-row sidecar keeps a
                 # live change feed hole-free (see commit(cdf_empty))
-                like = (
-                    _version_reader(self.spark, out)
-                    .parquet(out)
-                    .filter(F.lit(False))
-                )
-                diff_frames(
-                    like, like, self.key_col, include_old=True
-                ).coalesce(1).write.mode("errorifexists").parquet(
-                    os.path.join(out, _CHANGES_DIR)
-                )
+                _write_empty_changes(self.spark, out, self.key_col)
         except Exception:
             # no phantom versions (the delete_where guard)
             shutil.rmtree(out, ignore_errors=True)
@@ -1050,107 +965,13 @@ class DocumentStore:
         images and the CDF rows are all projections of it — the
         previous shape paid three predicate scans of the full version
         per update (positions, images, change rows)."""
-        cur = self.current_version_dir()
-        if cur is None:
-            raise ValueError(f"store {self.root} is empty; nothing to update")
-        if expected_version is not None and cur != expected_version:
-            raise ConcurrentCommitError(
-                f"store {self.root}: pointer moved past {expected_version!r} "
-                "since read(); refusing to clobber the concurrent commit"
-            )
-        snap_pos = _masked_scan_with_positions(self.spark, cur)
-        data_cols = [
-            c for c in snap_pos.columns if c not in (_POS_FP, _POS_RI)
-        ]
-        unknown = [c for c in set_exprs if c not in data_cols]
-        if unknown:
-            raise ValueError(f"update_where: unknown columns {unknown}")
-        types = dict(snap_pos.dtypes)
-        # ONE matched-sliver pass: positions, images and CDF rows are
-        # projections of this cached frame (sliver-sized; the DV write
-        # below is the action that populates the cache)
-        matched = snap_pos.filter(predicate).persist(
-            StorageLevel.MEMORY_AND_DISK
+        cur = self._base_for(expected_version, "update")
+        rel, out = self._new_version()
+        changed, n = update_where_build(
+            self.spark, cur, out, predicate, set_exprs, self.key_col, cdf
         )
-        # n_updated falls out of the mask write below (new distinct
-        # positions == predicate matches visible through the prior
-        # mask), so the former eager ``updated.count()`` pre-pass —
-        # one full predicate scan per update, purely for the no-op
-        # check — is gone (round 11; the delete_where shape). A no-op
-        # is detected after the mask write and rolls the linked
-        # directory back, exactly like delete_where.
-        prior_total = _dv_position_count(cur)
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
-        _link_tree(cur, out)
-        # inherited _changes describes the predecessor's commit, not
-        # this one — strip before writing this commit's own
-        shutil.rmtree(os.path.join(out, _CHANGES_DIR), ignore_errors=True)
-        # mask FIRST (see ordering constraint above), then append the
-        # updated images right-sized, then drop now-stale skip
-        # sidecars. Any failure past the link removes the phantom
-        # directory before it can leak into version history (r9
-        # ADVICE, medium — same guard as delete_where).
-        try:
-            n_total = write_deletion_vectors(
-                self.spark, out, legacy_dir=cur,
-                positions=matched.select(_POS_FP, _POS_RI),
-            )
-            n = n_total - prior_total
-            if n == 0:  # positions are distinct: equal count == no match
-                shutil.rmtree(out)
-                return cur, 0
-            updated = matched.select(*data_cols).withColumns(
-                {
-                    c: F.expr(e).cast(types[c])
-                    for c, e in set_exprs.items()
-                }
-            )
-            n_files = max(1, -(-n // 1_000_000))
-            # a hive-partitioned version appends PARTITION-AWARE (the
-            # layout is recovered from the directory names — an
-            # unpartitioned append into a partitioned tree would break
-            # partition discovery for every later read); updated rows
-            # whose partition value changed land in their new directory
-            pcols = _hive_partition_cols(cur)
-            writer = updated.coalesce(n_files).write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writes = [lambda: writer.parquet(out)]
-            if cdf:
-                # predicate DML knows its own delta: one row per
-                # updated key with the post image (set_exprs applied)
-                # and the pre image — no diff join needed
-                cols = [c for c in data_cols if c != self.key_col]
-                changes = matched.select(
-                    F.col(self.key_col),
-                    F.lit("update").alias("change_type"),
-                    *[
-                        (
-                            F.expr(set_exprs[c]).cast(types[c])
-                            if c in set_exprs
-                            else F.col(c)
-                        ).alias(c)
-                        for c in cols
-                    ],
-                    *[F.col(c).alias(f"old_{c}") for c in cols],
-                )
-                writes.append(
-                    lambda: changes.write.mode("errorifexists").parquet(
-                        os.path.join(out, _CHANGES_DIR)
-                    )
-                )
-            # both writes project the cached matched sliver into
-            # disjoint directories — overlap them (guide §2.6)
-            _run_concurrently(*writes)
-        except Exception:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        finally:
-            matched.unpersist()
-        for f in os.listdir(out):
-            if f == "_zone_manifest.json" or f.startswith("_bloom_"):
-                os.remove(os.path.join(out, f))
+        if not changed:
+            return cur, n
         self._flip_pointer(rel, out, expected_version, None, None)
         return out, n
 
@@ -1226,86 +1047,24 @@ class DocumentStore:
         Returns ``(version_dir, {"updated": u, "deleted": d,
         "inserted": i})``; a merge that touches nothing commits
         nothing and returns the current version."""
-        cur = self.current_version_dir()
-        if cur is None:
-            raise ValueError(f"store {self.root} is empty; nothing to merge")
-        if expected_version is not None and cur != expected_version:
-            raise ConcurrentCommitError(
-                f"store {self.root}: pointer moved past {expected_version!r} "
-                "since read(); refusing to clobber the concurrent commit"
-            )
-        key = self.key_col
+        cur = self._base_for(expected_version, "merge")
         # ONE-PASS (round 11): the masked snapshot carries its
         # physical positions through the clause-tagged join, so the
-        # deletion-vector mask below projects off the SAME cached
-        # frame — no second scan + key semi-join of the version
-        snap = _masked_scan_with_positions(self.spark, cur)
+        # deletion-vector mask projects off the SAME cached frame
         plan = derive_merge_clauses(
-            snap, source, key,
-            when_matched_update, update_condition,
+            _masked_scan_with_positions(self.spark, cur), source,
+            self.key_col, when_matched_update, update_condition,
             when_matched_delete, when_not_matched_insert,
             when_not_matched_by_source_delete, schema_evolution,
             reject_null_source_key,
         )
-        counts = plan["counts"]
-        if not any(counts.values()):
-            plan["materialized"].unpersist()
+        rel, out = self._new_version()
+        changed, counts = merge_into_build(
+            self.spark, cur, out, plan, self.key_col, when_matched_update,
+            cdf,
+        )
+        if not changed:
             return cur, counts
-        appended = plan["appended"]
-        rel = _new_version_dir_name(self._next_commit_ms())
-        out = os.path.join(self.root, rel)
-        _link_tree(cur, out)
-        shutil.rmtree(os.path.join(out, _CHANGES_DIR), ignore_errors=True)
-        try:
-            # The mask, the appended images and the CDF rows are all
-            # projections of the SAME cached clause-tagged join into
-            # DISJOINT outputs, and the one-pass positions form never
-            # scans the commit directory (so the mask-before-append
-            # ordering holds by construction) — overlap the three
-            # write jobs instead of paying their latencies
-            # back-to-back (round 12, guide §2.6).
-            writes = []
-            if counts["updated"] or counts["deleted"] \
-                    or counts["deleted_by_source"]:
-                writes.append(
-                    lambda: write_deletion_vectors(
-                        self.spark, out, legacy_dir=cur,
-                        positions=plan["touched_positions"],
-                    )
-                )
-            n_app = counts["updated"] + counts["inserted"]
-            if n_app:
-                n_files = max(1, -(-n_app // 1_000_000))
-                pcols = _hive_partition_cols(cur)
-                writer = appended.coalesce(n_files).write.mode("append")
-                if pcols:
-                    writer = writer.partitionBy(*pcols)
-                writes.append(lambda: writer.parquet(out))
-            if cdf:
-                ch = merge_changes_frame(
-                    plan, key, plan["columns"], when_matched_update
-                )
-                writes.append(
-                    lambda: ch.write.mode("errorifexists").parquet(
-                        os.path.join(out, _CHANGES_DIR)
-                    )
-                )
-            _run_concurrently(*writes)
-            if plan["evolved"]:
-                # linked files keep the narrow schema; readers must
-                # footer-merge from now on (see _MIXED_SCHEMA_MARKER)
-                with open(
-                    os.path.join(out, _MIXED_SCHEMA_MARKER), "w"
-                ) as fh:
-                    fh.write("")
-        except Exception:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        finally:
-            plan["materialized"].unpersist()
-        for f in os.listdir(out):
-            if f == "_zone_manifest.json" or f.startswith("_bloom_"):
-                os.remove(os.path.join(out, f))
         self._flip_pointer(rel, out, expected_version, None, txn)
         return out, counts
 
@@ -1478,6 +1237,340 @@ class DocumentStore:
         cur = self.read()
         if cur is not None:
             self.commit(self.spark.createDataFrame([], cur.schema))
+
+
+# -- row-level DML, written once for both commit protocols ----------------
+#
+# ``DocumentStore`` publishes by flipping a pointer under a flock;
+# ``sources.backends.TransactionalParquetBackend`` publishes by
+# creating the next record of a lock-free CAS log. Everything between
+# "base version and candidate directory chosen" and "candidate ready to
+# publish" is the same for both, so it lives here exactly once: each
+# ``*_build`` links the base into the private candidate, writes the
+# mask / appended images / change sidecar, and removes the candidate on
+# failure or when there is nothing to publish. Callers only publish.
+
+
+def _link_candidate(base: str, out: str) -> None:
+    """Hard-link version ``base`` into the candidate ``out``, minus the
+    inherited ``_changes`` sidecar: it describes the predecessor's
+    commit, and each version's change feed is its own commit only."""
+    _link_tree(base, out)
+    shutil.rmtree(os.path.join(out, _CHANGES_DIR), ignore_errors=True)
+
+
+@contextlib.contextmanager
+def _candidate(base: str, out: str):
+    """:func:`_link_candidate`, then run the block; any failure removes
+    ``out`` before it propagates (r9 ADVICE: ``list_versions()`` is
+    name-pattern-based, so a half-built candidate would show up in
+    read_as_of / describe_history / vacuum accounting / change_feed
+    serving never-committed state)."""
+    try:
+        _link_candidate(base, out)
+        yield
+    except Exception:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
+
+
+def _drop_skip_manifests(out: str) -> None:
+    """Drop the zone/Bloom manifests a candidate inherited: rows
+    appended to it are invisible to them, so keeping them would make
+    pruning LOSSY. They rebuild lazily."""
+    for f in os.listdir(out):
+        if f == "_zone_manifest.json" or f.startswith("_bloom_"):
+            os.remove(os.path.join(out, f))
+
+
+def _append_images(images: DataFrame, n: int, base: str, out: str):
+    """Thunk appending ``n`` row images into ``out`` right-sized
+    (ceil(n / 1e6) files) and partition-aware: a hive-partitioned
+    ``base`` appends under its own partition columns (recovered from
+    the directory names), so partition discovery keeps working and a
+    row whose partition value changed lands in its new directory."""
+    writer = images.coalesce(max(1, -(-n // 1_000_000))).write.mode("append")
+    pcols = _hive_partition_cols(base)
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    return lambda: writer.parquet(out)
+
+
+def _changes_write(changes: DataFrame, out: str):
+    """Thunk writing ``changes`` as ``out``'s ``_changes`` sidecar."""
+    return lambda: changes.write.mode("errorifexists").parquet(
+        os.path.join(out, _CHANGES_DIR)
+    )
+
+
+def _insert_changes(df: DataFrame, key: str) -> DataFrame:
+    """CDF rows recording every row of ``df`` as an insert: post
+    images, typed-NULL ``old_*`` pre-images. The feed of a first
+    commit and the insert leg of a merge."""
+    cols = [c for c in df.columns if c != key]
+    types = dict(df.dtypes)
+    return df.select(
+        F.col(key),
+        F.lit("insert").alias("change_type"),
+        *cols,
+        *[F.lit(None).cast(types[c]).alias(f"old_{c}") for c in cols],
+    )
+
+
+def _delete_changes(df: DataFrame, key: str) -> DataFrame:
+    """CDF rows recording every row of ``df`` as a delete: typed-NULL
+    post images, the rows themselves as ``old_*`` pre-images."""
+    cols = [c for c in df.columns if c != key]
+    types = dict(df.dtypes)
+    return df.select(
+        F.col(key),
+        F.lit("delete").alias("change_type"),
+        *[F.lit(None).cast(types[c]).alias(c) for c in cols],
+        *[F.col(c).alias(f"old_{c}") for c in cols],
+    )
+
+
+def _write_commit_changes(
+    spark: SparkSession, out: str, base: Optional[str], key: str
+) -> None:
+    """(Re)write the ``_changes`` sidecar of a full-snapshot commit
+    ``out`` as the diff of its data against ``base``'s masked snapshot
+    — every row an insert when there is no base. Re-runnable: the CAS
+    log rewrites it against each base a retry lands on."""
+    ch = os.path.join(out, _CHANGES_DIR)
+    shutil.rmtree(ch, ignore_errors=True)
+    new_df = spark.read.parquet(out)
+    if base is None:
+        changes = _insert_changes(new_df, key)
+    else:
+        changes = diff_frames(
+            read_with_deletion_vectors(spark, base), new_df, key,
+            include_old=True,
+        )
+    changes.write.mode("errorifexists").parquet(ch)
+
+
+def _write_empty_changes(spark: SparkSession, out: str, key: str) -> None:
+    """Zero-row ``_changes`` sidecar with ``out``'s schema and no diff
+    join — for commits known to be row-neutral (maintenance rewrites),
+    so a live change feed crosses them without a hole."""
+    like = _version_reader(spark, out).parquet(out).filter(F.lit(False))
+    # coalesce(1): guarantee one schema-carrying file (an empty
+    # multi-partition write can produce no files, and the stream
+    # source anchors its schema on the newest sidecar's parquet footer)
+    diff_frames(like, like, key, include_old=True).coalesce(1).write.mode(
+        "errorifexists"
+    ).parquet(os.path.join(out, _CHANGES_DIR))
+
+
+def delete_where_build(
+    spark: SparkSession,
+    base: str,
+    out: str,
+    predicate: str,
+    key: str,
+    cdf: bool,
+) -> tuple[bool, int]:
+    """DELETE the ``predicate`` rows of version ``base`` into candidate
+    ``out`` with deletion vectors: ``base``'s files hard-link in, the
+    matching rows of its MASKED view are masked positionally (inherited
+    masks merge; ``legacy_dir`` re-roots a legacy-format one) and, with
+    ``cdf``, their pre-images become the ``_changes`` sidecar.
+
+    Returns ``(publish, n_total)``: ``n_total`` counts ALL masked
+    positions (inherited + new). A predicate masking nothing new
+    removes ``out`` and returns ``(False, prior_total)``."""
+    prior_total = _dv_position_count(base)
+    # ONE-PASS when cdf (round 11): the masked matched sliver is
+    # computed once and both the positions and the CDF pre-images
+    # project from it. Without cdf the positions are the only
+    # consumer, so nothing is cached.
+    matched = None
+    try:
+        with _candidate(base, out):
+            if cdf:
+                matched = _masked_scan_with_positions(spark, base).filter(
+                    predicate
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+                n_total = write_deletion_vectors(
+                    spark, out, legacy_dir=base,
+                    positions=matched.select(_POS_FP, _POS_RI),
+                )
+            else:
+                n_total = write_deletion_vectors(
+                    spark, out, predicate, legacy_dir=base
+                )
+            if n_total == prior_total:  # positions are distinct: equal
+                shutil.rmtree(out)      # count == no new masked rows
+                return False, prior_total
+            if cdf:
+                # newly masked rows == matching rows of the MASKED base
+                # (already-masked rows can't re-delete): predicate DML
+                # knows its own delta, no diff join needed
+                _changes_write(
+                    _delete_changes(matched.drop(_POS_FP, _POS_RI), key), out
+                )()
+    finally:
+        if matched is not None:
+            matched.unpersist()
+    return True, n_total
+
+
+def update_where_build(
+    spark: SparkSession,
+    base: str,
+    out: str,
+    predicate: str,
+    set_exprs: dict[str, str],
+    key: str,
+    cdf: bool,
+) -> tuple[bool, int]:
+    """UPDATE the ``predicate`` rows of version ``base`` into candidate
+    ``out``: ``base``'s files hard-link in, the matched rows' old
+    images are masked positionally, and their new images (``set_exprs``
+    evaluated against the pre-update MASKED row, so deleted rows never
+    resurrect) are appended right-sized and partition-aware. With
+    ``cdf`` one ``update`` row per key (post + pre image) becomes the
+    ``_changes`` sidecar.
+
+    ONE-PASS (round 11): the masked base is scanned once carrying its
+    physical positions; the matched sliver is persisted and the
+    positions, the images and the CDF rows are all projections of it.
+    The mask is written BEFORE the append, so an update that keeps its
+    own predicate true cannot mask its fresh images; ``n_updated``
+    falls out of the mask write (new distinct positions), so no count
+    pre-pass runs.
+
+    Returns ``(publish, n_updated)``; an empty match removes ``out`` and
+    returns ``(False, 0)``."""
+    snap_pos = _masked_scan_with_positions(spark, base)
+    data_cols = [c for c in snap_pos.columns if c not in (_POS_FP, _POS_RI)]
+    unknown = [c for c in set_exprs if c not in data_cols]
+    if unknown:
+        raise ValueError(f"update_where: unknown columns {unknown}")
+    types = dict(snap_pos.dtypes)
+    matched = snap_pos.filter(predicate).persist(StorageLevel.MEMORY_AND_DISK)
+    prior_total = _dv_position_count(base)
+    try:
+        with _candidate(base, out):
+            n = write_deletion_vectors(
+                spark, out, legacy_dir=base,
+                positions=matched.select(_POS_FP, _POS_RI),
+            ) - prior_total
+            if n == 0:  # positions are distinct: equal count == no match
+                shutil.rmtree(out)
+                return False, 0
+            new = {c: F.expr(e).cast(types[c]) for c, e in set_exprs.items()}
+            writes = [
+                _append_images(
+                    matched.select(*data_cols).withColumns(new), n, base, out
+                )
+            ]
+            if cdf:
+                cols = [c for c in data_cols if c != key]
+                writes.append(_changes_write(
+                    matched.select(
+                        F.col(key),
+                        F.lit("update").alias("change_type"),
+                        *[new.get(c, F.col(c)).alias(c) for c in cols],
+                        *[F.col(c).alias(f"old_{c}") for c in cols],
+                    ),
+                    out,
+                ))
+            # both writes project the cached matched sliver into
+            # disjoint directories — overlap them (guide §2.6)
+            _run_concurrently(*writes)
+            _drop_skip_manifests(out)
+    finally:
+        matched.unpersist()
+    return True, n
+
+
+def merge_into_build(
+    spark: SparkSession,
+    base: str,
+    out: str,
+    plan: dict,
+    key: str,
+    when_matched_update: Optional[dict[str, str]],
+    cdf: bool,
+) -> tuple[bool, dict[str, int]]:
+    """Apply a :func:`derive_merge_clauses` ``plan`` over version
+    ``base`` into candidate ``out``: ``base``'s files hard-link in,
+    every deleted-or-updated row is masked positionally, updated and
+    inserted images append right-sized, and with ``cdf`` the
+    :func:`merge_changes_frame` rows become the ``_changes`` sidecar. A
+    schema-evolving plan marks ``out`` mixed-schema (the linked files
+    keep the narrow schema). The plan's cached join is released on
+    every path.
+
+    The mask, the images and the CDF rows are projections of the SAME
+    cached clause-tagged join into DISJOINT outputs, and the one-pass
+    positions form never scans ``out`` (so mask-before-append holds by
+    construction): the write jobs overlap (round 12, guide §2.6).
+
+    Returns ``(publish, counts)``; a plan touching nothing creates no
+    candidate and returns ``(False, counts)``."""
+    counts = plan["counts"]
+    try:
+        if not any(counts.values()):
+            return False, counts
+        with _candidate(base, out):
+            writes = []
+            if counts["updated"] or counts["deleted"] \
+                    or counts["deleted_by_source"]:
+                writes.append(
+                    lambda: write_deletion_vectors(
+                        spark, out, legacy_dir=base,
+                        positions=plan["touched_positions"],
+                    )
+                )
+            n_app = counts["updated"] + counts["inserted"]
+            if n_app:
+                writes.append(_append_images(plan["appended"], n_app, base, out))
+            if cdf:
+                writes.append(_changes_write(
+                    merge_changes_frame(
+                        plan, key, plan["columns"], when_matched_update
+                    ),
+                    out,
+                ))
+            _run_concurrently(*writes)
+            if plan["evolved"]:
+                # linked files keep the narrow schema; readers must
+                # footer-merge from now on (see _MIXED_SCHEMA_MARKER)
+                open(os.path.join(out, _MIXED_SCHEMA_MARKER), "w").close()
+            _drop_skip_manifests(out)
+    finally:
+        plan["materialized"].unpersist()
+    return True, counts
+
+
+def restore_build(
+    spark: SparkSession,
+    target: str,
+    out: str,
+    key: str,
+    head: Optional[str] = None,
+) -> None:
+    """Link version ``target`` into candidate ``out`` — a RESTORE costs
+    O(filecount) metadata: the deletion-vector sidecar copies with the
+    files (positions are version-relative and names are preserved, so
+    the restored view keeps the target's masked state). With ``head``,
+    the diff ``head`` -> ``target`` becomes this restore's own
+    ``_changes`` sidecar, so CDF consumers see the rollback as ordinary
+    retractions/updates."""
+    with _candidate(target, out):
+        if head is not None:
+            _changes_write(
+                diff_frames(
+                    read_with_deletion_vectors(spark, head),
+                    read_with_deletion_vectors(spark, target),
+                    key,
+                    include_old=True,
+                ),
+                out,
+            )()
 
 
 def zorder_cluster(
@@ -1873,8 +1966,8 @@ def merge_changes_frame(
     ``old_*`` pre-images), matched-delete and by-source-delete
     (pre-images only), insert (post images only) — in the same
     sidecar shape predicate DML writes, so downstream consumers need
-    no merge-specific code. Shared by both ``merge_into``
-    implementations (single-writer store and lock-free backend)."""
+    no merge-specific code. Written by :func:`merge_into_build` for
+    both commit protocols."""
     types = plan["types"]
     cols = [c for c in columns if c != key]
     upd_cd = plan["updates"].select(
@@ -1896,20 +1989,10 @@ def merge_changes_frame(
         *[F.lit(None).cast(types[c]).alias(c) for c in cols],
         *[F.col(f"t.{c}").alias(f"old_{c}") for c in cols],
     )
-    ins_cd = plan["ins_images"].select(
-        F.col(key),
-        F.lit("insert").alias("change_type"),
-        *cols,
-        *[F.lit(None).cast(types[c]).alias(f"old_{c}") for c in cols],
-    )
-    nbs_cd = plan["nbs_deletes"].select(
-        F.col(key),
-        F.lit("delete").alias("change_type"),
-        *[F.lit(None).cast(types[c]).alias(c) for c in cols],
-        *[F.col(c).alias(f"old_{c}") for c in cols],
-    )
     return (
-        upd_cd.unionByName(del_cd).unionByName(ins_cd).unionByName(nbs_cd)
+        upd_cd.unionByName(del_cd)
+        .unionByName(_insert_changes(plan["ins_images"], key))
+        .unionByName(_delete_changes(plan["nbs_deletes"], key))
     )
 
 
@@ -2332,8 +2415,7 @@ def _hive_partition_cols(version_dir: str) -> list[str]:
     """Recover a version's hive-partition column chain from its
     directory names (``col=value`` at each level) — what a
     partition-aware append needs to keep the tree discoverable.
-    Shared by ``DocumentStore.update_where`` and the transactional
-    backend's DML."""
+    Shared by the DML builders' appends and bin-packing."""
     pcols: list[str] = []
     probe = version_dir
     while True:
@@ -2960,7 +3042,8 @@ def _link_tree(src_dir: str, dest_dir: str) -> None:
     shares the inode; cross-device fallback copies), sidecar files
     copy (small; keeps each version's manifests private so a lazy
     rebuild on one side never mutates the other). Shared by
-    :func:`shallow_clone` and :meth:`DocumentStore.delete_where`.
+    :func:`shallow_clone` and the DML candidates
+    (:func:`_link_candidate`).
     Because version dirs are immutable, the link share is safe — a
     later commit on either side writes NEW directories, never
     mutating linked bytes."""

@@ -31,6 +31,65 @@ def _seed(spark, n=40):
     )
 
 
+# -- the single CAS publish: lost-reply disambiguation -----------------------
+
+
+class _LostReplyOs:
+    """``os`` as the backend module sees it, except that the first
+    ``link`` performs the link and then raises FileExistsError — an NFS
+    retransmit whose first reply was lost."""
+
+    def __init__(self):
+        self.fired = False
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    def link(self, src, dst):
+        os.link(src, dst)
+        if not self.fired:
+            self.fired = True
+            raise FileExistsError(dst)
+
+
+_LOST_REPLY_OPS = {
+    "commit": lambda b, spark: b.commit(_seed(spark, 12)),
+    "delete_where": lambda b, spark: b.delete_where("grp = 1")[0],
+    "update_where": lambda b, spark: b.update_where(
+        "grp = 2", {"val": "val + 1"}
+    )[0],
+    "merge_into": lambda b, spark: b.merge_into(
+        _seed(spark, 12).filter("k >= 8"),
+        when_matched_update={"val": "s.val + 1"},
+    )[0],
+    "restore_cdf": lambda b, spark: b.restore(1, cdf=True),
+    "compact": lambda b, spark: b.compact(),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOST_REPLY_OPS))
+def test_txn_publish_lost_reply_is_a_win(spark, tmp_path, monkeypatch, op):
+    """A link that succeeded but reported EEXIST is recognised by the
+    scratch record's link count: the op publishes exactly one version,
+    returns its handle and keeps its data directory."""
+    from far_finer_airtable_firestore_sync_spark.sources import backends
+
+    b = _mk_backend(spark, tmp_path, "lost_reply")
+    b.commit(_seed(spark, 10))
+    b.commit(_seed(spark, 10).filter("k < 9"))  # restore(1) has a target
+    head = b.latest()[0]
+    fake = _LostReplyOs()
+    monkeypatch.setattr(backends, "os", fake)
+    handle = _LOST_REPLY_OPS[op](b, spark)
+    monkeypatch.undo()
+    assert fake.fired
+    assert handle == f"txn://{head + 1}"
+    assert b.latest()[0] == head + 1
+    rec = b._read_record(head + 1)
+    assert os.path.isdir(os.path.join(b.root, rec["version_dir"]))
+    assert b.read().count() > 0
+
+
 # -- compaction on the lock-free log -----------------------------------------
 
 
@@ -241,23 +300,46 @@ def test_view_fingerprint_single_row_perturbation(spark):
 # -- DML failure cleanup (r9 ADVICE medium) ----------------------------------
 
 
-def test_delete_where_failed_predicate_leaves_no_phantom(spark, tmp_path):
-    store = DocumentStore(spark, str(tmp_path / "d1"), "k")
-    store.commit(_seed(spark, 10))
-    before = store.list_versions()
-    with pytest.raises(Exception):
-        store.delete_where("no_such_column = 1")
-    assert store.list_versions() == before
-    assert store.current_version_dir() == before[-1]
+def _dml_store(spark, root, protocol):
+    """A store of either commit protocol plus a probe of everything a
+    failed DML must leave unchanged: the version directories and the
+    current version."""
+    root = str(root)
+    if protocol == "store":
+        store = DocumentStore(spark, root, "k")
+        return store, lambda: (
+            store.list_versions(), store.current_version_dir()
+        )
+    store = TransactionalParquetBackend(spark, root, "k")
+    return store, lambda: (
+        sorted(d for d in os.listdir(root) if d.startswith("v-")),
+        store.current_version(),
+    )
 
 
-def test_update_where_failed_set_expr_leaves_no_phantom(spark, tmp_path):
-    store = DocumentStore(spark, str(tmp_path / "d2"), "k")
+@pytest.mark.parametrize("protocol", ["store", "txn"])
+def test_delete_where_failed_predicate_leaves_no_phantom(
+    spark, tmp_path, protocol
+):
+    store, state = _dml_store(spark, tmp_path / "d1", protocol)
     store.commit(_seed(spark, 10))
-    before = store.list_versions()
+    before = state()
+    for cdf in (False, True):
+        with pytest.raises(Exception):
+            store.delete_where("no_such_column = 1", cdf=cdf)
+        assert state() == before
+
+
+@pytest.mark.parametrize("protocol", ["store", "txn"])
+def test_update_where_failed_set_expr_leaves_no_phantom(
+    spark, tmp_path, protocol
+):
+    store, state = _dml_store(spark, tmp_path / "d2", protocol)
+    store.commit(_seed(spark, 10))
+    before = state()
     with pytest.raises(Exception):
         store.update_where("grp = 1", {"val": "no_such_column + 1"})
-    assert store.list_versions() == before
+    assert state() == before
 
 
 def test_store_compact_sizes_without_count(spark, tmp_path):
@@ -559,8 +641,8 @@ def test_dv_dml_across_schema_evolution(spark, tmp_path):
 # -- MERGE INTO (multi-clause, one DV commit) ---------------------------------
 
 
-def _merge_fixture(spark, tmp_path):
-    store = DocumentStore(spark, str(tmp_path / "merge"), key_col="k")
+def _merge_fixture(spark, tmp_path, protocol="store"):
+    store, _state = _dml_store(spark, tmp_path / "merge", protocol)
     base = spark.createDataFrame(
         [(i, i * 10, "base") for i in range(1, 9)],
         "k int, val int, src string",
@@ -625,13 +707,16 @@ def test_merge_into_duplicate_source_keys_rejected(spark, tmp_path):
     assert len(store.list_versions()) == 1   # no phantom directory
 
 
-def test_merge_into_failed_expr_leaves_no_phantom(spark, tmp_path):
-    store, source = _merge_fixture(spark, tmp_path)
+@pytest.mark.parametrize("protocol", ["store", "txn"])
+def test_merge_into_failed_expr_leaves_no_phantom(spark, tmp_path, protocol):
+    store, source = _merge_fixture(spark, tmp_path, protocol)
+    _, state = _dml_store(spark, tmp_path / "merge", protocol)
+    before = state()
     with pytest.raises(Exception):
         store.merge_into(
             source, when_matched_update={"val": "no_such_col + 1"}
         )
-    assert len(store.list_versions()) == 1
+    assert state() == before
 
 
 def test_merge_into_update_condition_gates_clause(spark, tmp_path):

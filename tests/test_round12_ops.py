@@ -18,6 +18,7 @@ from far_finer_airtable_firestore_sync_spark.sources.store import (
     _LIVE_ROWS_CACHE,
     DocumentStore,
     _dv_position_count,
+    _run_concurrently,
     _version_live_rows,
     write_deletion_vectors,
 )
@@ -181,6 +182,20 @@ class TestLiveRowsCache:
 
 
 class TestOverlappedDmlWrites:
+    def test_run_concurrently_keeps_every_failure(self):
+        """Both writes fail: the first thunk's exception is raised and
+        the second one's message rides along as a note."""
+
+        def fail(msg):
+            def thunk():
+                raise ValueError(msg)
+
+            return thunk
+
+        with pytest.raises(ValueError, match="first write") as ei:
+            _run_concurrently(fail("first write"), fail("second write"))
+        assert any("second write" in n for n in ei.value.__notes__)
+
     def test_update_where_cdf_sidecar_and_append(self, spark, tmp_root):
         """The overlapped append + CDF writes must leave the same
         version contents as the sequential form."""
