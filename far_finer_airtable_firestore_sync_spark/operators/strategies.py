@@ -12,6 +12,10 @@ Scale design:
 - every strategy is a single equi-join (or union) on the primary key —
   the natural shuffle key; AQE picks broadcast-hash automatically when
   the incoming batch is small (the common sync case);
+- M3/M4/M5 read each input ONCE: the source joins every ranked target
+  row, and duplicate target keys are a CASE branch of that join, not a
+  second join against ``source.select(pk).distinct()`` (which scanned
+  the live feed a second time);
 - checksums are codegen'd built-in expressions (functions/canonical.py)
   evaluated inside the scan stage, never in Python;
 - the "any change?" gates of VERSIONED_SET / table strategies are
@@ -241,6 +245,13 @@ def _pick_one_per_key(t: DataFrame, spec: SyncSpec) -> DataFrame:
 
 
 
+def _is_dup() -> Column:
+    """True on the classify join's rows whose target side is a
+    duplicate (``_rn > 1``) of a key's picked row — see
+    :func:`_pick_one_per_key`."""
+    return F.coalesce(F.col("t._rn") > 1, F.lit(False))
+
+
 def _classified_post_state(
     j: DataFrame,
     spec: SyncSpec,
@@ -255,7 +266,9 @@ def _classified_post_state(
       columns survive (Firestore merge=True parity);
     - matched & !touch: target row unchanged;
     - source-only: insert (payload + new doc_id + stamps);
-    - target-only: target row unchanged (caller filters if deleting).
+    - target-only: target row unchanged (caller filters if deleting);
+    - duplicate target row (``_rn > 1``): unchanged, whether or not
+      its key is in the batch.
 
     This is THE scale shape: a branched union would re-shuffle source
     and target once per branch (measured: 7 exchanges for M4); the
@@ -264,6 +277,7 @@ def _classified_post_state(
     pk = spec.primary_key
     s_present = F.col(f"s.{pk}").isNotNull()
     t_present = F.col(f"t.{pk}").isNotNull()
+    dup = _is_dup()
     payload_names = set(spec.payload_names)
     out: list[Column] = []
     for c in t_columns:
@@ -285,13 +299,21 @@ def _classified_post_state(
             )
         else:
             val = F.col(f"t.{c}")
-        out.append(val.alias(c))
-    return j.select(*out, s_present.alias("_s_present"), t_present.alias("_t_present"))
+        out.append(F.when(dup, F.col(f"t.{c}")).otherwise(val).alias(c))
+    return j.select(*out, s_present.alias("_s_present"))
 
 
 def _upsert_core(
     source: DataFrame, target: DataFrame, spec: SyncSpec, delete_missing: bool
 ) -> DataFrame:
+    """M4/M5 as one classify join of the source against EVERY target
+    row, ranked by :func:`_pick_one_per_key`: the picked row (or no
+    row) is classified, duplicates pass through unchanged. Source and
+    target are each scanned once.
+
+    Source keys are unique here (the pipeline's keep-latest dedup runs
+    first); a duplicated source key would repeat its matched target
+    rows, picked and duplicate alike."""
     t = _ensure_payload_cols(
         _ensure_engine_cols(
             purge_other_update_types(target, spec),
@@ -299,12 +321,7 @@ def _upsert_core(
         ),
         spec,
     )
-    pk = spec.primary_key
-    ranked = _pick_one_per_key(t, spec)
-    pick = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    dups = ranked.filter(F.col("_rn") > 1).drop("_rn")
-
-    j = _classify(source, pick, spec)
+    j = _classify(source, _pick_one_per_key(t, spec), spec)
     stamps = {
         "update_type": F.lit(spec.update_type.value),
         "write_timestamp": _run_ts(spec),
@@ -316,13 +333,10 @@ def _upsert_core(
     if delete_missing:
         # M5's second loop deletes every doc whose key is absent from
         # the batch (lib/UpdateStrategies.py:289-294) — duplicates of
-        # *present* keys survive (their pk is in processed_records).
-        main = merged.filter(F.col("_s_present")).drop("_s_present", "_t_present")
-        kept_dups = dups.join(source.select(pk).distinct(), on=pk, how="left_semi")
-    else:
-        main = merged.drop("_s_present", "_t_present")
-        kept_dups = dups
-    return _union(main, kept_dups)
+        # *present* keys survive (their pk is in processed_records),
+        # and they are exactly the duplicate rows the join matched.
+        merged = merged.filter(F.col("_s_present"))
+    return merged.drop("_s_present")
 
 
 def soft_delete(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFrame:
@@ -335,6 +349,12 @@ def soft_delete(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFra
     target-only & alive -> is_deleted=true + fresh write_timestamp
                            (payload kept, lib/UpdateStrategies.py:115);
     target-only & dead  -> unchanged.
+
+    One classify join of the source against every target row ranked by
+    :func:`_pick_one_per_key`, like :func:`_upsert_core`: source and
+    target are each scanned once, and a duplicate (``_rn > 1``) target
+    row is never written — kept as it is when its key is in the batch,
+    tombstoned when alive and absent from it.
     """
     t = _ensure_payload_cols(
         _ensure_engine_cols(
@@ -344,15 +364,14 @@ def soft_delete(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFra
         spec,
     )
     pk = spec.primary_key
-    ranked = _pick_one_per_key(t, spec)
-    pick = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    dups = ranked.filter(F.col("_rn") > 1).drop("_rn")
-
-    j = _classify(source, pick, spec)
+    j = _classify(source, _pick_one_per_key(t, spec), spec)
     s_present = F.col(f"s.{pk}").isNotNull()
     t_present = F.col(f"t.{pk}").isNotNull()
+    dup = _is_dup()
     was_deleted = F.coalesce(F.col("t.is_deleted"), F.lit(False))
-    write = s_present & (
+    # a duplicate is never written, but the tombstone branch still
+    # reaches it (the reference's second loop visits all docs)
+    write = ~dup & s_present & (
         ~t_present | (F.col("_s_cs") != F.col("_t_cs")) | was_deleted
     )
     t_only_alive = ~s_present & ~was_deleted  # second loop (:112-118)
@@ -363,7 +382,7 @@ def soft_delete(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFra
         if c in payload_names:
             val = F.when(write, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
         elif c == "doc_id":
-            val = F.when(t_present, F.col("t.doc_id")).otherwise(
+            val = F.when(t_present | dup, F.col("t.doc_id")).otherwise(
                 _new_doc_id(spec, "s")
             )
         elif c == "update_type":
@@ -384,24 +403,7 @@ def soft_delete(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFra
         else:
             val = F.col(f"t.{c}")
         out.append(val.alias(c))
-    main = j.select(*out)
-
-    # Duplicate (non-pick) target rows: tombstoned if their key left
-    # the batch (the reference's second loop visits all docs), kept
-    # as-is otherwise. Dup sets are small; the joins are cheap.
-    alive = ~F.coalesce(F.col("is_deleted"), F.lit(False))
-    dups_t_only = dups.join(
-        source.select(pk).distinct(), on=pk, how="left_anti"
-    ).withColumns(
-        {
-            "is_deleted": F.when(alive, F.lit(True)).otherwise(F.col("is_deleted")),
-            "write_timestamp": F.when(alive, _run_ts(spec)).otherwise(
-                F.col("write_timestamp")
-            ),
-        }
-    )
-    dups_matched = dups.join(source.select(pk).distinct(), on=pk, how="left_semi")
-    return _union(main, dups_t_only, dups_matched)
+    return j.select(*out)
 
 
 def versioned(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataFrame:

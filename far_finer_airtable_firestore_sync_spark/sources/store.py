@@ -107,6 +107,16 @@ def _write_json_durable(tmp_path: str, obj) -> None:
         os.fsync(fh.fileno())
 
 
+def _fsync_dir(path: str) -> None:
+    """fsync a directory — the durable second half of a rename: the
+    new entry survives a crash only once its directory is synced."""
+    dfd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 def _run_concurrently(*thunks) -> None:
     """Run independent Spark write actions from a small thread pool
     (guide §2.6 — actions are only sequential because the driver calls
@@ -378,13 +388,7 @@ class DocumentStore:
                 pointer["tag"] = tag
             _write_json_durable(tmp, pointer)
             os.replace(tmp, self._pointer_path())
-            # the replace is durable only once the directory holding
-            # the new entry is fsync'd too
-            dfd = os.open(self.root, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            _fsync_dir(self.root)
 
     def read_as_of(self, epoch_ms: int) -> Optional[DataFrame]:
         """Time travel by TIMESTAMP (the Delta `timestampAsOf` shape):
@@ -3089,6 +3093,10 @@ def shallow_clone(
     name the source — and reads as no-mask on the clone; rewrite via
     ``write_deletion_vectors`` on the source first.)
 
+    The clone's pointer is published like a commit's
+    (:meth:`DocumentStore._flip_pointer`): written durably, renamed
+    into place, then the clone directory is fsync'd.
+
     Reference analog: Firestore export/import
     (the reference has no cheap snapshot path at all — it re-syncs)."""
     src_dir = src_store.current_version_dir()
@@ -3100,7 +3108,7 @@ def shallow_clone(
     dest_dir = os.path.join(dest_root, dname)
     _link_tree(src_dir, dest_dir)
     tmp = os.path.join(dest_root, _POINTER + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"version_dir": dname, "txns": {}}, fh)
+    _write_json_durable(tmp, {"version_dir": dname, "txns": {}})
     os.replace(tmp, os.path.join(dest_root, _POINTER))
+    _fsync_dir(dest_root)
     return dest_store

@@ -4,7 +4,7 @@ Runs every ``queries()`` entry through Spark and its ``oracle_sql()``
 through DuckDB on the same parquet tables, then compares row count,
 schema (sorted column names) and an order-insensitive value multiset.
 
-Usage: python scripts/check_oracle.py [sf_dir] [name ...]
+Usage: python scripts/check_oracle.py [sf_dir] [name ...]   (from any directory)
 
 Set ORACLE_JSON_OUT=<path> to also write a machine-readable artifact
 (one record per entry: status/rows/error) — committed per round as
@@ -21,7 +21,13 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers (the record_feed and change-feed sources run there) are
+# started by the JVM and must import the engine from this checkout too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

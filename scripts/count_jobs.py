@@ -2,8 +2,10 @@
 metric for optimization rounds (this host's wall-clock swings 3x run
 to run; job and task counts are deterministic for the same code).
 
-Usage: python scripts/count_jobs.py <entry> [<entry> ...]
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Usage: python scripts/count_jobs.py <entry> [<entry> ...]   (from any directory)
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+CPUs this process may run on), SPARK_GRAFT_MEM (default: a quarter of
+host memory, capped at 4g).
 """
 
 from __future__ import annotations
@@ -12,13 +14,21 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers (the record_feed and change-feed sources run there) are
+# started by the JVM and must import the engine from this checkout too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
+
+from perfbench.harness import driver_memory_mb, host_cpus  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 
     from pyspark.sql import SparkSession
 
@@ -39,7 +49,10 @@ def main() -> None:
         .config("spark.ui.retainedJobs", "100000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_MEM", f"{driver_memory_mb()}m"),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )

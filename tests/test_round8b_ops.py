@@ -791,6 +791,45 @@ def test_shallow_clone_empty_source_raises(spark, tmp_path):
         shallow_clone(spark, src, str(tmp_path / "edst"))
 
 
+def test_shallow_clone_pointer_is_durable(spark, tmp_path, monkeypatch):
+    """The clone's pointer bytes are fsync'd before the rename that
+    publishes them, and the clone directory after it."""
+    import os
+    import stat
+
+    from far_finer_airtable_firestore_sync_spark.sources import store as store_mod
+
+    calls = []
+
+    class _RecordingOs:
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        def fsync(self, fd):
+            is_dir = stat.S_ISDIR(os.fstat(fd).st_mode)
+            kind = "fsync_dir" if is_dir else "fsync_file"
+            calls.append((kind, os.readlink(f"/proc/self/fd/{fd}")))
+            os.fsync(fd)
+
+        def replace(self, src, dst):
+            calls.append(("replace", dst))
+            os.replace(src, dst)
+
+    src = store_mod.DocumentStore(spark, str(tmp_path / "src"), "k")
+    src.commit(spark.range(5).withColumnRenamed("id", "k"))
+    dest = str(tmp_path / "dst")
+    monkeypatch.setattr(store_mod, "os", _RecordingOs())
+    clone = store_mod.shallow_clone(spark, src, dest)
+    monkeypatch.undo()
+    pointer = os.path.join(dest, store_mod._POINTER)
+    assert calls == [
+        ("fsync_file", pointer + ".tmp"),
+        ("replace", pointer),
+        ("fsync_dir", dest),
+    ]
+    assert clone.read().count() == 5
+
+
 def test_incremental_join_refresh_hand_case(spark):
     """Every join-IVM leg on a hand-built pair of snapshots: insert,
     delete, payload update, foreign-key move, dim delete (fact rows

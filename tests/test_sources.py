@@ -1,6 +1,7 @@
 """Custom Python DataSource, record unwrap, stateful streaming, secrets."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,8 +45,8 @@ def test_record_feed_datasource(spark, page_dir):
     assert rows["rec4"]["Name"] == "n4"
     assert rows["rec4"]["Score"] == "6.0"  # strings until the cast stage
     assert rows["rec4"]["Tag"] is None
-    # one partition per page -> parallel fetch
-    assert df.rdd.getNumPartitions() == 3
+    # pages are packed by bytes: three tiny pages are one scan task
+    assert df.rdd.getNumPartitions() == 1
     # catalog-driven typed projection composes on top
     from far_finer_airtable_firestore_sync_spark.functions.casts import (
         typed_projection,
@@ -55,6 +56,50 @@ def test_record_feed_datasource(spark, page_dir):
         df.select("Name", "Score"), {"Name": "singleLineText", "Score": "number"}
     )
     assert dict(typed.dtypes)["Score"] == "double"
+
+
+def test_pack_pages_preserves_order_and_caps_bytes():
+    mib = 1024 * 1024
+    cap = record_source.MAX_PARTITION_BYTES
+    open_cost = record_source.OPEN_COST_IN_BYTES
+    assert (cap, open_cost) == (128 * mib, 4 * mib)
+    pack = record_source.pack_pages
+    # small pages share one partition, in page order
+    assert pack([("p0", 10), ("p1", 20), ("p2", 5)]) == [("p0", "p1", "p2")]
+    # 60 MiB pages cost 64 MiB each: two fill a partition exactly, a
+    # third opens the next one
+    sixty = 60 * mib
+    assert pack([(f"p{i}", sixty) for i in range(5)]) == [
+        ("p0", "p1"), ("p2", "p3"), ("p4",)
+    ]
+    # a page over the cap sits alone, and its neighbours keep their order
+    assert pack([("a", 1), ("big", 200 * mib), ("b", 1), ("c", 1)]) == [
+        ("a",), ("big",), ("b", "c")
+    ]
+    assert pack([("big", 200 * mib)]) == [("big",)]
+    assert pack([]) == []
+
+
+def test_record_feed_packs_pages_in_order(tmp_path):
+    """The reader plans packed partitions over the page directory and
+    streams each partition's pages in page order; an empty directory
+    plans none."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField(n, T.StringType()) for n in ("_record_id", "_created_time", "Name")]
+    )
+    reader = record_source.RecordFeedReader(str(tmp_path), schema)
+    assert reader.partitions() == []
+    for n in (0, 1, 2, 10):  # page-10 sorts after page-2
+        (tmp_path / f"page-{n}.jsonl").write_text(
+            json.dumps({"id": f"r{n}", "fields": {"Name": f"n{n}"}}) + "\n"
+        )
+    parts = reader.partitions()
+    assert [[os.path.basename(p) for p in part.paths] for part in parts] == [
+        ["page-0.jsonl", "page-1.jsonl", "page-2.jsonl", "page-10.jsonl"]
+    ]
+    assert [r[0] for r in reader.read(parts[0])] == ["r0", "r1", "r2", "r10"]
 
 
 def test_unwrap_records(spark):
@@ -151,6 +196,51 @@ def test_connector_to_store_e2e(spark, page_dir, tmp_path):
     assert out["n4"]["Score"] == 6.0  # string from the feed -> double
     assert out["n4"]["Created"].year == 2024
     assert res.metrics["sync_out"]["rows"] == 9
+
+
+@pytest.mark.parametrize(
+    "update_type", ["soft_delete", "upsert_checksum", "upsert_checksum_with_delete"]
+)
+def test_sync_plan_scans_feed_and_target_once(spark, page_dir, tmp_path, update_type):
+    """M3/M4/M5 over the connector against a committed target plan
+    exactly one record_feed scan and one target parquet scan."""
+    import re
+
+    from far_finer_airtable_firestore_sync_spark.config import (
+        SyncSpecBuilder,
+        UpdateType,
+    )
+    from far_finer_airtable_firestore_sync_spark.plans.pipeline import SyncPipeline
+    from far_finer_airtable_firestore_sync_spark.sources.store import DocumentStore
+
+    record_source.register(spark)
+    raw = (
+        spark.read.format("record_feed")
+        .option("path", page_dir)
+        .option("fields", "Name, Score")
+        .load()
+        .withColumnRenamed("_created_time", "Created")
+        .drop("_record_id")
+    )
+    spec = (
+        SyncSpecBuilder()
+        .with_primary_key("Name")
+        .with_update_type(UpdateType(update_type))
+        .with_field("Name", "string")
+        .with_field("Created", "timestamp")
+        .with_field("Score", "double")
+        .build()
+    )
+    catalog = {"Name": "singleLineText", "Created": "dateTime", "Score": "number"}
+    pipe = SyncPipeline(spec, DocumentStore(spark, str(tmp_path / "store")), catalog)
+    pipe.run(raw)
+    post = pipe.build_post_state(raw)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        post._jdf.queryExecution(), "formatted"
+    )
+    # the formatted plan details each node once, as "(<id>) <node>"
+    assert len(re.findall(r"^\(\d+\) BatchScan record_feed", plan, re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
 
 
 # ---------------------------------------------------------------------------

@@ -277,3 +277,100 @@ def test_versioned_always_writes(source, make_target):
     once = st.versioned(source, make_target(s.update_type), s).localCheckpoint()
     twice = st.versioned(source, once, s)
     assert twice.count() == once.count() + source.count()
+
+
+# -- duplicate target keys ------------------------------------------------------
+#
+# Target rows that share a key: the (version_id DESC, doc_id DESC) pick
+# is the row the strategy classifies; the others keep their own
+# semantics per strategy. "chg" has a duplicate and is in the batch;
+# "gone" and "husk" have duplicates and are absent from it (husk's
+# duplicate is already a tombstone).
+
+D_OLD = datetime(2020, 1, 1)
+
+
+def dup_target_rows(ut):
+    u = ut.value
+    mk = lambda name, score, doc, v, dead: Row(
+        name=name, score=score, doc_id=doc, update_type=u,
+        write_timestamp=D_OLD, version_id=v, is_deleted=dead,
+    )
+    return [
+        mk("same", 1.0, "d1", 7, False),
+        mk("chg", 99.0, "d2", 7, False),  # pick
+        mk("chg", 50.0, "d6", 3, False),  # duplicate, key in batch
+        mk("gone", 4.0, "d3", 7, False),  # pick
+        mk("gone", 40.0, "d7", 3, False),  # duplicate, key absent
+        mk("husk", 8.0, "d9", 7, False),  # pick
+        mk("husk", 80.0, "d8", 3, True),  # dead duplicate, key absent
+    ]
+
+
+@pytest.fixture()
+def dup_source(spark):
+    return spark.createDataFrame(
+        [Row(name="same", score=1.0), Row(name="chg", score=2.0),
+         Row(name="new", score=3.0)]
+    )
+
+
+def _golden(post):
+    return sorted(
+        (r["doc_id"], r["name"], r["score"], r["write_timestamp"], r["is_deleted"])
+        for r in post.collect()
+    )
+
+
+def _ins_id(s, key):
+    import hashlib
+
+    return hashlib.md5(
+        f"ins:{s.update_type.value}:{key}:{s.version_id}".encode()
+    ).hexdigest()
+
+
+def test_upsert_checksum_duplicate_target_keys_golden(spark, dup_source):
+    s = spec_for(UpdateType.UPSERT_CHECKSUM)
+    target = spark.createDataFrame(dup_target_rows(s.update_type))
+    assert _golden(st.upsert_checksum(dup_source, target, s)) == sorted([
+        ("d1", "same", 1.0, D_OLD, False),
+        ("d2", "chg", 2.0, RUN_TS, False),
+        ("d6", "chg", 50.0, D_OLD, False),
+        ("d3", "gone", 4.0, D_OLD, False),
+        ("d7", "gone", 40.0, D_OLD, False),
+        ("d9", "husk", 8.0, D_OLD, False),
+        ("d8", "husk", 80.0, D_OLD, True),
+        (_ins_id(s, "new"), "new", 3.0, RUN_TS, None),
+    ])
+
+
+def test_upsert_checksum_with_delete_duplicate_target_keys_golden(
+    spark, dup_source
+):
+    s = spec_for(UpdateType.UPSERT_CHECKSUM_WITH_DELETE)
+    target = spark.createDataFrame(dup_target_rows(s.update_type))
+    # duplicates of keys in the batch survive; absent keys go entirely
+    assert _golden(st.upsert_checksum_with_delete(dup_source, target, s)) == sorted([
+        ("d1", "same", 1.0, D_OLD, False),
+        ("d2", "chg", 2.0, RUN_TS, False),
+        ("d6", "chg", 50.0, D_OLD, False),
+        (_ins_id(s, "new"), "new", 3.0, RUN_TS, None),
+    ])
+
+
+def test_soft_delete_duplicate_target_keys_golden(spark, dup_source):
+    s = spec_for(UpdateType.SOFT_DELETE)
+    target = spark.createDataFrame(dup_target_rows(s.update_type))
+    # duplicates of keys in the batch are kept as they are; alive
+    # duplicates of absent keys are tombstoned, dead ones untouched
+    assert _golden(st.soft_delete(dup_source, target, s)) == sorted([
+        ("d1", "same", 1.0, D_OLD, False),
+        ("d2", "chg", 2.0, RUN_TS, False),
+        ("d6", "chg", 50.0, D_OLD, False),
+        ("d3", "gone", 4.0, RUN_TS, True),
+        ("d7", "gone", 40.0, RUN_TS, True),
+        ("d9", "husk", 8.0, RUN_TS, True),
+        ("d8", "husk", 80.0, D_OLD, True),
+        (_ins_id(s, "new"), "new", 3.0, RUN_TS, False),
+    ])
