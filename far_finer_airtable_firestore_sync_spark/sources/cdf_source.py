@@ -1,40 +1,59 @@
-"""``store_cdf``: a Spark 4 Python DataSource that tails a
-DocumentStore's Change Data Feed — the streaming consumer contract the
-r9 VERDICT asked for (#4/#3): ``readStream`` the store's own CDC with
-exactly-once version offsets, the way a downstream pipeline actually
-tails a synced table (Delta's ``readChangeFeed`` shape; the reference
-has no incremental consumer at all — every sync re-reads the world,
-lib/AirtableDataFetcher.py:14-37).
+"""The store change feed (CDF) as Spark 4 Python DataSources: tail a
+store's own row-level changes with exactly-once offsets, the way a
+downstream pipeline tails a synced table (Delta's ``readChangeFeed``
+shape; the reference has no incremental consumer at all — every sync
+re-reads the world, lib/AirtableDataFetcher.py:14-37).
 
-Design: commits made with ``cdf=True`` (``DocumentStore.commit`` /
-``delete_where`` / ``update_where``) write their OWN row-level changes
-as a ``_changes/`` parquet sidecar inside the version directory, in
-the ``diff_frames(include_old=True)`` schema (key, change_type,
-post-image columns, ``old_<col>`` pre-images). This source then never
-diffs anything:
+Commits made with ``cdf=True`` write their OWN row-level changes as a
+``_changes/`` parquet sidecar inside the version directory, in the
+``diff_frames(include_old=True)`` schema (key, change_type, post-image
+columns, ``old_<col>`` pre-images). The feed never diffs anything; it
+only lists sidecar files. Both commit protocols publish them, so the
+module is one reader over a small per-protocol LISTING object:
 
-- **offset** = the basename of the newest consumed version directory
-  (name order == commit order — fixed-width epoch ms; the same
-  name-boundary rule the record-feed source uses, so a replayed batch
-  re-reads exactly the recorded version range no matter what has
-  landed since);
-- **micro-batch** = the change files of the versions in
-  ``(start, end]``, ONE InputPartition PER CHANGE FILE — executors
-  read their files in parallel (pyarrow), nothing funnels through the
-  driver;
-- ``commit_ms`` (parsed from the version name) is appended to every
-  row, so consumers can order/window by commit time.
+- :class:`_StoreListing` — a ``DocumentStore`` root (pointer
+  protocol). Position = the newest consumed version directory NAME
+  (name order == commit order: fixed-width epoch ms), bounded by the
+  pointer so an in-flight version is never read. Constant column:
+  ``commit_ms`` (parsed from the version name).
+- :class:`_LogListing` — a ``TransactionalParquetBackend`` root (CAS
+  log). Position = the newest consumed log VERSION (dense integers:
+  exactly one writer owns N+1). Constant columns: ``commit_ms`` (the
+  record's ``ts_ms``) and ``commit_version``. ``startingVersion``
+  begins the feed past retention-vacuumed or pre-CDF history; the
+  head position never reports less than ``startingVersion - 1``.
 
-Fail-loud contract: a version inside the offset range that lacks a
-``_changes/`` sidecar raises — it was committed without ``cdf=True``,
-and silently skipping it would serve a feed with holes. Vacuumed
-versions inside a not-yet-consumed range fail the same way Delta CDF
-does after VACUUM passes the retention window.
+A listing answers three questions: its ``head()`` position, the change
+files in ``(lo, hi]`` with their constant columns (``files``), and its
+newest sidecar schema (``newest_fields``: the schema anchor — additive
+schema evolution means later sidecars carry a superset of columns).
 
-Scale shape: offsets are O(1) directory-name comparisons; each batch
-opens only its own versions' sidecar files (sliver-sized for DML
-commits — predicate DML writes its delta directly, no diff join); the
-per-file partitioning parallelizes reads across executors.
+On top sit ONE partition class (:class:`ChangeFilePartition`, one per
+change file: executors read their files in parallel with pyarrow,
+nothing funnels through the driver), ONE stream reader and ONE batch
+reader (the partitions between the stream's initial and latest
+offset). Three formats use them:
+
+- ``store_cdf`` with ``path``: offset ``{"last": name}``;
+- ``store_cdf`` with ``paths``/``tags`` (multiplexed, streaming-only):
+  several stores through one source, a ``_ffs_feed`` tag column, one
+  offset per feed ``{"last": {tag: name}}``;
+- ``store_cdf_txn`` with ``path`` (+ ``startingVersion``): offset
+  ``{"v": N}``.
+
+Hole rules stay per protocol (a feed with silent holes would
+under-maintain every consumer):
+
+- pointer store: any version in a consumed range without a sidecar
+  raises — it was committed without ``cdf=True``, or vacuumed (Delta
+  CDF fails the same way after VACUUM passes the retention window);
+- CAS log: ``compact``/``optimize_*`` records are logical no-ops and
+  are skipped (Delta CDF skips OPTIMIZE commits); any other record
+  without a sidecar raises and names ``startingVersion``.
+
+Scale shape: head positions cost one directory listing; a range parses
+only its own log records; the schema walk stops at the newest
+sidecar.
 """
 
 from __future__ import annotations
@@ -68,48 +87,13 @@ except ImportError:  # pragma: no cover - older pyspark
     _HAS_DATASOURCE_API = False
 
 
-def _current_rel(root: str) -> Optional[str]:
-    """The store pointer's current version basename (no DocumentStore
-    instance needed — the reader must stay picklable/driver-light)."""
-    try:
-        with open(os.path.join(root, _POINTER)) as fh:
-            return json.load(fh)["version_dir"]
-    except FileNotFoundError:
-        return None
+#: feed-tag column the MULTIPLEXED reader appends (same name the
+#: consumers' hand-built tagged union used, so downstream code is
+#: byte-identical either way)
+_FEED_COL = "_ffs_feed"
 
-
-def _committed_versions(root: str) -> list[str]:
-    """Version basenames committed AT OR BEFORE the current pointer,
-    oldest first. Bounding by the pointer matters: a version directory
-    exists on disk BEFORE its pointer flip (data, then sidecars, then
-    flip), so an unbounded listing could read a commit that is still
-    in flight — the flip is the commit point, exactly like the store's
-    own readers."""
-    cur = _current_rel(root)
-    if cur is None:
-        return []
-    return sorted(
-        d
-        for d in os.listdir(root)
-        if d.startswith("v-")
-        and os.path.isdir(os.path.join(root, d))
-        and d <= cur
-    )
-
-
-def _change_files(root: str, version: str) -> list[str]:
-    ch = os.path.join(root, version, _CHANGES_DIR)
-    if not os.path.isdir(ch):
-        raise ValueError(
-            f"store version {version!r} has no {_CHANGES_DIR}/ sidecar: "
-            "it was committed without cdf=True (or vacuumed); the "
-            "change feed cannot serve a range with holes"
-        )
-    return sorted(
-        os.path.join(ch, f)
-        for f in os.listdir(ch)
-        if f.endswith(".parquet")
-    )
+#: CAS-log record kinds that change no rows (skipped, never a hole)
+_TXN_MAINTENANCE_KINDS = {"compact", "optimize_zorder", "optimize_binpack"}
 
 
 def _arrow_ddl(field) -> str:
@@ -149,25 +133,188 @@ def _arrow_ddl(field) -> str:
     )
 
 
+def _sidecar_files(version_dir: str) -> Optional[list[str]]:
+    """Sorted parquet files of a version's ``_changes/`` sidecar, or
+    None when the version has no sidecar (the caller's hole rule
+    decides what that means)."""
+    ch = os.path.join(version_dir, _CHANGES_DIR)
+    if not os.path.isdir(ch):
+        return None
+    return sorted(
+        os.path.join(ch, f) for f in os.listdir(ch) if f.endswith(".parquet")
+    )
+
+
+class _Listing:
+    """Per-protocol answer to "which change files does this root
+    hold": subclasses define ``head()``, ``files(lo, hi)`` (every
+    change file of the commits in ``(lo, hi]``, commit order, each
+    with its ``[(column, value), ...]`` constants; holes raise) and
+    ``_sidecar_dirs_newest_first``. Plain fields only — the readers
+    holding it are pickled to the Python workers."""
+
+    #: offset JSON key, position before any commit, constant-column DDL
+    OFFSET_KEY: str
+    GENESIS: object
+    CONSTANTS_DDL: str
+    KIND: str
+
+    def __init__(self, root: str, start=None):
+        self.root = root
+        self.start = self.GENESIS if start is None else start
+
+    def newest_fields(self) -> list:
+        """Arrow fields of the NEWEST sidecar — the per-root schema
+        anchor (anchoring on the first would silently hide every
+        later-added column; the read path projects older files by
+        name with typed NULLs)."""
+        import pyarrow.parquet as pq
+
+        for vd in self._sidecar_dirs_newest_first():
+            files = _sidecar_files(vd)
+            if files:
+                return list(pq.read_schema(files[0]))
+        raise ValueError(
+            f"{self.KIND} {self.root!r} has no cdf-enabled commits: "
+            "commit with cdf=True before reading the change feed"
+        )
+
+
+class _StoreListing(_Listing):
+    """A ``DocumentStore`` root: positions are version NAMES."""
+
+    OFFSET_KEY, GENESIS, KIND = "last", "", "store"
+    CONSTANTS_DDL = "commit_ms bigint"
+
+    def _versions(self) -> list[str]:
+        """Version basenames committed AT OR BEFORE the current
+        pointer, oldest first. Bounding by the pointer matters: a
+        version directory exists on disk BEFORE its pointer flip
+        (data, then sidecars, then flip), so an unbounded listing
+        could read a commit that is still in flight — the flip is the
+        commit point, exactly like the store's own readers."""
+        try:
+            with open(os.path.join(self.root, _POINTER)) as fh:
+                cur = json.load(fh)["version_dir"]
+        except FileNotFoundError:
+            return []
+        return sorted(
+            d
+            for d in os.listdir(self.root)
+            if d.startswith("v-")
+            and os.path.isdir(os.path.join(self.root, d))
+            and d <= cur
+        )
+
+    def head(self) -> str:
+        versions = self._versions()
+        return versions[-1] if versions else self.GENESIS
+
+    def files(self, lo: str, hi: str) -> Iterator[tuple[str, list]]:
+        for v in self._versions():
+            if not lo < v <= hi:
+                continue
+            paths = _sidecar_files(os.path.join(self.root, v))
+            if paths is None:
+                raise ValueError(
+                    f"store version {v!r} has no {_CHANGES_DIR}/ "
+                    "sidecar: it was committed without cdf=True (or "
+                    "vacuumed); the change feed cannot serve a range "
+                    "with holes"
+                )
+            for path in paths:
+                yield path, [("commit_ms", version_commit_ms(v))]
+
+    def _sidecar_dirs_newest_first(self):
+        for v in reversed(self._versions()):
+            yield os.path.join(self.root, v)
+
+
+class _LogListing(_Listing):
+    """A ``TransactionalParquetBackend`` root: positions are log
+    VERSIONS; ``start`` is ``startingVersion - 1``."""
+
+    OFFSET_KEY, GENESIS, KIND = "v", 0, "transactional store"
+    CONSTANTS_DDL = "commit_ms bigint, commit_version bigint"
+
+    def _index(self) -> dict[int, str]:
+        """version -> record path: ONE directory listing, no JSON
+        parsing — ``latestOffset`` fires every trigger and must not
+        re-parse an O(total commits) record set to learn the head."""
+        log = os.path.join(self.root, "_log")
+        if not os.path.isdir(log):
+            raise ValueError(
+                f"{self.root!r} has no _log/: not a transactional store"
+            )
+        index = {}
+        for f in os.listdir(log):
+            if not f.endswith(".json") or f.startswith("_"):
+                continue
+            try:
+                index[int(f[:-5])] = os.path.join(log, f)
+            except ValueError:
+                continue
+        return index
+
+    def _record(self, path: str) -> dict:
+        with open(path) as fh:
+            return json.load(fh)
+
+    def head(self) -> int:
+        # never below the start: a feed started past the head must not
+        # report an offset that re-opens the versions it was told to skip
+        return max(max(self._index(), default=0), self.start)
+
+    def files(self, lo: int, hi: int) -> Iterator[tuple[str, list]]:
+        lo, hi = int(lo), int(hi)
+        index = self._index()
+        for v in sorted(index):
+            if not lo < v <= hi:
+                continue
+            rec = self._record(index[v])
+            kind = (rec.get("op") or {}).get("kind", "snapshot")
+            if kind in _TXN_MAINTENANCE_KINDS:
+                continue  # logical no-op: nothing to feed, nothing to fail
+            paths = _sidecar_files(os.path.join(self.root, rec["version_dir"]))
+            if paths is None:
+                raise ValueError(
+                    f"log version {v} ({kind}) has no {_CHANGES_DIR}/ "
+                    "sidecar (not committed with cdf=True, or its data "
+                    "was retention-vacuumed): start the feed past it "
+                    "with .option('startingVersion', N) — a feed with "
+                    "silent holes would under-maintain every consumer"
+                )
+            for path in paths:
+                yield path, [
+                    ("commit_ms", int(rec["ts_ms"])), ("commit_version", v)
+                ]
+
+    def _sidecar_dirs_newest_first(self):
+        # a generator: records are parsed newest first and the walk
+        # stops at the first one with a sidecar, not after the whole log
+        index = self._index()
+        for v in sorted(index, reverse=True):
+            rec = self._record(index[v])
+            yield os.path.join(self.root, rec["version_dir"])
+
+
 class ChangeFilePartition(InputPartition):
-    """One change file of one committed version (picklable plain
+    """One change file plus its constant columns (picklable plain
     fields only — ships to executors)."""
 
-    def __init__(self, path: str, commit_ms: int):
+    def __init__(self, path: str, constants: list):
         self.path = path
-        self.commit_ms = commit_ms
+        self.constants = constants
 
 
-def _sidecar_batches(
-    path: str, schema: T.StructType, extra: list[tuple[str, object]]
-):
+def _sidecar_batches(path: str, schema: T.StructType, extra: list):
     """Executor-side read of one change file as ARROW RECORD BATCHES —
     the Python DataSource API's Arrow path: columns are projected BY
     NAME onto the query schema (an older sidecar missing a
     later-added column yields typed NULLs — additive schema evolution
     tolerated, and the MULTIPLEXED reader projects each feed's
     narrower sidecar onto the union schema the same way) and the
-    per-partition constants in ``extra`` (commit_ms, commit_version,
+    partition constants in ``extra`` (commit_ms, commit_version,
     feed tag) are appended as constant columns (int64 or string by
     value type). Yielding ``pyarrow.RecordBatch`` instead of row
     tuples keeps the feed columnar end to end — no ``to_pylist``
@@ -199,33 +346,79 @@ def _sidecar_batches(
     yield from pa.table(arrays, schema=pa.schema(fields)).to_batches()
 
 
-def _newest_sidecar_fields(root: str) -> list:
-    """Arrow fields of the NEWEST committed sidecar — the per-root
-    schema anchor (additive schema evolution means later sidecars
-    carry a SUPERSET of columns; anchoring on the first would
-    silently hide every later-added column; anchoring on the newest
-    projects older files by name with typed NULLs — the read path's
-    contract)."""
-    import pyarrow.parquet as pq
+class ChangeFeedStreamReader(DataSourceStreamReader):
+    """Exactly-once tail of one or more listings, one offset per feed.
 
-    for v in reversed(_committed_versions(root)):
-        ch = os.path.join(root, v, _CHANGES_DIR)
-        if os.path.isdir(ch):
-            files = [
-                f for f in os.listdir(ch) if f.endswith(".parquet")
+    Position-boundary slicing (not counts) makes every replayed batch
+    read exactly the recorded range regardless of later commits.
+    Offsets live in Spark's checkpoint: ``{KEY: position}`` for one
+    untagged feed, ``{KEY: {tag: position}}`` when ``tags`` name the
+    feeds (and each row carries its ``_ffs_feed`` tag)."""
+
+    def __init__(
+        self,
+        listings: list[_Listing],
+        tags: Optional[list[str]],
+        schema: T.StructType,
+    ):
+        self.listings = listings
+        self.tags = tags
+        self.schema_ = schema
+
+    def _offset(self, positions: list) -> dict:
+        key = self.listings[0].OFFSET_KEY
+        if self.tags is None:
+            return {key: positions[0]}
+        return {key: dict(zip(self.tags, positions))}
+
+    def _positions(self, offset: dict) -> list:
+        got = offset[self.listings[0].OFFSET_KEY]
+        if self.tags is None:
+            return [got]
+        return [
+            got.get(t, listing.GENESIS)
+            for t, listing in zip(self.tags, self.listings)
+        ]
+
+    def initialOffset(self) -> dict:
+        return self._offset([li.start for li in self.listings])
+
+    def latestOffset(self) -> dict:
+        return self._offset([li.head() for li in self.listings])
+
+    def partitions(self, start: dict, end: dict) -> list[ChangeFilePartition]:
+        parts = []
+        bounds = zip(self._positions(start), self._positions(end))
+        for i, (listing, (lo, hi)) in enumerate(zip(self.listings, bounds)):
+            tag = [] if self.tags is None else [(_FEED_COL, self.tags[i])]
+            parts += [
+                ChangeFilePartition(path, constants + tag)
+                for path, constants in listing.files(lo, hi)
             ]
-            if files:
-                return list(pq.read_schema(os.path.join(ch, files[0])))
-    raise ValueError(
-        f"store {root!r} has no cdf-enabled commits: commit with "
-        "cdf=True before reading the change feed"
-    )
+        return parts
+
+    def read(self, partition: ChangeFilePartition):
+        return _sidecar_batches(
+            partition.path, self.schema_, partition.constants
+        )
+
+    def commit(self, end: dict) -> None:
+        pass  # offsets live in Spark's checkpoint; commits are immutable
 
 
-#: feed-tag column the MULTIPLEXED reader appends (same name the
-#: consumers' hand-built tagged union used, so downstream code is
-#: byte-identical either way)
-_FEED_COL = "_ffs_feed"
+class ChangeFeedBatchReader(DataSourceReader):
+    """The recorded feed as one batch frame: the stream's partitions
+    between its initial and its latest offset."""
+
+    def __init__(self, stream: ChangeFeedStreamReader):
+        self.stream = stream
+
+    def partitions(self) -> list[ChangeFilePartition]:
+        s = self.stream
+        return s.partitions(s.initialOffset(), s.latestOffset())
+
+    def read(self, partition: ChangeFilePartition):
+        return self.stream.read(partition)
 
 
 class StoreCDFDataSource(DataSource):
@@ -233,13 +426,12 @@ class StoreCDFDataSource(DataSource):
     store_root)`` — batch reads the full recorded feed; streaming
     tails it with exactly-once version-name offsets.
 
-    MULTIPLEXED form (round 11, optimization):
-    ``.option("paths", "root1,root2,...")` with
-    ``.option("tags", "fact,dim0,...")`` tails SEVERAL stores'
-    feeds through ONE source — the schema is the by-name union of
-    the per-root sidecar schemas (typed NULLs where a feed lacks a
+    MULTIPLEXED form: ``.option("paths", "root1,root2,...")`` with
+    ``.option("tags", "fact,dim0,...")`` tails SEVERAL stores' feeds
+    through ONE source — the schema is the by-name union of the
+    per-root sidecar schemas (typed NULLs where a feed lacks a
     column — exactly the ``unionByName(allowMissingColumns=True)``
-    frame consumers previously built from N separate sources) plus
+    frame consumers would build from N separate sources) plus
     ``commit_ms`` and a ``_ffs_feed`` tag column. Every Python
     streaming source costs one dedicated runner PROCESS per query
     start (~1-1.5 s each: interpreter + pyspark import + handshake;
@@ -253,9 +445,9 @@ class StoreCDFDataSource(DataSource):
     def name(cls) -> str:
         return "store_cdf"
 
-    def _mux(self) -> Optional[tuple[list[str], list[str]]]:
+    def _feeds(self) -> tuple[list[_Listing], Optional[list[str]]]:
         if "paths" not in self.options:
-            return None
+            return [_StoreListing(self.options["path"])], None
         roots = [p for p in self.options["paths"].split(",") if p]
         tags = [
             t
@@ -279,174 +471,53 @@ class StoreCDFDataSource(DataSource):
                 "store_cdf: duplicate feed tags — each multiplexed "
                 "feed needs a distinct tag (offsets are per tag)"
             )
-        return roots, tags
+        return [_StoreListing(r) for r in roots], tags
 
     def schema(self) -> str:
-        mux = self._mux()
-        if mux is None:
-            fields = _newest_sidecar_fields(self.options["path"])
-            cols = ", ".join(
-                f"`{f.name}` {_arrow_ddl(f)}" for f in fields
-            )
-            return f"{cols}, commit_ms bigint"
-        roots, _tags = mux
+        listings, tags = self._feeds()
         # by-name union across feeds, first occurrence anchors the
-        # type — the unionByName(allowMissingColumns) shape
+        # type and the position — the unionByName(allowMissingColumns)
+        # shape (a single feed is the one-element case)
         seen: dict[str, str] = {}
-        order: list[str] = []
-        for root in roots:
-            for f in _newest_sidecar_fields(root):
+        for listing in listings:
+            for f in listing.newest_fields():
                 if f.name not in seen:
                     seen[f.name] = _arrow_ddl(f)
-                    order.append(f.name)
-        cols = ", ".join(f"`{n}` {seen[n]}" for n in order)
-        return f"{cols}, commit_ms bigint, `{_FEED_COL}` string"
+        cols = [f"`{n}` {t}" for n, t in seen.items()]
+        cols.append(listings[0].CONSTANTS_DDL)
+        if tags is not None:
+            cols.append(f"`{_FEED_COL}` string")
+        return ", ".join(cols)
 
-    def reader(self, schema: T.StructType) -> "StoreCDFBatchReader":
-        if self._mux() is not None:
+    def reader(self, schema: T.StructType) -> ChangeFeedBatchReader:
+        listings, tags = self._feeds()
+        if tags is not None:
             raise ValueError(
                 "store_cdf: the multiplexed form is streaming-only"
             )
-        return StoreCDFBatchReader(self.options["path"], schema)
-
-    def streamReader(
-        self, schema: T.StructType
-    ) -> "DataSourceStreamReader":
-        mux = self._mux()
-        if mux is not None:
-            return StoreCDFMuxStreamReader(mux[0], mux[1], schema)
-        return StoreCDFStreamReader(self.options["path"], schema)
-
-
-class StoreCDFBatchReader(DataSourceReader):
-    """The whole recorded feed as one batch frame (every committed
-    version's sidecar) — the batch twin of the stream."""
-
-    def __init__(self, root: str, schema: T.StructType):
-        self.root = root
-        self.schema_ = schema
-
-    def partitions(self) -> list[ChangeFilePartition]:
-        parts = []
-        for v in _committed_versions(self.root):
-            ms = version_commit_ms(v)
-            for path in _change_files(self.root, v):
-                parts.append(ChangeFilePartition(path, ms))
-        return parts
-
-    def read(self, partition: ChangeFilePartition):
-        return _sidecar_batches(
-            partition.path, self.schema_,
-            [("commit_ms", partition.commit_ms)],
+        return ChangeFeedBatchReader(
+            ChangeFeedStreamReader(listings, tags, schema)
         )
 
-
-class StoreCDFStreamReader(DataSourceStreamReader):
-    """Exactly-once CDF tail: offset = newest consumed version NAME.
-
-    Name-boundary slicing (not counts) makes every replayed batch
-    read exactly the recorded version range regardless of later
-    commits — the lesson the record-feed source's offset already
-    encodes. Offsets are checkpointed by Spark; a forced restart
-    resumes from the last committed batch's end offset."""
-
-    def __init__(self, root: str, schema: T.StructType):
-        self.root = root
-        self.schema_ = schema
-
-    def initialOffset(self) -> dict:
-        return {"last": ""}
-
-    def latestOffset(self) -> dict:
-        versions = _committed_versions(self.root)
-        return {"last": versions[-1] if versions else ""}
-
-    def partitions(
-        self, start: dict, end: dict
-    ) -> list[ChangeFilePartition]:
-        lo, hi = start.get("last", ""), end.get("last", "")
-        parts = []
-        for v in _committed_versions(self.root):
-            if not (v > lo and v <= hi):
-                continue
-            ms = version_commit_ms(v)
-            for path in _change_files(self.root, v):
-                parts.append(ChangeFilePartition(path, ms))
-        return parts
-
-    def read(self, partition: ChangeFilePartition):
-        return _sidecar_batches(
-            partition.path, self.schema_,
-            [("commit_ms", partition.commit_ms)],
-        )
-
-    def commit(self, end: dict) -> None:
-        # offsets live in Spark's checkpoint; the source keeps no
-        # state of its own (versions are immutable until vacuum)
-        pass
+    def streamReader(self, schema: T.StructType) -> ChangeFeedStreamReader:
+        return ChangeFeedStreamReader(*self._feeds(), schema)
 
 
-class MuxChangeFilePartition(InputPartition):
-    """One change file of one committed version of one multiplexed
-    feed (picklable plain fields only)."""
+class TxnCDFDataSource(StoreCDFDataSource):
+    """``spark.read/readStream.format("store_cdf_txn").option("path",
+    backend_root)`` — the change feed of the lock-free multi-writer
+    log; streaming offsets are the dense integer log versions.
+    ``startingVersion`` (default 1) is the first version served:
+    versions below are never opened — the escape hatch for
+    retention-vacuumed or pre-CDF history."""
 
-    def __init__(self, path: str, commit_ms: int, tag: str):
-        self.path = path
-        self.commit_ms = commit_ms
-        self.tag = tag
+    @classmethod
+    def name(cls) -> str:
+        return "store_cdf_txn"
 
-
-class StoreCDFMuxStreamReader(DataSourceStreamReader):
-    """Exactly-once CDF tail over SEVERAL stores through one source:
-    the offset is a per-tag map of newest consumed version names, so
-    each feed keeps the exact name-boundary replay semantics of the
-    single-feed reader — one runner process per query instead of one
-    per feed (see :class:`StoreCDFDataSource`)."""
-
-    def __init__(
-        self, roots: list[str], tags: list[str], schema: T.StructType
-    ):
-        self.roots = roots
-        self.tags = tags
-        self.schema_ = schema
-
-    def initialOffset(self) -> dict:
-        return {"last": {t: "" for t in self.tags}}
-
-    def latestOffset(self) -> dict:
-        out = {}
-        for t, r in zip(self.tags, self.roots):
-            versions = _committed_versions(r)
-            out[t] = versions[-1] if versions else ""
-        return {"last": out}
-
-    def partitions(
-        self, start: dict, end: dict
-    ) -> list[MuxChangeFilePartition]:
-        lo_map = start.get("last", {})
-        hi_map = end.get("last", {})
-        parts = []
-        for t, r in zip(self.tags, self.roots):
-            lo, hi = lo_map.get(t, ""), hi_map.get(t, "")
-            for v in _committed_versions(r):
-                if not (v > lo and v <= hi):
-                    continue
-                ms = version_commit_ms(v)
-                for path in _change_files(r, v):
-                    parts.append(MuxChangeFilePartition(path, ms, t))
-        return parts
-
-    def read(self, partition: MuxChangeFilePartition):
-        return _sidecar_batches(
-            partition.path, self.schema_,
-            [
-                ("commit_ms", partition.commit_ms),
-                (_FEED_COL, partition.tag),
-            ],
-        )
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in Spark's checkpoint
+    def _feeds(self) -> tuple[list[_Listing], None]:
+        start = int(self.options.get("startingVersion", 1)) - 1
+        return [_LogListing(self.options["path"], start)], None
 
 
 def load_feeds(
@@ -466,7 +537,7 @@ def load_feeds(
             "options are comma-separated and cannot encode them"
         )
     feed_cols = [
-        [f.name for f in _newest_sidecar_fields(r)] + ["commit_ms"]
+        [f.name for f in _StoreListing(r).newest_fields()] + ["commit_ms"]
         for r in roots
     ]
     stream = (
@@ -479,221 +550,16 @@ def load_feeds(
 
 
 def register(spark) -> bool:
-    """Register the connector on a session; returns False when the
-    pyspark.sql.datasource API is unavailable (pyspark < 4)."""
+    """Register the ``store_cdf`` connector on a session; returns False
+    when the pyspark.sql.datasource API is unavailable (pyspark < 4)."""
     if not _HAS_DATASOURCE_API:
         return False
     spark.dataSource.register(StoreCDFDataSource)
     return True
 
 
-# -- CDF over the LOCK-FREE MULTI-WRITER LOG ----------------------------------
-#
-# The TransactionalParquetBackend's commit log gives the feed an even
-# stronger offset than version NAMES: versions are DENSE INTEGERS
-# (exactly one writer owns N+1), so the stream offset is simply the
-# newest consumed log version. Maintenance commits (compact /
-# optimize_zorder) are LOGICAL NO-OPS and are skipped — Delta CDF
-# skips OPTIMIZE commits the same way; any other commit in a consumed
-# range that lacks a sidecar fails loudly (a feed with silent holes
-# is worse than no feed).
-
-_TXN_MAINTENANCE_KINDS = {"compact", "optimize_zorder", "optimize_binpack"}
-
-
-def _txn_version_index(root: str) -> dict[int, str]:
-    """version -> record path for a ``TransactionalParquetBackend``
-    log: ONE directory listing, no JSON parsing — the streaming hot
-    path (``latestOffset`` fires every trigger) must not re-parse an
-    O(total commits) record set just to learn the head."""
-    log = os.path.join(root, "_log")
-    if not os.path.isdir(log):
-        raise ValueError(f"{root!r} has no _log/: not a transactional store")
-    index = {}
-    for f in os.listdir(log):
-        if not f.endswith(".json") or f.startswith("_"):
-            continue
-        try:
-            index[int(f[:-5])] = os.path.join(log, f)
-        except ValueError:
-            continue
-    return index
-
-
-def _txn_records(
-    root: str, lo: int = 0, hi: Optional[int] = None
-) -> list[tuple[int, dict]]:
-    """Committed log records with ``lo < version <= hi``, version
-    order — JSON is parsed ONLY for the requested range, so a
-    micro-batch pays for its own versions, never the table's
-    lifetime."""
-    index = _txn_version_index(root)
-    out = []
-    for v in sorted(index):
-        if v <= lo or (hi is not None and v > hi):
-            continue
-        with open(index[v]) as fh:
-            out.append((v, json.load(fh)))
-    return out
-
-
-class TxnChangeFilePartition(InputPartition):
-    """One change file of one committed log version."""
-
-    def __init__(self, path: str, commit_ms: int, commit_version: int):
-        self.path = path
-        self.commit_ms = commit_ms
-        self.commit_version = commit_version
-
-
-def _txn_feed_partitions(
-    root: str, recs: list[tuple[int, dict]]
-) -> list[TxnChangeFilePartition]:
-    parts = []
-    for v, rec in recs:
-        kind = (rec.get("op") or {}).get("kind", "snapshot")
-        if kind in _TXN_MAINTENANCE_KINDS:
-            continue  # logical no-op: nothing to feed, nothing to fail
-        ch = os.path.join(root, rec["version_dir"], _CHANGES_DIR)
-        if not os.path.isdir(ch):
-            raise ValueError(
-                f"log version {v} ({kind}) has no {_CHANGES_DIR}/ "
-                "sidecar (not committed with cdf=True, or its data "
-                "was retention-vacuumed): start the feed past it "
-                "with .option('startingVersion', N) — a feed with "
-                "silent holes would under-maintain every consumer"
-            )
-        files = sorted(
-            os.path.join(ch, f)
-            for f in os.listdir(ch)
-            if f.endswith(".parquet")
-        )
-        for path in files:
-            parts.append(
-                TxnChangeFilePartition(path, int(rec["ts_ms"]), v)
-            )
-    return parts
-
-
-class TxnCDFDataSource(DataSource):
-    """``spark.read/readStream.format("store_cdf_txn").option("path",
-    backend_root)`` — the change feed of the lock-free multi-writer
-    log; streaming offsets are the dense integer log versions."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "store_cdf_txn"
-
-    def _starting_version(self) -> int:
-        """First version the feed serves (default 1). Versions below
-        are never opened — the escape hatch for retention-vacuumed or
-        pre-CDF history."""
-        return int(self.options.get("startingVersion", 1))
-
-    def schema(self) -> str:
-        import pyarrow.parquet as pq
-
-        root = self.options["path"]
-        # newest sidecar anchors the schema (additive evolution —
-        # same argument as StoreCDFDataSource.schema)
-        for _v, rec in reversed(_txn_records(root)):
-            ch = os.path.join(root, rec["version_dir"], _CHANGES_DIR)
-            if os.path.isdir(ch):
-                files = [
-                    f for f in os.listdir(ch) if f.endswith(".parquet")
-                ]
-                if files:
-                    sch = pq.read_schema(os.path.join(ch, files[0]))
-                    cols = ", ".join(
-                        f"`{f.name}` {_arrow_ddl(f)}" for f in sch
-                    )
-                    return (
-                        f"{cols}, commit_ms bigint, commit_version bigint"
-                    )
-        raise ValueError(
-            f"transactional store {root!r} has no cdf-enabled commits: "
-            "commit with cdf=True before reading the change feed"
-        )
-
-    def reader(self, schema: T.StructType) -> "TxnCDFBatchReader":
-        return TxnCDFBatchReader(
-            self.options["path"], schema, self._starting_version()
-        )
-
-    def streamReader(self, schema: T.StructType) -> "TxnCDFStreamReader":
-        return TxnCDFStreamReader(
-            self.options["path"], schema, self._starting_version()
-        )
-
-
-class TxnCDFBatchReader(DataSourceReader):
-    def __init__(
-        self, root: str, schema: T.StructType, starting_version: int = 1
-    ):
-        self.root = root
-        self.schema_ = schema
-        self.starting_version = starting_version
-
-    def partitions(self) -> list[TxnChangeFilePartition]:
-        return _txn_feed_partitions(
-            self.root, _txn_records(self.root, lo=self.starting_version - 1)
-        )
-
-    def read(self, partition: TxnChangeFilePartition):
-        return _sidecar_batches(
-            partition.path, self.schema_,
-            [
-                ("commit_ms", partition.commit_ms),
-                ("commit_version", partition.commit_version),
-            ],
-        )
-
-
-class TxnCDFStreamReader(DataSourceStreamReader):
-    """Exactly-once CDF tail over the commit log: offset = newest
-    consumed log VERSION (dense integers — exactly one writer owns
-    N+1, so boundary slicing is exact no matter how many rivals land
-    between batches or during a restart). ``startingVersion`` begins
-    the feed past retention-vacuumed or pre-CDF history."""
-
-    def __init__(
-        self, root: str, schema: T.StructType, starting_version: int = 1
-    ):
-        self.root = root
-        self.schema_ = schema
-        self.starting_version = starting_version
-
-    def initialOffset(self) -> dict:
-        return {"v": self.starting_version - 1}
-
-    def latestOffset(self) -> dict:
-        # one directory listing, no JSON parse — fires every trigger
-        index = _txn_version_index(self.root)
-        return {"v": max(index) if index else 0}
-
-    def partitions(
-        self, start: dict, end: dict
-    ) -> list[TxnChangeFilePartition]:
-        lo, hi = int(start.get("v", 0)), int(end.get("v", 0))
-        return _txn_feed_partitions(
-            self.root, _txn_records(self.root, lo=lo, hi=hi)
-        )
-
-    def read(self, partition: TxnChangeFilePartition):
-        return _sidecar_batches(
-            partition.path, self.schema_,
-            [
-                ("commit_ms", partition.commit_ms),
-                ("commit_version", partition.commit_version),
-            ],
-        )
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in Spark's checkpoint; log records are immutable
-
-
 def register_txn(spark) -> bool:
-    """Register the transactional-log CDF connector; False when the
+    """Register the ``store_cdf_txn`` connector; False when the
     pyspark.sql.datasource API is unavailable (pyspark < 4)."""
     if not _HAS_DATASOURCE_API:
         return False

@@ -429,6 +429,39 @@ def run_stream_to_memory(
     return sess.table(query_name)
 
 
+def _replayed(store, query_name: str, epoch_id) -> bool:
+    """The monotone replay check of every exactly-once sink here: an
+    epoch at or below the store's recorded ``txn`` version for
+    ``query_name`` is already folded in (Delta txnAppId/txnVersion).
+
+    ``<=`` not ``==``: a FRESH checkpoint replays the whole history
+    from epoch 0, and every epoch at or below the recorded version is
+    already in the store — an equality check would skip only the
+    latest and double-apply the rest. Fresh-checkpoint epoch numbering
+    may batch several old inputs into one epoch; the monotone check
+    still skips exactly the prefix the store has seen."""
+    last = store.last_txn(query_name)
+    return last is not None and int(epoch_id) <= int(last)
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    fn,
+    checkpoint_dir: str,
+    query_name: str,
+    output_mode: str = "append",
+):
+    """Start ``fn(batch_df, epoch_id)`` as the stream's foreachBatch
+    sink under ``checkpoint_dir`` (offsets + commit log)."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(query_name)
+        .start()
+    )
+
+
 def continuous_near_dedup(
     stream: DataFrame,
     registry_dir: str,
@@ -540,12 +573,8 @@ def continuous_near_dedup(
         finally:
             bands.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
+    return _start_foreach_batch(
+        stream, dedup_batch, checkpoint_dir, query_name
     )
 
 
@@ -584,16 +613,8 @@ def continuous_sync(
     strategy = get_strategy(spec.update_type)
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # <= not ==: a FRESH checkpoint replays the whole history from
-        # epoch 0, and every epoch at or below the recorded version is
-        # already folded into the store (the Delta txnVersion rule) —
-        # an equality check would skip only the latest and double-apply
-        # the rest. NOTE: fresh-checkpoint epoch numbering may batch
-        # several old files into one epoch; the monotone version check
-        # still skips exactly the prefix the store has seen.
-        last = store.last_txn(query_name)
-        if last is not None and int(epoch_id) <= int(last):
-            return  # replay of an already-committed epoch
+        if _replayed(store, query_name, epoch_id):
+            return
         target = store.read()
         if target is None:
             target = batch_df.sparkSession.createDataFrame([], batch_df.schema)
@@ -602,12 +623,8 @@ def continuous_sync(
         # version directory that commit() will supersede.
         store.commit(post.localCheckpoint(), txn=(query_name, str(epoch_id)))
 
-    return (
-        stream.writeStream.foreachBatch(sync_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
+    return _start_foreach_batch(
+        stream, sync_batch, checkpoint_dir, query_name, output_mode
     )
 
 
@@ -678,6 +695,104 @@ def _delta_merge_guard(delta: DataFrame, group_col: str) -> None:
         )
 
 
+def _summary_delta(
+    changes: DataFrame, group_col: str, count_col: str, sum_map: dict
+) -> DataFrame:
+    """Signed per-group corrections of a changelog, named like the
+    summary's columns (``count_col`` + every ``sum_map`` target)."""
+    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
+        rollup_delta,
+    )
+
+    return rollup_delta(changes, group_col, list(sum_map.values())).select(
+        F.col(group_col),
+        F.col("d_count").alias(count_col),
+        *[F.col(f"d_{src}").alias(dst) for dst, src in sum_map.items()],
+    )
+
+
+def _fold_summary(
+    store: DocumentStore,
+    delta: DataFrame,
+    group_col: str,
+    count_col: str,
+    sum_cols,
+    txn: tuple[str, str],
+) -> dict:
+    """Fold signed per-group corrections into an additive summary
+    store in ONE commit under ``txn``; returns the commit's stats.
+
+    Bootstrap (empty store): the corrections ARE the summary — a
+    plain commit of the positive-count groups, behind the explicit
+    NULL-group probe (once per consumer lifetime). Otherwise one
+    deletion-vector MERGE, O(touched groups): matched groups add
+    (``t.n + s.n``, sums ``coalesce``-added), groups whose count
+    reaches zero take the matched-DELETE clause, new groups insert;
+    NULL-group rejection rides the merge's fused validation action
+    (``reject_null_source_key``) — no standalone guard job.
+
+    ``delta`` is persisted for the call: the guard, the merge's
+    duplicate-source check and its clause-tagged join each execute
+    the plan, and each execution would otherwise re-read the
+    micro-batch through the Python change-feed source (a foreachBatch
+    frame is not materialized; optimization guide §4/§5). The
+    emptiness test reads the pointer, not ``read()``: a DataFrame
+    build costs a footer/schema round-trip per epoch."""
+    delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if store.current_version_dir() is None:
+            _delta_merge_guard(delta, group_col)
+            store.commit(delta.filter(F.col(count_col) > 0), txn=txn)
+            return {"bootstrap": True}
+        _out, counts = store.merge_into(
+            delta,
+            when_matched_update={
+                count_col: f"t.{count_col} + s.{count_col}",
+                **{
+                    dst: f"coalesce(t.{dst}, 0) + coalesce(s.{dst}, 0)"
+                    for dst in sum_cols
+                },
+            },
+            when_matched_delete=f"t.{count_col} + s.{count_col} <= 0",
+            when_not_matched_insert=True,
+            txn=txn,
+            reject_null_source_key=True,
+        )
+        return counts
+    finally:
+        delta.unpersist()
+
+
+class _FeedPin:
+    """How one change feed pins its upstream snapshot and orders its
+    changelog. A multi-writer log's feed (``store_cdf_txn``) carries
+    ``commit_version``: version order is authoritative there and two
+    hosts' wall clocks are not, so it pins with ``read_version`` and
+    telescopes by version — after dropping ``commit_ms``, which
+    ``collapse_changelog`` would treat as payload and demand an
+    ``old_`` twin for. A single-writer store feed pins by
+    ``commit_ms`` through ``read_as_of``. Feeds of both kinds mix
+    freely in one consumer: each feed has its own pin."""
+
+    def __init__(self, columns: list):
+        self.by_version = "commit_version" in columns
+        self.col = "commit_version" if self.by_version else "commit_ms"
+
+    def read(self, store, pin) -> Optional[DataFrame]:
+        if self.by_version:
+            return store.read_version(int(pin))
+        return store.read_as_of(int(pin))
+
+    def collapse(self, rows: DataFrame, key: str) -> DataFrame:
+        from far_finer_airtable_firestore_sync_spark.operators.ivm import (
+            collapse_changelog,
+        )
+
+        if self.by_version:
+            rows = rows.drop("commit_ms")
+        return collapse_changelog(rows, key, order_col=self.col)
+
+
 def cdf_rollup_sync(
     changes_stream: DataFrame,
     store: DocumentStore,
@@ -708,87 +823,25 @@ def cdf_rollup_sync(
     matched groups fold additively (``t.n + s.n``), groups whose
     count reaches zero take the matched-DELETE clause, new groups
     insert — as ONE deletion-vector commit under the same
-    ``txn=(query_name, epoch)`` marker. A 10⁹-group rollup fed by a
-    sliver batch now links its files and writes the sliver. The
-    previous shape recomputed and re-committed the FULL summary
-    every epoch. ``stats``, when a list, receives one dict per
+    ``txn=(query_name, epoch)`` marker (:func:`_fold_summary`). A
+    10⁹-group rollup fed by a sliver batch links its files and
+    writes the sliver. ``stats``, when a list, receives one dict per
     committed epoch: the merge clause counts — what the entry's
     "write rows == touched groups" assertion pins."""
-    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-        rollup_delta,
-    )
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        last = store.last_txn(query_name)
-        if last is not None and int(epoch_id) <= int(last):
-            return  # replay of an already-committed epoch
-        # Persist the per-group corrections: the NULL-group guard, the
-        # merge's duplicate-source guard and the clause-tagged join
-        # each execute this plan, and each execution re-reads the
-        # micro-batch through the Python change-feed source (a
-        # foreachBatch frame is NOT materialized — every action
-        # replays the source; optimization guide §4/§5). One sliver-
-        # sized cache turns 3 feed reads + aggregations into 1.
-        delta = rollup_delta(
-            batch_df, group_col, list(sum_map.values())
-        ).select(
-            F.col(group_col),
-            F.col("d_count").alias(count_col),
-            *[
-                F.col(f"d_{src}").alias(dst)
-                for dst, src in sum_map.items()
-            ],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # pointer check, not read(): the bootstrap test needs only
-            # "is the store empty", and building the DataFrame costs a
-            # parquet footer/schema round-trip per epoch (round 12)
-            if store.current_version_dir() is None:
-                # bootstrap: the first batch's corrections ARE the
-                # summary (no merge runs, so the NULL-group rejection
-                # needs its explicit probe here — once per consumer
-                # lifetime, not per epoch)
-                _delta_merge_guard(delta, group_col)
-                init = delta.filter(F.col(count_col) > 0)
-                # commit() runs exactly ONE action on its input and
-                # delta is already persisted (the guard materialized
-                # it), so the former eager localCheckpoint here was a
-                # redundant extra pass + cache (round 12, guide §5)
-                store.commit(init, txn=(query_name, str(epoch_id)))
-                if stats is not None:
-                    stats.append(
-                        {"epoch": int(epoch_id), "bootstrap": True}
-                    )
-                return
-            # NULL-group rejection rides the merge's fused validation
-            # action (reject_null_source_key) — zero extra jobs per
-            # epoch vs the former standalone guard + dup-probe pair
-            _out, counts = store.merge_into(
-                delta,
-                when_matched_update={
-                    count_col: f"t.{count_col} + s.{count_col}",
-                    **{
-                        dst: (
-                            f"coalesce(t.{dst}, 0) + coalesce(s.{dst}, 0)"
-                        )
-                        for dst in sum_map
-                    },
-                },
-                when_matched_delete=f"t.{count_col} + s.{count_col} <= 0",
-                when_not_matched_insert=True,
-                txn=(query_name, str(epoch_id)),
-                reject_null_source_key=True,
-            )
-        finally:
-            delta.unpersist()
+        if _replayed(store, query_name, epoch_id):
+            return
+        counts = _fold_summary(
+            store,
+            _summary_delta(batch_df, group_col, count_col, sum_map),
+            group_col, count_col, sum_map, (query_name, str(epoch_id)),
+        )
         if stats is not None:
             stats.append({"epoch": int(epoch_id), **counts})
 
-    return (
-        changes_stream.writeStream.foreachBatch(sync_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
+    return _start_foreach_batch(
+        changes_stream, sync_batch, checkpoint_dir, query_name
     )
 
 
@@ -826,7 +879,14 @@ def cdf_extrema_sync(
       next batch). The pin is ``read_version(max commit_version)``
       when the feed carries log versions (the ``store_cdf_txn``
       multi-writer source — version order is authoritative, wall
-      clocks are not) and ``read_as_of(max commit_ms)`` otherwise.
+      clocks are not) and ``read_as_of(max commit_ms)`` otherwise
+      (:class:`_FeedPin`).
+
+    The first epoch bootstraps the summary as the direct aggregate of
+    the pinned snapshot, which is only what the feed delivered when
+    the feed starts at the upstream's genesis. A log feed whose first
+    version's predecessor already holds live rows (``startingVersion``
+    past live history) raises instead of bootstrapping.
 
     Exactly-once across restarts and foreachBatch retries via the
     same monotone ``txn=(query_name, epoch)`` marker as
@@ -846,14 +906,15 @@ def cdf_extrema_sync(
     Untouched groups stay in their hard-linked files. ``stats``
     (a list) receives the per-epoch merge clause counts."""
     from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-        collapse_changelog,
         incremental_rollup_extrema,
+    )
+    from far_finer_airtable_firestore_sync_spark.sources.store import (
+        _version_live_rows,
     )
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        last = store.last_txn(query_name)
-        if last is not None and int(epoch_id) <= int(last):
-            return  # replay of an already-committed epoch
+        if _replayed(store, query_name, epoch_id):
+            return
         # ONE source read per epoch (round 12, guide §4/§5): the
         # watermark aggregate and the collapsed-changelog
         # materialization below both consume the micro-batch, and a
@@ -866,39 +927,43 @@ def cdf_extrema_sync(
         finally:
             batch_df.unpersist()
 
+    def _check_feed_starts_at_genesis(first_version: int) -> None:
+        # metadata only: the predecessor's footers minus its DV mask
+        prev = first_version - 1
+        if prev < 1:
+            return
+        live = _version_live_rows(
+            upstream._version_path(upstream._read_record(prev))
+        )
+        if live:
+            raise ValueError(
+                f"cdf_extrema_sync: the change feed starts at log "
+                f"version {first_version}, but version {prev} already "
+                f"holds {live} live rows the feed never delivered "
+                "(startingVersion past live history) — the summary "
+                "cannot bootstrap from it; start the feed at "
+                "startingVersion=1"
+            )
+
     def _sync_batch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        # Pin the recompute base by LOG VERSION when the feed carries
-        # one (the store_cdf_txn source): on a multi-writer log the
-        # version order is authoritative, wall clocks are not. The
-        # single-writer store feed pins by commit_ms via read_as_of.
-        if "commit_version" in batch_df.columns:
-            hi_v = batch_df.agg(F.max("commit_version")).first()[0]
-            if hi_v is None:
-                return  # empty batch: nothing to fold
-            base_new_fn = lambda: upstream.read_version(int(hi_v))  # noqa: E731
-            # telescope by LOG VERSION too: two writers' wall clocks
-            # can interleave against the commit order (and the log's
-            # ts_ms has no monotone bump), so ordering the per-key
-            # chain by commit_ms could net the WRONG last image
-            feed, order_col = batch_df.drop("commit_ms"), "commit_version"
-        else:
-            hi = batch_df.agg(F.max("commit_ms")).first()[0]
-            if hi is None:
-                return  # empty batch: nothing to fold, no version churn
-            base_new_fn = lambda: upstream.read_as_of(int(hi))  # noqa: E731
-            feed, order_col = batch_df, "commit_ms"
+        pin = _FeedPin(batch_df.columns)
+        # one action: the snapshot pin, plus the feed's first version
+        # for the bootstrap epoch's genesis check
+        hi, lo = batch_df.agg(F.max(pin.col), F.min(pin.col)).first()
+        if hi is None:
+            return  # empty batch: nothing to fold, no version churn
         if store.current_version_dir() is None:
+            if pin.by_version:
+                _check_feed_starts_at_genesis(int(lo))
             # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2): the
             # first epoch's feed starts at the upstream's genesis (the
-            # store feed always does; on the txn feed, a
-            # startingVersion past live history is outside the summary
-            # consumers' contract — it would under-maintain the
-            # incremental path identically), so the collapsed
-            # changelog nets to exactly the pinned snapshot and the
-            # bootstrap summary IS the direct aggregate of base_new —
-            # the telescoping window, three maintenance joins and
-            # recompute probe all cancel on an empty prior summary.
-            base_new = base_new_fn()
+            # store feed always does; a log feed was checked above),
+            # so the collapsed changelog nets to exactly the pinned
+            # snapshot and the bootstrap summary IS the direct
+            # aggregate of base_new — the telescoping window, three
+            # maintenance joins and recompute probe all cancel on an
+            # empty prior summary.
+            base_new = pin.read(upstream, hi)
             assert base_new is not None  # the batch came from a commit
             store.commit(
                 base_new.groupBy(group_col).agg(
@@ -923,9 +988,7 @@ def cdf_extrema_sync(
                     {"epoch": int(epoch_id), "bootstrap": True}
                 )
             return
-        changes = collapse_changelog(
-            feed, upstream.key_col, order_col=order_col
-        )
+        changes = pin.collapse(batch_df, upstream.key_col)
         # Persist the collapsed changelog: the touched-group set and
         # the three maintenance legs inside
         # ``incremental_rollup_extrema`` (count/sum fold, adds,
@@ -936,7 +999,7 @@ def cdf_extrema_sync(
         changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             base = store.read()  # non-None: bootstrap returned above
-            base_new = base_new_fn()
+            base_new = pin.read(upstream, hi)
             assert base_new is not None  # the batch came from a commit
             # touched groups: adds' group keys (non-delete rows carry a
             # post-image) ∪ retractions' old-group keys (non-insert
@@ -1009,11 +1072,8 @@ def cdf_extrema_sync(
         if stats is not None:
             stats.append({"epoch": int(epoch_id), **counts})
 
-    return (
-        changes_stream.writeStream.foreachBatch(sync_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
+    return _start_foreach_batch(
+        changes_stream, sync_batch, checkpoint_dir, query_name
     )
 
 
@@ -1086,10 +1146,6 @@ def cdf_star_sync(
     which the per-feed slicing below needs."""
     from functools import reduce
 
-    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-        collapse_changelog,
-        rollup_delta,
-    )
     from far_finer_airtable_firestore_sync_spark.sources.store import (
         diff_frames,
     )
@@ -1155,25 +1211,9 @@ def cdf_star_sync(
         parts = [int(x) for x in last.split(":")]
         return parts[0], parts[1:]
 
-    # Per-feed pin column: a multi-writer log's feed (store_cdf_txn)
-    # carries commit_version — pin and telescope by LOG VERSION there
-    # (version order is authoritative on a lock-free log; two hosts'
-    # wall clocks can interleave against the commit order — the
-    # cdf_extrema_sync rule, per feed). A single-writer store feed
-    # pins by commit_ms via read_as_of. Feeds of the two kinds mix
-    # freely: each pin lives in its own marker slot.
-    feed_cols = [fact_cols] + dim_cols
-    pin_cols = [
-        "commit_version" if "commit_version" in c else "commit_ms"
-        for c in feed_cols
-    ]
-
-    def _pinned_read(store, pin: int, by_version: bool):
-        return (
-            store.read_version(int(pin))
-            if by_version
-            else store.read_as_of(int(pin))
-        )
+    # one pin per feed (the cdf_extrema_sync rule, feed by feed); each
+    # pin lives in its own marker slot
+    feed_pins = [_FeedPin(c) for c in [fact_cols] + dim_cols]
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -1199,10 +1239,10 @@ def cdf_star_sync(
                 *[
                     F.max(
                         F.when(
-                            F.col("_ffs_feed") == f, F.col(pc)
+                            F.col("_ffs_feed") == f, F.col(fp.col)
                         )
                     )
-                    for f, pc in zip(feeds, pin_cols)
+                    for f, fp in zip(feeds, feed_pins)
                 ]
             ).first()
         )
@@ -1219,34 +1259,16 @@ def cdf_star_sync(
         fact_rows = batch_df.filter("_ffs_feed = 'fact'").select(
             *fact_cols
         )
-        fact_new = _pinned_read(
-            fact_store, hi_fact, pin_cols[0] == "commit_version"
-        )
+        fact_new = feed_pins[0].read(fact_store, hi_fact)
         assert fact_new is not None  # hi_fact came from a commit
-        # telescoping by log version: commit_ms must leave the frame
-        # first (collapse treats every non-key/meta column as payload
-        # and would demand its old_ twin — the cdf_extrema_sync rule)
-        fact_changes = collapse_changelog(
-            fact_rows.drop("commit_ms")
-            if pin_cols[0] == "commit_version"
-            else fact_rows,
-            fact_key,
-            order_col=pin_cols[0],
-        )
+        fact_changes = feed_pins[0].collapse(fact_rows, fact_key)
         dim_news, dim_changes = [], []
         for i in range(n_dims):
             rows = batch_df.filter(f"_ffs_feed = 'dim{i}'").select(
                 *dim_cols[i]
             )
-            new = (
-                _pinned_read(
-                    dim_stores[i],
-                    dim_pins[i],
-                    pin_cols[i + 1] == "commit_version",
-                )
-                if dim_pins[i]
-                else None
-            )
+            pin = feed_pins[i + 1]
+            new = pin.read(dim_stores[i], dim_pins[i]) if dim_pins[i] else None
             if new is None:
                 # dim store empty so far: the star view is empty too
                 new = rows.select(
@@ -1257,15 +1279,7 @@ def cdf_star_sync(
                     ]
                 ).filter(F.lit(False))
             dim_news.append(new)
-            dim_changes.append(
-                collapse_changelog(
-                    rows.drop("commit_ms")
-                    if pin_cols[i + 1] == "commit_version"
-                    else rows,
-                    dim_keys[i],
-                    order_col=pin_cols[i + 1],
-                )
-            )
+            dim_changes.append(pin.collapse(rows, dim_keys[i]))
         m_prev = view_store.read()
         view_bootstrap = m_prev is None
 
@@ -1308,12 +1322,10 @@ def cdf_star_sync(
         view_changes = diff_frames(
             old_slice, fresh, fact_key, include_old=True
         )
-        # ---- summary FIRST (delta merge, the cdf_rollup_sync shape)
-        sum_last = summary_store.last_txn(query_name)
-        if sum_last is None or epoch > int(sum_last):
-            # persisted for the same reason as cdf_rollup_sync's
-            # delta: the NULL-group guard and the merge's validation
-            # + writes all consume this sliver — cache once.
+        # ---- summary FIRST (the cdf_rollup_sync fold)
+        if _replayed(summary_store, query_name, epoch):
+            s_counts = {"replayed": True}
+        else:
             # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2):
             # with no prior view, view_changes is all-inserts of
             # `fresh` by definition, and rollup_delta over pure
@@ -1330,56 +1342,13 @@ def cdf_star_sync(
                     ],
                 )
             else:
-                delta = rollup_delta(
-                    view_changes, group_col, list(sum_map.values())
-                ).select(
-                    F.col(group_col),
-                    F.col("d_count").alias(count_col),
-                    *[
-                        F.col(f"d_{src}").alias(dst)
-                        for dst, src in sum_map.items()
-                    ],
+                delta = _summary_delta(
+                    view_changes, group_col, count_col, sum_map
                 )
-            delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                # pointer check, not read() — see cdf_rollup_sync
-                if summary_store.current_version_dir() is None:
-                    # bootstrap commit bypasses the merge — the NULL
-                    # group probe runs explicitly, once per lifetime.
-                    # delta is persisted and commit() runs one action:
-                    # no eager localCheckpoint pre-pass (round 12)
-                    _delta_merge_guard(delta, group_col)
-                    summary_store.commit(
-                        delta.filter(F.col(count_col) > 0),
-                        txn=(query_name, str(epoch)),
-                    )
-                    s_counts = {"bootstrap": True}
-                else:
-                    # NULL-group rejection rides the merge's fused
-                    # validation action — no standalone guard job
-                    _o, s_counts = summary_store.merge_into(
-                        delta,
-                        when_matched_update={
-                            count_col: f"t.{count_col} + s.{count_col}",
-                            **{
-                                dst: (
-                                    f"coalesce(t.{dst}, 0) + "
-                                    f"coalesce(s.{dst}, 0)"
-                                )
-                                for dst in sum_map
-                            },
-                        },
-                        when_matched_delete=(
-                            f"t.{count_col} + s.{count_col} <= 0"
-                        ),
-                        when_not_matched_insert=True,
-                        txn=(query_name, str(epoch)),
-                        reject_null_source_key=True,
-                    )
-            finally:
-                delta.unpersist()
-        else:
-            s_counts = {"replayed": True}
+            s_counts = _fold_summary(
+                summary_store, delta, group_col, count_col, sum_map,
+                (query_name, str(epoch)),
+            )
         # ---- view SECOND (upserts + tombstones through one merge)
         marker = ":".join(str(x) for x in [epoch, *pins])
         payload = [c for c in view_cols if c != fact_key]
@@ -1437,11 +1406,8 @@ def cdf_star_sync(
                 }
             )
 
-    return (
-        tagged.writeStream.foreachBatch(sync_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
+    return _start_foreach_batch(
+        tagged, sync_batch, checkpoint_dir, query_name
     )
 
 

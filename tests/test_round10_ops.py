@@ -564,21 +564,28 @@ def test_store_cdf_stream_exactly_once_across_restart(spark, tmp_path):
 
 
 def test_store_cdf_range_with_hole_fails_loudly(spark, tmp_path):
-    from far_finer_airtable_firestore_sync_spark.sources.cdf_source import (
-        StoreCDFStreamReader,
-        _committed_versions,
-    )
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
 
+    assert cdf_source.register(spark)
     store = DocumentStore(spark, str(tmp_path / "s2"), "k")
     df = spark.createDataFrame([(1, "a", 1)], "k long, grp string, val long")
     store.commit(df, cdf=True)
     store.commit(df, cdf=False)  # the hole
-    versions = _committed_versions(store.root)
-    assert len(versions) == 2
-    reader = StoreCDFStreamReader(store.root, spark.read.parquet(
-        os.path.join(store.root, versions[0], "_changes")).schema)
-    with pytest.raises(ValueError, match="without cdf=True"):
-        reader.partitions({"last": ""}, {"last": versions[-1]})
+    assert len(store.list_versions()) == 2
+    q = (
+        spark.readStream.format("store_cdf")
+        .option("path", store.root)
+        .load()
+        .writeStream.format("memory")
+        .queryName("cdf_hole")
+        .option("checkpointLocation", str(tmp_path / "s2ck"))
+        .start()
+    )
+    with pytest.raises(Exception, match="without cdf=True"):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
 
 # -- DV DML x schema evolution (r9 VERDICT #7) --------------------------------
@@ -1457,6 +1464,191 @@ def test_txn_cdf_starting_version_skips_vacuumed_history(spark, tmp_path):
         (r["commit_version"], r["change_type"]) for r in feed.collect()
     }
     assert got == {(2, "delete"), (3, "update")}
+
+
+def test_cdf_stream_offsets_keep_their_json_shapes(spark, tmp_path):
+    """The checkpointed offset of each change-feed form keeps its JSON
+    shape, so a checkpoint written by an earlier build resumes."""
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
+
+    assert cdf_source.register(spark) and cdf_source.register_txn(spark)
+    df = spark.createDataFrame([(1, "a", 1)], "k long, grp string, val long")
+    fact = DocumentStore(spark, str(tmp_path / "of_fact"), "k")
+    dim = DocumentStore(spark, str(tmp_path / "of_dim"), "k")
+    fact.commit(df, cdf=True)
+    fact.commit(df.selectExpr("k + 1 as k", "grp", "val"), cdf=True)
+    dim.commit(df, cdf=True)
+    log = _mk_backend(spark, tmp_path, "of_log")
+    log.commit(_seed(spark, 4), cdf=True)
+    log.update_where("k = 1", {"val": "val + 1"}, cdf=True)
+
+    def offsets(source, options):
+        reader = source(options).streamReader(None)  # offsets only
+        return reader.initialOffset(), reader.latestOffset()
+
+    def head(store):
+        return os.path.basename(store.current_version_dir())
+
+    assert offsets(cdf_source.StoreCDFDataSource, {"path": fact.root}) == (
+        {"last": ""}, {"last": head(fact)},
+    )
+    mux = {"paths": f"{fact.root},{dim.root}", "tags": "fact,dim0"}
+    assert offsets(cdf_source.StoreCDFDataSource, mux) == (
+        {"last": {"fact": "", "dim0": ""}},
+        {"last": {"fact": head(fact), "dim0": head(dim)}},
+    )
+    assert offsets(cdf_source.TxnCDFDataSource, {"path": log.root}) == (
+        {"v": 0}, {"v": 2},
+    )
+    assert offsets(
+        cdf_source.TxnCDFDataSource,
+        {"path": log.root, "startingVersion": "2"},
+    ) == ({"v": 1}, {"v": 2})
+
+
+def test_txn_cdf_stream_started_past_head_serves_no_earlier_version(
+    spark, tmp_path
+):
+    """A feed started past the log head must never serve a version
+    below ``startingVersion``, across a restart while the log catches
+    up."""
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
+
+    assert cdf_source.register_txn(spark)
+    b = _mk_backend(spark, tmp_path, "past")
+    b.commit(_seed(spark, 6), cdf=True)                      # v1
+    b.update_where("k = 1", {"val": "val + 1"}, cdf=True)    # v2: head
+    ck = str(tmp_path / "pastck")
+    served = []
+
+    def collect(batch_df, _epoch_id):
+        served.extend(
+            r["commit_version"]
+            for r in batch_df.select("commit_version").collect()
+        )
+
+    def run_once():
+        q = (
+            spark.readStream.format("store_cdf_txn")
+            .option("path", b.root)
+            .option("startingVersion", "5")
+            .load()
+            .writeStream.foreachBatch(collect)
+            .option("checkpointLocation", ck)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run_once()
+    b.update_where("k = 2", {"val": "val + 1"}, cdf=True)    # v3
+    b.update_where("k = 3", {"val": "val + 1"}, cdf=True)    # v4
+    run_once()
+    b.update_where("k = 4", {"val": "val + 1"}, cdf=True)    # v5
+    run_once()
+    assert served == [5]
+
+
+def test_txn_cdf_schema_parses_only_the_newest_records(
+    spark, tmp_path, monkeypatch
+):
+    """Schema resolution walks the log newest first and stops at the
+    first record with a sidecar, instead of parsing every record."""
+    import json
+
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
+
+    b = _mk_backend(spark, tmp_path, "schemawalk")
+    b.commit(_seed(spark, 8), cdf=True)
+    for k in range(5):
+        b.update_where(f"k = {k}", {"val": "val + 1"}, cdf=True)
+    parsed = []
+    real_load = json.load
+
+    def counting_load(fh, *args, **kwargs):
+        parsed.append(fh.name)
+        return real_load(fh, *args, **kwargs)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    ddl = cdf_source.TxnCDFDataSource({"path": b.root}).schema()
+    monkeypatch.undo()
+    assert ddl.endswith("commit_ms bigint, commit_version bigint")
+    assert len(parsed) == 1, parsed
+
+
+def test_txn_cdf_extrema_bootstrap_past_genesis_fails_loudly(
+    spark, tmp_path
+):
+    """An extrema consumer whose log feed starts past live history
+    cannot bootstrap from the pinned snapshot (the feed never
+    delivered the earlier rows): it raises instead of committing."""
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
+    from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+        cdf_extrema_sync,
+    )
+
+    assert cdf_source.register_txn(spark)
+    b = _mk_backend(spark, tmp_path, "xg")
+    b.commit(_seed(spark, 12), cdf=True)                     # v1
+    b.update_where("k = 1", {"val": "val + 5"}, cdf=True)    # v2
+    roll = DocumentStore(spark, str(tmp_path / "xgroll"), key_col="grp")
+    stream = (
+        spark.readStream.format("store_cdf_txn")
+        .option("path", b.root)
+        .option("startingVersion", "2")
+        .load()
+    )
+    q = cdf_extrema_sync(
+        stream, b, roll, str(tmp_path / "xgck"), "grp", "n",
+        {"sum_val": "val"}, {"min_val": "val"}, {"max_val": "val"},
+        "xgext",
+    )
+    with pytest.raises(Exception, match="startingVersion"):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    assert roll.current_version_dir() is None
+
+
+def test_txn_cdf_extrema_bootstraps_after_empty_genesis(spark, tmp_path):
+    """A log whose genesis commit is an empty frame: the feed's first
+    rows arrive at version 2 and the consumer still bootstraps."""
+    from far_finer_airtable_firestore_sync_spark.sources import cdf_source
+    from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+        cdf_extrema_sync,
+    )
+
+    assert cdf_source.register_txn(spark)
+    b = _mk_backend(spark, tmp_path, "xe")
+    b.commit(_seed(spark, 0), cdf=True)                      # v1: empty
+    b.commit(_seed(spark, 12), cdf=True)                     # v2
+    roll = DocumentStore(spark, str(tmp_path / "xeroll"), key_col="grp")
+    stream = (
+        spark.readStream.format("store_cdf_txn")
+        .option("path", b.root)
+        .load()
+    )
+    q = cdf_extrema_sync(
+        stream, b, roll, str(tmp_path / "xeck"), "grp", "n",
+        {"sum_val": "val"}, {"min_val": "val"}, {"max_val": "val"},
+        "xeext",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {tuple(r) for r in roll.read().collect()}
+    want = {
+        tuple(r)
+        for r in b.read().groupBy("grp").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("val").alias("sum_val"),
+            F.min("val").alias("min_val"), F.max("val").alias("max_val"),
+        ).collect()
+    }
+    assert got == want
 
 
 def test_collapse_changelog_rejects_stray_old_column(spark):
