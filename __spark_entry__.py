@@ -5494,7 +5494,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ``spark.catalog.clearCache()`` between entries — bench.py and
     scripts/check_oracle.py both do — instead of per-entry
     finally-unpersist blocks; a new harness must do the same or one
-    entry's cache squeezes the next one's execution memory."""
+    entry's cache squeezes the next one's execution memory.
+    ``clearCache()`` does NOT free the blocks of the
+    ``localCheckpoint(eager=True)`` intermediates some entries stage
+    (ppjoin/PMI tokens, containment postings/shingles): they bypass
+    the cache manager and are freed only when the ContextCleaner sees
+    their DataFrame garbage-collected, so they can accumulate across
+    a long run of entries in one session."""
     return {
         "typed_projection": _q_typed_projection,
         "keep_latest_dedup": _q_keep_latest_dedup,

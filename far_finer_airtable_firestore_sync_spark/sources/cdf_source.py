@@ -67,6 +67,7 @@ from pyspark.sql import types as T
 from far_finer_airtable_firestore_sync_spark.sources.store import (
     _CHANGES_DIR,
     _POINTER,
+    _footer_schema,
     version_commit_ms,
 )
 
@@ -96,41 +97,23 @@ _FEED_COL = "_ffs_feed"
 _TXN_MAINTENANCE_KINDS = {"compact", "optimize_zorder", "optimize_binpack"}
 
 
-def _arrow_ddl(field) -> str:
-    """Arrow field -> Spark DDL type for the CDF sidecar columns (the
-    sidecars are written by Spark itself, so only Spark-writable
-    primitive types appear)."""
-    import pyarrow as pa
+def _ddl_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
-    t = field.type
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_int16(t):
-        return "smallint"
-    if pa.types.is_int8(t):
-        return "tinyint"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    raise ValueError(
-        f"store_cdf: unsupported sidecar column type {t} "
-        f"for column {field.name!r}"
-    )
+
+def _ddl_type(dt: T.DataType) -> str:
+    """Spark DDL of a footer type (nested field names quoted; every
+    leaf type spells itself)."""
+    if isinstance(dt, T.StructType):
+        inner = ", ".join(
+            f"{_ddl_name(f.name)}: {_ddl_type(f.dataType)}" for f in dt.fields
+        )
+        return f"struct<{inner}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_ddl_type(dt.keyType)}, {_ddl_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def _sidecar_files(version_dir: str) -> Optional[list[str]]:
@@ -163,17 +146,23 @@ class _Listing:
         self.root = root
         self.start = self.GENESIS if start is None else start
 
-    def newest_fields(self) -> list:
-        """Arrow fields of the NEWEST sidecar — the per-root schema
-        anchor (anchoring on the first would silently hide every
-        later-added column; the read path projects older files by
-        name with typed NULLs)."""
-        import pyarrow.parquet as pq
-
+    def newest_fields(self) -> list[T.StructField]:
+        """Spark fields of the NEWEST sidecar, from the Spark schema
+        its writer stored in the footer (exactly the store's types) —
+        the per-root schema anchor (anchoring on the first would
+        silently hide every later-added column; the read path projects
+        older files by name with typed NULLs)."""
         for vd in self._sidecar_dirs_newest_first():
-            files = _sidecar_files(vd)
-            if files:
-                return list(pq.read_schema(files[0]))
+            if not _sidecar_files(vd):
+                continue
+            schema = _footer_schema(os.path.join(vd, _CHANGES_DIR))
+            if schema is None:
+                raise ValueError(
+                    f"{self.KIND} {self.root!r}: the change sidecar of "
+                    f"{os.path.basename(vd)!r} carries no Spark schema "
+                    "in its footer (sidecars are written by Spark)"
+                )
+            return list(schema.fields)
         raise ValueError(
             f"{self.KIND} {self.root!r} has no cdf-enabled commits: "
             "commit with cdf=True before reading the change feed"
@@ -481,9 +470,8 @@ class StoreCDFDataSource(DataSource):
         seen: dict[str, str] = {}
         for listing in listings:
             for f in listing.newest_fields():
-                if f.name not in seen:
-                    seen[f.name] = _arrow_ddl(f)
-        cols = [f"`{n}` {t}" for n, t in seen.items()]
+                seen.setdefault(f.name, _ddl_type(f.dataType))
+        cols = [f"{_ddl_name(n)} {t}" for n, t in seen.items()]
         cols.append(listings[0].CONSTANTS_DDL)
         if tags is not None:
             cols.append(f"`{_FEED_COL}` string")

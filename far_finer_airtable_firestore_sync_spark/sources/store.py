@@ -52,16 +52,55 @@ _CHANGES_DIR = "_changes"
 _MIXED_SCHEMA_MARKER = "_mixed_schema"
 
 
+#: footer key-value entry where Spark's parquet writer stores the row
+#: schema (as ``StructType`` JSON) in every file it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> Optional[T.StructType]:
+    """The schema Spark would infer for a flat Spark-written parquet
+    directory, read from ONE footer on the driver — without it, every
+    DataFrame built over the directory runs Spark's schema inference
+    as its own 1-task job. The first (sorted) non-hidden ``.parquet``
+    file's Spark row schema is the answer. None — let Spark infer —
+    when the directory is missing, has a non-hidden subdirectory
+    (hive partitions: Spark types the partition columns from the
+    directory names), has no data file, or its footer carries no
+    Spark schema (a foreign writer)."""
+    import pyarrow.parquet as pq
+
+    try:
+        with os.scandir(path) as it:
+            entries = [e for e in it if not e.name.startswith(("_", "."))]
+    except OSError:
+        return None
+    if any(e.is_dir() for e in entries):
+        return None
+    files = sorted(e.name for e in entries if e.name.endswith(".parquet"))
+    if not files:
+        return None
+    try:
+        meta = pq.read_metadata(os.path.join(path, files[0])).metadata
+    except OSError:  # swapped away since the listing (a DV sidecar)
+        return None
+    raw = (meta or {}).get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else T.StructType.fromJson(json.loads(raw))
+
+
 def _version_reader(spark: SparkSession, version_dir: str):
-    """The parquet reader for a committed version: footer-merging
-    when the version is marked mixed-schema (see
-    :data:`_MIXED_SCHEMA_MARKER`), plain otherwise — mergeSchema reads
-    every footer, which is wasted driver work on the overwhelmingly
-    common uniform version."""
+    """The parquet reader for a Spark-written store directory (a
+    committed version or one of its sidecars): footer-merging when
+    the directory is marked mixed-schema (see
+    :data:`_MIXED_SCHEMA_MARKER`) — mergeSchema reads every footer,
+    which is wasted driver work on the overwhelmingly common uniform
+    version — else given the schema of its own footer
+    (:func:`_footer_schema`) so Spark plans no inference job, else
+    plain (hive-partitioned or foreign-written: Spark infers)."""
     reader = spark.read
     if os.path.exists(os.path.join(version_dir, _MIXED_SCHEMA_MARKER)):
-        reader = reader.option("mergeSchema", "true")
-    return reader
+        return reader.option("mergeSchema", "true")
+    schema = _footer_schema(version_dir)
+    return reader if schema is None else reader.schema(schema)
 
 
 def _new_version_dir_name(epoch_ms: int) -> str:
@@ -1343,7 +1382,7 @@ def _write_commit_changes(
     log rewrites it against each base a retry lands on."""
     ch = os.path.join(out, _CHANGES_DIR)
     shutil.rmtree(ch, ignore_errors=True)
-    new_df = spark.read.parquet(out)
+    new_df = _version_reader(spark, out).parquet(out)
     if base is None:
         changes = _insert_changes(new_df, key)
     else:
@@ -2471,6 +2510,18 @@ def _parquet_footer_rows(path: str) -> int:
 _LIVE_ROWS_CACHE = "_live_rows.json"
 
 
+def _dv_identity(version_dir: str) -> Optional[list[int]]:
+    """Identity of ``version_dir``'s live deletion-vector sidecar:
+    ``[st_ino, st_mtime_ns]`` of the directory (every swap renames a
+    freshly written directory into place; the mtime guards against
+    inode reuse), None when the version carries no mask."""
+    try:
+        st = os.stat(os.path.join(version_dir, _DV_DIR))
+    except FileNotFoundError:
+        return None
+    return [st.st_ino, st.st_mtime_ns]
+
+
 def _version_live_rows(version_dir: str) -> int:
     """LIVE row count of a committed version from metadata only:
     parquet footer ``num_rows`` summed over the data files minus the
@@ -2491,14 +2542,24 @@ def _version_live_rows(version_dir: str) -> int:
     version, and :func:`_link_tree` drops an inherited cache from
     the successor directory (whose DML is about to change the
     count). First read per version still walks once — amortized
-    O(1) per version thereafter, no behavior change."""
+    O(1) per version thereafter, no behavior change.
+
+    The one mutation of a published version is its deletion-vector
+    sidecar swap (:func:`write_deletion_vectors`), so the cache
+    records the identity of the mask it counted (:func:`_dv_identity`,
+    sampled BEFORE the walk) and a mismatch re-walks: a failed or
+    crashed cache removal, or a walk that raced the swap and wrote
+    after it, can never serve the pre-swap count."""
     import pyarrow.parquet as pq
 
     cache = os.path.join(version_dir, _LIVE_ROWS_CACHE)
+    mask = _dv_identity(version_dir)
     try:
         with open(cache) as fh:
-            return int(json.load(fh)["live_rows"])
-    except (OSError, ValueError, KeyError, TypeError):
+            got = json.load(fh)
+        if got.get("mask") == mask:
+            return int(got["live_rows"])
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
         pass
     n = 0
     for root, dirs, names in os.walk(version_dir):
@@ -2510,7 +2571,7 @@ def _version_live_rows(version_dir: str) -> int:
     tmp = cache + ".tmp-" + uuid.uuid4().hex[:8]
     try:
         with open(tmp, "w") as fh:
-            json.dump({"live_rows": n}, fh)
+            json.dump({"live_rows": n, "mask": mask}, fh)
         os.replace(tmp, cache)
     except OSError:
         pass  # cache is best-effort; the walked count is authoritative
@@ -2666,7 +2727,7 @@ def write_deletion_vectors(
         # directory (covers a legacy sidecar written in place), then
         # against the predecessor it may have been linked from
         fp = _dv_rel_expr(version_dir, "file_path")
-        existing = spark.read.parquet(out).select(
+        existing = _version_reader(spark, out).parquet(out).select(
             fp.alias("file_path"), "row_index"
         )
         if legacy_dir is not None:
@@ -2695,14 +2756,8 @@ def write_deletion_vectors(
         shutil.rmtree(old)
     else:
         os.rename(tmp, out)
-    # the mask changed this version's LIVE row count — drop any cached
-    # count (the free-function DV form writes into published versions,
-    # so the immutability argument _version_live_rows leans on does
-    # not cover this one mutation; round 12)
-    try:
-        os.remove(os.path.join(version_dir, _LIVE_ROWS_CACHE))
-    except OSError:
-        pass
+    # the swap changed this version's LIVE row count; a cached count
+    # names the mask it counted, so _version_live_rows re-walks
     return total
 
 
@@ -2879,7 +2934,7 @@ def binpack_build(
     # anti-joins the (bounded) rewrite set — never a driver IN-list.
     dv_src = os.path.join(src, _DV_DIR)
     if os.path.isdir(dv_src) and big:
-        dv = spark.read.parquet(dv_src).select(
+        dv = _version_reader(spark, dv_src).parquet(dv_src).select(
             _dv_rel_expr(src, "file_path").alias("file_path"),
             "row_index",
         )
@@ -2961,7 +3016,7 @@ def _masked_scan_with_positions(
             pass  # a concurrent reader won the recovery rename
         if not os.path.isdir(dv_path):
             return data
-    dv = spark.read.parquet(dv_path).select(
+    dv = _version_reader(spark, dv_path).parquet(dv_path).select(
         _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
         F.col("row_index").alias("_ffs_dv_ri"),
     )
@@ -3003,7 +3058,7 @@ def _apply_deletion_vectors(
                 f"column {reserved!r} is reserved by the deletion-vector "
                 "read path; rename it in the snapshot"
             )
-    dv = spark.read.parquet(dv_path).select(
+    dv = _version_reader(spark, dv_path).parquet(dv_path).select(
         _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
         F.col("row_index").alias("_ffs_dv_ri"),
     )

@@ -1,16 +1,22 @@
 """Round-12 optimization semantics guards: the right-outer merge
 join, the dedup-free one-pass DV write, the cached live-row count,
 the overlapped DML writes, and the streaming bootstrap shortcuts must
-all be invisible in results."""
+all be invisible in results. Also: store reads take their schema from
+the version's own footer (no inference job), and the change feed types
+its columns from the same footer."""
 
+import datetime
 import json
 import os
 import shutil
 import tempfile
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from far_finer_airtable_firestore_sync_spark.sources import cdf_source
 from far_finer_airtable_firestore_sync_spark.sources.backends import (
     TransactionalParquetBackend,
 )
@@ -18,6 +24,7 @@ from far_finer_airtable_firestore_sync_spark.sources.store import (
     _LIVE_ROWS_CACHE,
     DocumentStore,
     _dv_position_count,
+    _masked_scan_with_positions,
     _run_concurrently,
     _version_live_rows,
     write_deletion_vectors,
@@ -180,6 +187,26 @@ class TestLiveRowsCache:
         write_deletion_vectors(spark, vd, "k < 30")
         assert _version_live_rows(vd) == 270  # cache was dropped
 
+    def test_failed_cache_removal_never_serves_stale_count(
+        self, spark, tmp_root, monkeypatch
+    ):
+        """The cache names the mask it counted: a mask swap whose
+        cache removal fails (or never happens) still re-walks."""
+        s = DocumentStore(spark, tmp_root, "k")
+        vd = s.commit(_docs(spark, 300))
+        write_deletion_vectors(spark, vd, "k < 10")
+        assert _version_live_rows(vd) == 290  # cached with this mask
+        real_remove = os.remove
+
+        def failing_remove(path, *a, **kw):
+            if os.path.basename(path) == _LIVE_ROWS_CACHE:
+                raise OSError("simulated removal failure")
+            return real_remove(path, *a, **kw)
+
+        monkeypatch.setattr(os, "remove", failing_remove)
+        write_deletion_vectors(spark, vd, "k < 30")
+        assert _version_live_rows(vd) == 270
+
 
 class TestOverlappedDmlWrites:
     def test_run_concurrently_keeps_every_failure(self):
@@ -237,3 +264,127 @@ class TestOverlappedDmlWrites:
             os.path.join(tmp_root, rec["version_dir"], "_changes")
         )
         assert ch.count() == 150
+
+
+def _job_ids(spark, build):
+    """Spark job ids run while ``build()`` builds (not runs) its
+    DataFrames — tagged by a throwaway job group."""
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count DataFrame-build jobs")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestFooterSchemaReads:
+    def test_store_reads_build_without_a_job(self, spark, tmp_root):
+        """Every read path of a flat DV-carrying version takes its
+        schema from the footer: building the frame runs no job."""
+        s = DocumentStore(spark, os.path.join(tmp_root, "s"), "k")
+        s.commit(_docs(spark, 500))
+        s.delete_where("k % 7 = 0")
+        vd = s.current_version_dir()
+        assert os.path.isdir(os.path.join(vd, "_deletion_vectors"))
+        s.read_where("k", 10, 20)  # builds the zone manifest
+        now_ms = int(time.time() * 1000)
+        b = TransactionalParquetBackend(
+            spark, os.path.join(tmp_root, "t"), "k", writer_id="A"
+        )
+        b.commit(_docs(spark, 500))
+        b.delete_where("k % 7 = 0")
+        builds = {
+            "read": s.read,
+            "read_version": lambda: s.read_version(vd),
+            "read_as_of": lambda: s.read_as_of(now_ms + 60_000),
+            "read_where": lambda: s.read_where("k", 10, 20),
+            "masked_scan": lambda: _masked_scan_with_positions(spark, vd),
+            "txn_read": b.read,
+        }
+        for name, build in builds.items():
+            assert _job_ids(spark, build) == [], name
+        assert s.read().count() == 500 - 72
+        assert b.read().count() == 500 - 72
+
+    @pytest.mark.parametrize(
+        "shape",
+        ["plain", "dv", "mixed", "hive", "all_deleted", "empty_first"],
+    )
+    def test_read_schema_matches_spark_inference(
+        self, spark, tmp_root, shape
+    ):
+        s = DocumentStore(spark, tmp_root, "k")
+        if shape == "empty_first":
+            s.commit(_docs(spark, 0))
+        else:
+            s.commit(_docs(spark, 200))
+        if shape == "dv":
+            s.delete_where("k % 3 = 0")
+        elif shape == "all_deleted":
+            s.delete_where("true")
+        elif shape == "hive":
+            s.compact(partition_by=["grp"])
+        elif shape == "mixed":
+            src = spark.range(150, 250).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 5).alias("grp"),
+                F.lit(1).cast("long").alias("val"),
+                F.lit("x").alias("tag"),
+            )
+            s.merge_into(
+                src,
+                when_matched_update={"val": "s.val", "tag": "s.tag"},
+                when_not_matched_insert=True,
+                schema_evolution=True,
+            )
+        vd = s.current_version_dir()
+        reader = spark.read
+        if shape == "mixed":
+            assert os.path.exists(os.path.join(vd, "_mixed_schema"))
+            reader = reader.option("mergeSchema", "true")
+        assert s.read().schema == reader.parquet(vd).schema
+        want = {"plain": 200, "dv": 133, "mixed": 250, "hive": 200}
+        assert s.read().count() == want.get(shape, 0)
+
+
+def test_store_cdf_keeps_the_store_types(spark, tmp_root):
+    """The change feed types its columns from the sidecar footer's
+    Spark schema: timestamp_ntz stays timestamp_ntz (not timestamp)
+    and array and struct columns are served, pre-images included."""
+    assert cdf_source.register(spark)
+    rows = [
+        (1, datetime.datetime(2024, 1, 2, 3, 4, 5), [1, 2], (7, "x")),
+        (2, datetime.datetime(2024, 6, 7, 8, 9, 10), [], None),
+        (3, None, None, (None, "y")),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "k bigint, ts timestamp_ntz, arr array<int>, "
+        "st struct<a: int, b: string>",
+    )
+    s = DocumentStore(spark, tmp_root, "k")
+    s.commit(df, cdf=True)
+    store_types = s.read().dtypes
+    feed = spark.read.format("store_cdf").option("path", tmp_root).load()
+    assert feed.dtypes == (
+        store_types[:1]
+        + [("change_type", "string")]
+        + store_types[1:]
+        + [(f"old_{c}", t) for c, t in store_types[1:]]
+        + [("commit_ms", "bigint")]
+    )
+    got = sorted(
+        (
+            r["k"], r["change_type"], r["ts"], r["arr"],
+            None if r["st"] is None else tuple(r["st"]),
+            r["old_ts"], r["old_arr"], r["old_st"],
+        )
+        for r in feed.collect()
+    )
+    assert got == [
+        (k, "insert", ts, arr, st, None, None, None)
+        for k, ts, arr, st in rows
+    ]
