@@ -3709,9 +3709,9 @@ def _q_store_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     capstone over the store's row-level DML (``merge_into``, round
     10): matched-delete, matched-update, not-matched-insert, and
     not-matched-BY-SOURCE-delete clauses land atomically as a single
-    version (masked old images via
-    the KEY-SET DV form — a semi-join against the touched keys, never
-    a driver-side IN-list — plus right-sized appended images). The
+    version (old images masked by the physical positions riding the
+    clause-tagged join — never a driver-side IN-list — plus
+    right-sized appended images). The
     reference runs this shape as a Firestore batched set/delete
     (/root/reference/lib/FirestoreWrapper.py:102-123); here it is one
     commit with time travel to the pre-merge snapshot and a CDF
@@ -5001,15 +5001,16 @@ def _q_store_cdf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; each batch re-joins only the AFFECTED fact slice (fact
     changelog keys ∪ fact rows whose dimension row changed) against
     snapshots VERSION-PINNED to the newest commit each feed
-    delivered, and commits O(touched) on both downstream stores
-    through ``merge_into`` — view upserts + departure tombstones,
-    summary as signed corrections — under per-store txn markers
+    delivered, and commits O(changed) on both downstream stores —
+    the view as its own diff of the affected slice (``apply_changes``:
+    masked old images, appended new ones), the summary as signed
+    corrections through ``merge_into`` — under per-store txn markers
     (summary-then-view ordering makes a crash between them replay
     cleanly). The entry FORCES A RESTART: a dimension group move, a
     fact delete, a fact update, and an insert pointing at the moved
     dimension row all land while the consumer is DOWN; the restarted
     stream maintains both stores to equality with the full recompute
-    (asserted Spark-side), the view merge's write count equals the
+    (asserted Spark-side), the view commit's change count equals the
     independently-computed affected-key count, and a third run with
     nothing new writes NOTHING. The oracle replays the final join
     rollup closed-form."""
@@ -5103,7 +5104,7 @@ def _q_store_cdf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (view.read(), vx, "maintained join view"),
         (summ.read(), sx, "maintained join rollup"),
     )
-    # O(touched) writes: the restart epoch's view merge touched
+    # O(touched) writes: the restart epoch's view commit touched
     # exactly the affected fact keys, computed independently here
     f1 = fact0.filter("k % 11 <> 0")
     affected = (
@@ -5170,7 +5171,7 @@ def _q_store_cdf_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected fact slice (fact changelog keys ∪ one semi-join probe
     PER dimension) re-joins through the full star against per-feed
     version-pinned snapshots, and both downstream stores commit
-    O(touched) merges under the composite
+    O(changed) under the composite
     ``epoch:fact_ms:d0_ms:d1_ms`` marker. The entry forces a restart
     with BOTH dimensions moving (a nation rename and a customer
     segment move), plus a fact delete, update, and insert pointing
@@ -5333,10 +5334,10 @@ group by nname
 def _q_store_cdf_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED streaming IVM — store → maintained join view → second-
     tier rollup, each stage tailing the previous stage's OWN change
-    feed (``view_cdf=True``: every view commit/merge the tier-1
+    feed (``view_cdf=True``: every view commit the tier-1
     consumer makes carries a CDF sidecar, so the view is a
     first-class feed source like any store). Tier 1 maintains
-    fact⋈dim with O(touched) merges; tier 2 is an ordinary
+    fact⋈dim with O(changed) commits; tier 2 is an ordinary
     ``cdf_rollup_sync`` over the VIEW's feed, grouping by a DIFFERENT
     column than tier 1's summary — the downstream consumer needs no
     knowledge that its upstream is itself maintained. Both tiers are

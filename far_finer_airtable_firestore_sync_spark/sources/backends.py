@@ -693,7 +693,7 @@ class TransactionalParquetBackend:
         """Multi-clause MERGE INTO on the LOCK-FREE log — the
         cross-host form of ``DocumentStore.merge_into``, completing
         the backend's DML set: matched-delete + matched-update rows
-        mask positionally via the key-set deletion-vector form,
+        mask by the physical positions riding the clause-tagged join,
         updated + inserted images append right-sized, and the version
         publishes through the same atomic put-if-absent CAS as
         :meth:`commit`. A rival winning the version number

@@ -695,6 +695,28 @@ def _delta_merge_guard(delta: DataFrame, group_col: str) -> None:
         )
 
 
+def _checkpoint_key_unique(df: DataFrame, key: str, what: str) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, raising ``ValueError`` when
+    two rows share ``key``. The check rides the checkpoint job (a
+    per-key window count feeding ``assert_true``), so it costs no
+    action of its own."""
+    from pyspark.errors import SparkRuntimeException
+
+    msg = f"{what} has duplicate {key!r} keys"
+    unique = F.count(F.lit(1)).over(Window.partitionBy(key)) == 1
+    try:
+        return (
+            df.withColumn("_ffs_unique", unique)
+            .filter(F.assert_true("_ffs_unique", msg).isNull())
+            .drop("_ffs_unique")
+            .localCheckpoint(eager=True)
+        )
+    except SparkRuntimeException as e:
+        if msg not in str(e):
+            raise
+        raise ValueError(msg) from e
+
+
 def _summary_delta(
     changes: DataFrame, group_col: str, count_col: str, sum_map: dict
 ) -> DataFrame:
@@ -731,36 +753,36 @@ def _fold_summary(
     NULL-group rejection rides the merge's fused validation action
     (``reject_null_source_key``) — no standalone guard job.
 
-    ``delta`` is persisted for the call: the guard, the merge's
-    duplicate-source check and its clause-tagged join each execute
-    the plan, and each execution would otherwise re-read the
+    The bootstrap persists ``delta``: the guard and the commit each
+    execute its plan, and each execution would otherwise re-read the
     micro-batch through the Python change-feed source (a foreachBatch
-    frame is not materialized; optimization guide §4/§5). The
-    emptiness test reads the pointer, not ``read()``: a DataFrame
+    frame is not materialized; optimization guide §4/§5). The merge
+    needs no copy: its clause-tagged join is the one cached consumer.
+    The emptiness test reads the pointer, not ``read()``: a DataFrame
     build costs a footer/schema round-trip per epoch."""
-    delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if store.current_version_dir() is None:
+    if store.current_version_dir() is None:
+        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
             _delta_merge_guard(delta, group_col)
             store.commit(delta.filter(F.col(count_col) > 0), txn=txn)
-            return {"bootstrap": True}
-        _out, counts = store.merge_into(
-            delta,
-            when_matched_update={
-                count_col: f"t.{count_col} + s.{count_col}",
-                **{
-                    dst: f"coalesce(t.{dst}, 0) + coalesce(s.{dst}, 0)"
-                    for dst in sum_cols
-                },
+        finally:
+            delta.unpersist()
+        return {"bootstrap": True}
+    _out, counts = store.merge_into(
+        delta,
+        when_matched_update={
+            count_col: f"t.{count_col} + s.{count_col}",
+            **{
+                dst: f"coalesce(t.{dst}, 0) + coalesce(s.{dst}, 0)"
+                for dst in sum_cols
             },
-            when_matched_delete=f"t.{count_col} + s.{count_col} <= 0",
-            when_not_matched_insert=True,
-            txn=txn,
-            reject_null_source_key=True,
-        )
-        return counts
-    finally:
-        delta.unpersist()
+        },
+        when_matched_delete=f"t.{count_col} + s.{count_col} <= 0",
+        when_not_matched_insert=True,
+        txn=txn,
+        reject_null_source_key=True,
+    )
+    return counts
 
 
 class _FeedPin:
@@ -1118,22 +1140,29 @@ def cdf_star_sync(
        newest commit EACH feed delivered; a silent feed pins to its
        last consumed commit, carried in the composite txn marker
        ``"epoch:fact_ms:d0_ms:...:dN_ms"`` riding the view flip);
-    4. commits O(touched) on both stores — summary FIRST (signed
-       corrections through the additive merge), view SECOND (upserts
-       + departure tombstones whose NULL first-foreign-key selects
-       the matched-DELETE clause) — the one crash-replayable order.
+    4. diffs the affected slice of the view against the re-joined
+       slice once (``view_changes``: updates, inserts and departures)
+       and commits O(changed) on both stores — summary FIRST (signed
+       corrections of ``view_changes`` through the additive merge),
+       view SECOND (``view_changes`` itself through
+       :meth:`DocumentStore.apply_changes`, which masks, appends and
+       records exactly those rows; an epoch that changes no view row
+       still records the marker and its feed pins) — the one
+       crash-replayable order.
 
     ``view_cdf=True`` makes the maintained view emit its OWN change
-    feed (every view commit/merge passes ``cdf=True``), so a
+    feed (every view commit passes ``cdf=True``), so a
     second-tier consumer (:func:`cdf_rollup_sync` & co.) can tail the
     view like any other store — IVM chains compose: store -> view ->
     downstream rollup, each stage exactly-once behind its own txn
     marker, each stage's per-epoch cost tracking its own change rate.
 
     Constraints (fail-loud): all feeds' payload columns pairwise
-    disjoint; ``view_cols`` must include ``fact_key`` and every
-    foreign key; no dimension feed may lead the fact store's first
-    cdf commit; NULL group keys are rejected by the merge path.
+    disjoint; ``view_cols`` must include ``fact_key``; no dimension
+    feed may lead the fact store's first cdf commit; NULL group keys
+    are rejected by the summary merge; a re-joined slice repeating a
+    fact key (a dimension store holding a duplicate key) is rejected
+    before either store commits.
 
     ``tagged_stream``/``feed_cols`` (round 11, optimization): a
     PRE-TAGGED multiplexed stream (``cdf_source.load_feeds`` with
@@ -1187,12 +1216,10 @@ def cdf_star_sync(
                     f"{sorted(shared)} — the tagged union cannot "
                     "disambiguate them; rename"
                 )
-    missing = [c for c in [fact_key, *dim_fks] if c not in view_cols]
-    if missing:
+    if fact_key not in view_cols:
         raise ValueError(
-            f"cdf_star_sync: view_cols must include the fact key and "
-            f"every foreign key (missing {missing}; the first foreign "
-            "key is the tombstone presence witness)"
+            f"cdf_star_sync: view_cols must include the fact key "
+            f"{fact_key!r}"
         )
     if tagged_stream is not None:
         tagged = tagged_stream
@@ -1280,8 +1307,10 @@ def cdf_star_sync(
                 ).filter(F.lit(False))
             dim_news.append(new)
             dim_changes.append(pin.collapse(rows, dim_keys[i]))
-        m_prev = view_store.read()
-        view_bootstrap = m_prev is None
+        # the view version both the diff and the view commit derive
+        # from: apply_changes refuses the commit if the pointer moved
+        v_dir = view_store.current_version_dir()
+        view_bootstrap = v_dir is None
 
         def star_join(fact_side: DataFrame) -> DataFrame:
             j = fact_side.alias("f")
@@ -1293,8 +1322,6 @@ def cdf_star_sync(
                 )
             return j.select(*view_cols)
 
-        if m_prev is None:
-            m_prev = star_join(fact_new).filter(F.lit(False))
         # affected fact keys: the fact changelog's keys plus, per
         # dimension, fact rows whose foreign key that dimension's
         # changelog touched (Gupta & Mumick delta rules for a
@@ -1315,86 +1342,60 @@ def cdf_star_sync(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        old_slice = m_prev.join(affected, fact_key, "left_semi")
-        fresh = star_join(
-            fact_new.join(affected, fact_key, "left_semi")
-        ).localCheckpoint(eager=True)
+        fresh = _checkpoint_key_unique(
+            star_join(fact_new.join(affected, fact_key, "left_semi")),
+            fact_key, "cdf_star_sync: the re-joined view slice",
+        )
+        old_slice = fresh.limit(0)  # bootstrap: no prior view
+        if not view_bootstrap:
+            old_slice = view_store.read_version(v_dir).join(
+                affected, fact_key, "left_semi"
+            )
+        # persisted once: the summary fold populates it, the view
+        # commit reads it back
         view_changes = diff_frames(
             old_slice, fresh, fact_key, include_old=True
-        )
-        # ---- summary FIRST (the cdf_rollup_sync fold)
-        if _replayed(summary_store, query_name, epoch):
-            s_counts = {"replayed": True}
-        else:
-            # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2):
-            # with no prior view, view_changes is all-inserts of
-            # `fresh` by definition, and rollup_delta over pure
-            # inserts is exactly the direct per-group aggregate of
-            # `fresh` — skip the diff join + changelog machinery on
-            # the first epoch (same column names, types and NULL
-            # semantics: sum-of-ones count, sum over post-images).
-            if view_bootstrap:
-                delta = fresh.groupBy(F.col(group_col)).agg(
-                    F.sum(F.lit(1).cast("long")).alias(count_col),
-                    *[
-                        F.sum(src).alias(dst)
-                        for dst, src in sum_map.items()
-                    ],
-                )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            # ---- summary FIRST (the cdf_rollup_sync fold)
+            if _replayed(summary_store, query_name, epoch):
+                s_counts = {"replayed": True}
             else:
-                delta = _summary_delta(
-                    view_changes, group_col, count_col, sum_map
+                # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2):
+                # with no prior view, view_changes is all-inserts of
+                # `fresh` by definition, and rollup_delta over pure
+                # inserts is exactly the direct per-group aggregate of
+                # `fresh` — skip the diff join + changelog machinery on
+                # the first epoch (same column names, types and NULL
+                # semantics: sum-of-ones count, sum over post-images).
+                if view_bootstrap:
+                    delta = fresh.groupBy(F.col(group_col)).agg(
+                        F.sum(F.lit(1).cast("long")).alias(count_col),
+                        *[
+                            F.sum(src).alias(dst)
+                            for dst, src in sum_map.items()
+                        ],
+                    )
+                else:
+                    delta = _summary_delta(
+                        view_changes, group_col, count_col, sum_map
+                    )
+                s_counts = _fold_summary(
+                    summary_store, delta, group_col, count_col, sum_map,
+                    (query_name, str(epoch)),
                 )
-            s_counts = _fold_summary(
-                summary_store, delta, group_col, count_col, sum_map,
-                (query_name, str(epoch)),
-            )
-        # ---- view SECOND (upserts + tombstones through one merge)
-        marker = ":".join(str(x) for x in [epoch, *pins])
-        payload = [c for c in view_cols if c != fact_key]
-        witness = dim_fks[0]
-        # reuse the bootstrap test from the m_prev read above — a
-        # second read() would rebuild the reader per epoch (round 12)
-        if view_bootstrap:
-            view_store.commit(
-                fresh, txn=(query_name, marker), cdf=view_cdf
-            )
-            v_counts = {"bootstrap": True}
-        else:
-            tombstones = (
-                old_slice.select(fact_key)
-                .join(fresh.select(fact_key), fact_key, "left_anti")
-                .select(
-                    F.col(fact_key),
-                    *[
-                        F.lit(None).cast(t).alias(c)
-                        for c, t in fresh.dtypes
-                        if c != fact_key
-                    ],
-                )
-            )
-            # upserts + tombstones persisted once: the merge's
-            # duplicate-source guard and clause-tagged join both
-            # consume it (fresh is checkpointed, but the tombstone
-            # anti-join against the prior view would re-run per
-            # action)
-            v_source = fresh.unionByName(tombstones).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            try:
-                _o, v_counts = view_store.merge_into(
-                    v_source,
-                    # a tombstone's NULL foreign key witnesses
-                    # departure; a fresh row's foreign keys are
-                    # non-NULL by the join
-                    when_matched_delete=f"s.{witness} is null",
-                    when_matched_update={c: f"s.{c}" for c in payload},
-                    when_not_matched_insert=True,
-                    txn=(query_name, marker),
+            # ---- view SECOND: the diff itself, marker always recorded
+            txn = (query_name, ":".join(str(x) for x in [epoch, *pins]))
+            if view_bootstrap:
+                view_store.commit(fresh, txn=txn, cdf=view_cdf)
+                v_counts = {"bootstrap": True}
+            else:
+                _o, v_counts = view_store.apply_changes(
+                    view_changes, expected_version=v_dir, txn=txn,
                     cdf=view_cdf,
                 )
-            finally:
-                v_source.unpersist()
+        finally:
+            view_changes.unpersist()
         if stats is not None:
             stats.append(
                 {
@@ -1436,7 +1437,7 @@ def cdf_join_sync(
     stores' change feeds (r10 VERDICT "next round" #2) — the
     one-dimension form of :func:`cdf_star_sync`, which holds the one
     shared implementation (affected-slice re-join, per-feed version
-    pinning, O(touched) merges on both stores, summary-then-view
+    pinning, O(changed) commits on both stores, summary-then-view
     crash ordering, optional ``view_cdf`` chaining; see its docstring
     for the full contract). The composite txn marker for one
     dimension is ``"epoch:fact_ms:dim_ms"`` — byte-identical to the

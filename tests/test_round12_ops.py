@@ -2,8 +2,9 @@
 join, the dedup-free one-pass DV write, the cached live-row count,
 the overlapped DML writes, and the streaming bootstrap shortcuts must
 all be invisible in results. Also: store reads take their schema from
-the version's own footer (no inference job), and the change feed types
-its columns from the same footer."""
+the version's own footer (no inference job), the change feed types
+its columns from the same footer, and streaming view epochs commit the
+diff they computed (``DocumentStore.apply_changes``)."""
 
 import datetime
 import json
@@ -27,6 +28,8 @@ from far_finer_airtable_firestore_sync_spark.sources.store import (
     _masked_scan_with_positions,
     _run_concurrently,
     _version_live_rows,
+    diff_frames,
+    version_commit_ms,
     write_deletion_vectors,
 )
 
@@ -388,3 +391,392 @@ def test_store_cdf_keeps_the_store_types(spark, tmp_root):
         (k, "insert", ts, arr, st, None, None, None)
         for k, ts, arr, st in rows
     ]
+
+
+# ---------------------------------------------------------------------------
+# IVM view epochs commit the diff they computed (DocumentStore.apply_changes)
+# ---------------------------------------------------------------------------
+
+
+def _feed(spark, root):
+    assert cdf_source.register(spark)
+    return spark.readStream.format("store_cdf").option("path", root).load()
+
+
+def _join_stores(spark, root):
+    """A 60-row fact store over a 10-row dimension, both with a feed."""
+    fact = DocumentStore(spark, os.path.join(root, "fact"), "k")
+    dim = DocumentStore(spark, os.path.join(root, "dim"), "d")
+    dim.commit(
+        spark.createDataFrame(
+            [(i, f"seg{i % 3}") for i in range(10)], "d long, seg string"
+        ),
+        cdf=True,
+    )
+    fact.commit(
+        spark.createDataFrame(
+            [(i, i % 10, i * 100) for i in range(60)],
+            "k long, dk long, amt long",
+        ),
+        cdf=True,
+    )
+    view = DocumentStore(spark, os.path.join(root, "view"), "k")
+    summ = DocumentStore(spark, os.path.join(root, "summ"), "seg")
+    return fact, dim, view, summ
+
+
+def _start_join(spark, root, fact, dim, view, summ, view_cols, stats=None):
+    from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+        cdf_join_sync,
+    )
+
+    return cdf_join_sync(
+        _feed(spark, fact.root), _feed(spark, dim.root),
+        fact, dim, view, summ, os.path.join(root, "ck"),
+        fact_key="k", dim_fk="dk", dim_key="d", view_cols=view_cols,
+        group_col="seg", count_col="n", sum_map={"s": "amt"},
+        query_name="jv", stats=stats,
+    )
+
+
+def _join_recompute(fact, dim, view_cols):
+    f, d = fact.read().alias("f"), dim.read().alias("d")
+    vx = f.join(d, F.col("f.dk") == F.col("d.d")).select(*view_cols)
+    sx = vx.groupBy("seg").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("amt").alias("s")
+    )
+    return vx, sx
+
+
+class TestApplyChanges:
+    def test_applies_a_diff_and_records_it(self, spark, tmp_root):
+        """A diff_frames change set commits as one DV version: the
+        store then reads as the target, the sidecar holds exactly the
+        change rows and the txn marker rides the flip."""
+        s = DocumentStore(spark, tmp_root, "k")
+        s.commit(_docs(spark, 200))
+        cur = s.current_version_dir()
+        target = (
+            s.read().filter("k % 10 <> 3")
+            .withColumn("val", F.expr("if(k % 7 = 0, val + 1, val)"))
+            .unionByName(_docs(spark, 205).filter("k >= 200"))
+        )
+        changes = diff_frames(s.read(), target, "k", include_old=True)
+        out, counts = s.apply_changes(
+            changes, expected_version=cur, txn=("app", "1"), cdf=True
+        )
+        assert out != cur and s.current_version_dir() == out
+        assert counts == {
+            "updated": 27, "deleted": 20, "inserted": 5,
+            "deleted_by_source": 0,
+        }
+        _assert_same(s.read(), target)
+        _assert_same(
+            spark.read.parquet(os.path.join(out, "_changes")), changes
+        )
+        assert s.last_txn("app") == "1"
+
+    def test_empty_change_set_records_only_the_marker(self, spark, tmp_root):
+        s = DocumentStore(spark, tmp_root, "k")
+        s.commit(_docs(spark, 50))
+        cur = s.current_version_dir()
+        changes = diff_frames(s.read(), s.read(), "k", include_old=True)
+        out, counts = s.apply_changes(
+            changes, expected_version=cur, txn=("app", "7")
+        )
+        assert out == cur and not any(counts.values())
+        assert s.list_versions() == [cur]
+        assert s.last_txn("app") == "7"
+
+    def test_change_set_of_another_version_is_refused(
+        self, spark, tmp_root
+    ):
+        """Deleting keys the version no longer holds masks fewer rows
+        than the change set claims: nothing is published."""
+        s = DocumentStore(spark, tmp_root, "k")
+        s.commit(_docs(spark, 50))
+        old = s.read()
+        changes = diff_frames(
+            old, old.filter("k >= 10"), "k", include_old=True
+        ).localCheckpoint()
+        s.delete_where("k < 5")
+        versions = s.list_versions()
+        with pytest.raises(ValueError, match="not computed against"):
+            s.apply_changes(changes)
+        assert s.list_versions() == versions
+
+
+class TestViewAppliesItsDiff:
+    def test_no_change_epoch_still_advances_the_feed_pins(
+        self, spark, tmp_root
+    ):
+        """A dimension insert that no fact references changes no view
+        row, but its epoch must still record the marker carrying the
+        dimension's pin: the next epoch joins a fact insert that
+        references the new dimension row against the new snapshot."""
+        fact, dim, view, summ = _join_stores(spark, tmp_root)
+        cols = ["k", "dk", "amt", "seg"]
+        q = _start_join(spark, tmp_root, fact, dim, view, summ, cols)
+        try:
+            q.processAllAvailable()  # bootstrap
+            dim.merge_into(
+                spark.createDataFrame([(20, "segNew")], "d long, seg string"),
+                cdf=True,
+            )
+            nv = len(view.list_versions())
+            q.processAllAvailable()
+            after_dim = (len(view.list_versions()), view.last_txn("jv"))
+            dim_ms = version_commit_ms(dim.current_version_dir())
+            fact.merge_into(
+                spark.createDataFrame(
+                    [(2000, 20, 7)], "k long, dk long, amt long"
+                ),
+                cdf=True,
+            )
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        vx, sx = _join_recompute(fact, dim, cols)
+        got = view.read().collect()
+        assert [r["seg"] for r in got if r["k"] == 2000] == ["segNew"]
+        assert sorted(got) == sorted(vx.collect())
+        assert sorted(summ.read().collect()) == sorted(sx.collect())
+        # the no-change epoch wrote no version, only the marker
+        versions, marker = after_dim
+        assert versions == nv
+        epoch, _fact_ms, pin = marker.split(":")
+        assert (int(epoch), int(pin)) == (1, dim_ms)
+
+    def test_duplicate_dimension_key_rejects_the_epoch(
+        self, spark, tmp_root
+    ):
+        """A dimension store committed with a duplicate key repeats
+        fact keys in the re-joined slice: the epoch raises and no view
+        version is published."""
+        fact, dim, view, summ = _join_stores(spark, tmp_root)
+        q = _start_join(
+            spark, tmp_root, fact, dim, view, summ,
+            ["k", "dk", "amt", "seg"],
+        )
+        try:
+            q.processAllAvailable()  # bootstrap
+            nv, marker = len(view.list_versions()), view.last_txn("jv")
+            dim.commit(
+                dim.read().unionByName(
+                    spark.createDataFrame([(4, "segY")], "d long, seg string")
+                ),
+                cdf=True,
+            )
+            with pytest.raises(Exception, match=r"ValueError[\s\S]*duplicate"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert len(view.list_versions()) == nv
+        assert view.last_txn("jv") == marker
+
+
+@pytest.fixture(scope="class")
+def star_epochs(spark):
+    """A 2-dimension star maintained with ``view_cdf=True``, one epoch
+    per upstream step of every kind, checked against the recompute
+    after each epoch. The view leaves out the second foreign key
+    (``fb``), whose move to a missing dimension row is a departure.
+    The view's ``merge_into`` is replaced by one that raises: view
+    commits never go back through MERGE."""
+    from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+        cdf_star_sync,
+    )
+
+    root = tempfile.mkdtemp(prefix="ffs_r12_star_")
+    fact = DocumentStore(spark, os.path.join(root, "fact"), "k")
+    da = DocumentStore(spark, os.path.join(root, "da"), "a")
+    db = DocumentStore(spark, os.path.join(root, "db"), "b")
+    da.commit(
+        spark.createDataFrame(
+            [(i, f"A{i % 2}") for i in range(6)], "a long, aseg string"
+        ),
+        cdf=True,
+    )
+    db.commit(
+        spark.createDataFrame(
+            [(i, f"B{i % 3}") for i in range(9)], "b long, bseg string"
+        ),
+        cdf=True,
+    )
+    fact.commit(
+        spark.createDataFrame(
+            [(i, i % 6, i % 9, i * 10, "n") for i in range(60)],
+            "k long, fa long, fb long, amt long, note string",
+        ),
+        cdf=True,
+    )
+    view = DocumentStore(spark, os.path.join(root, "view"), "k")
+    summ = DocumentStore(spark, os.path.join(root, "summ"), "aseg")
+
+    def refuse(*_a, **_k):
+        raise AssertionError("view commit went through merge_into")
+
+    view.merge_into = refuse
+    cols = ["k", "fa", "amt", "aseg", "bseg"]
+
+    def matches_recompute() -> tuple[bool, bool]:
+        """(view == recompute, summary == recompute): the view and the
+        recomputed star come back in one action, the summary in one."""
+        f, va, vb = fact.read().alias("f"), da.read().alias("da"), \
+            db.read().alias("db")
+        vx = (
+            f.join(va, F.col("f.fa") == F.col("da.a"))
+            .join(vb, F.col("f.fb") == F.col("db.b"))
+            .select(*cols)
+        )
+        both = view.read().select(*cols, F.lit(True).alias("got")) \
+            .unionByName(vx.withColumn("got", F.lit(False))).collect()
+        got = sorted(tuple(r)[:-1] for r in both if r["got"])
+        want = sorted(tuple(r)[:-1] for r in both if not r["got"])
+        sx: dict = {}
+        for r in want:
+            n, total = sx.get(r[3], (0, 0))
+            sx[r[3]] = (n + 1, total + r[2])  # aseg -> (n, sum of amt)
+        summary = {r["aseg"]: (r["n"], r["s"]) for r in summ.read().collect()}
+        return got == want, summary == sx
+
+    steps = {
+        "bootstrap": lambda: None,
+        "fact update, non-view column": lambda: fact.update_where(
+            "k % 7 = 0", {"note": "'x'"}, cdf=True
+        ),
+        "fact update, view column": lambda: fact.update_where(
+            "k % 15 = 1", {"amt": "amt + 5"}, cdf=True
+        ),
+        "dimension group move": lambda: da.update_where(
+            "a = 2", {"aseg": "'AX'"}, cdf=True
+        ),
+        "foreign key to a missing dimension row": lambda: fact.update_where(
+            "k = 7", {"fb": "99"}, cdf=True
+        ),
+        "fact delete": lambda: fact.delete_where("k % 10 = 9", cdf=True),
+        "fact insert": lambda: fact.merge_into(
+            spark.createDataFrame(
+                [(1000, 2, 4, 77, "n"), (1001, 5, 8, 78, "n")],
+                "k long, fa long, fb long, amt long, note string",
+            ),
+            cdf=True,
+        ),
+    }
+    stats: list = []
+    epochs = []
+    q = cdf_star_sync(
+        _feed(spark, fact.root),
+        [_feed(spark, da.root), _feed(spark, db.root)],
+        fact, [da, db], view, summ, os.path.join(root, "ck"),
+        fact_key="k", dim_fks=["fa", "fb"], dim_keys=["a", "b"],
+        view_cols=cols, group_col="aseg", count_col="n",
+        sum_map={"s": "amt"}, query_name="star", stats=stats, view_cdf=True,
+    )
+    try:
+        for name, step in steps.items():
+            step()
+            q.processAllAvailable()
+            view_equal, summary_equal = matches_recompute()
+            epochs.append({
+                "step": name,
+                "view_equal": view_equal,
+                "summary_equal": summary_equal,
+                "versions": len(view.list_versions()),
+            })
+    finally:
+        q.stop()
+    yield {
+        "epochs": epochs, "stats": stats, "view": view, "root": root,
+        "stores": (fact, da, db, summ),
+    }
+    shutil.rmtree(root, ignore_errors=True)
+
+
+class TestStarViewEpochs:
+    def test_every_epoch_equals_the_recompute(self, star_epochs):
+        """After every epoch the view and its summary equal the full
+        recompute; a non-bootstrap epoch never called merge_into."""
+        epochs = star_epochs["epochs"]
+        assert len(epochs) == 7
+        for e in epochs:
+            assert e["view_equal"] and e["summary_equal"], e
+        # the non-view-column update changed no view row: no version
+        assert epochs[1]["versions"] == epochs[0]["versions"]
+        assert [s["epoch"] for s in star_epochs["stats"]] == list(range(7))
+
+    def test_view_without_foreign_key_column(self, spark, star_epochs):
+        """The view need not carry a foreign key (the fixture's view
+        omits ``fb`` and stayed equal to the recompute); it must carry
+        the fact key."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_star_sync,
+        )
+
+        assert "fb" not in star_epochs["view"].read().columns
+        fact, da, db, summ = star_epochs["stores"]
+        with pytest.raises(ValueError, match="fact key"):
+            cdf_star_sync(
+                _feed(spark, fact.root),
+                [_feed(spark, da.root), _feed(spark, db.root)],
+                fact, [da, db], star_epochs["view"], summ,
+                os.path.join(star_epochs["root"], "ck_x"),
+                fact_key="k", dim_fks=["fa", "fb"], dim_keys=["a", "b"],
+                view_cols=["fa", "amt", "aseg"], group_col="aseg",
+                count_col="n", sum_map={"s": "amt"},
+            )
+
+    def test_view_feed_holds_exactly_the_real_changes(
+        self, spark, star_epochs
+    ):
+        """Each view version's change sidecar equals the diff of that
+        version against its predecessor, so no ``update`` row's post
+        image equals its pre image."""
+        view = star_epochs["view"]
+        versions = view.list_versions()
+        feed = spark.read.format("store_cdf").option(
+            "path", view.root
+        ).load()
+        rows = feed.collect()
+        boot_ms = version_commit_ms(versions[0])
+        assert {r["change_type"] for r in rows if r["commit_ms"] == boot_ms} \
+            == {"insert"}
+        later = [r for r in rows if r["commit_ms"] > boot_ms]
+        real = None
+        for prev, cur in zip(versions, versions[1:]):
+            diff = view.diff_versions(prev, cur, include_old=True).withColumn(
+                "commit_ms", F.lit(version_commit_ms(cur))
+            )
+            real = diff if real is None else real.unionByName(diff)
+        assert sorted(later, key=str) == sorted(
+            real.select(*feed.columns).collect(), key=str
+        )
+        assert not [
+            r for r in later if r["change_type"] == "update" and all(
+                r[c] == r[f"old_{c}"] for c in ("fa", "amt", "aseg", "bseg")
+            )
+        ]
+
+    def test_second_tier_rollup_over_the_view_feed(self, spark, star_epochs):
+        """A tier-2 cdf_rollup_sync over the view's own feed equals the
+        rollup of the maintained view."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_rollup_sync,
+        )
+
+        view, root = star_epochs["view"], star_epochs["root"]
+        tier2 = DocumentStore(spark, os.path.join(root, "t2"), "fa")
+        q = cdf_rollup_sync(
+            _feed(spark, view.root), tier2, os.path.join(root, "ck2"),
+            "fa", "n", {"s": "amt"}, "t2",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        _assert_same(
+            tier2.read(),
+            view.read().groupBy("fa").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("amt").alias("s")
+            ),
+        )
