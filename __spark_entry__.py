@@ -2838,9 +2838,10 @@ def _q_store_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.update_where("k % 13 = 0", {"bal64": "bal64 + 64"}, cdf=True)
     run_once()  # restart: exactly the two new versions replay
     # O(touched groups) write (round 11): the restart epoch committed
-    # through merge_into, so its write row count must equal the
-    # groups the two DML commits actually touched — computed
-    # independently here from the pre-DML snapshot v2
+    # the touched groups' diff through apply_changes, so its write row
+    # count must equal the groups the two DML commits actually touched
+    # (each one changes its count or its sum) — computed independently
+    # here from the pre-DML snapshot v2
     v3f = v2.filter("k % 11 <> 0")
     n_touched = (
         v2.filter("k % 11 = 0")
@@ -3280,8 +3281,9 @@ def _q_store_cdf_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.update_where("k % 13 = 0", {"bal64": "bal64 + 64000"}, cdf=True)
     src.update_where("k % 26 = 0", {"bal64": "bal64 + 64000"}, cdf=True)
     run_once()
-    # O(touched groups) write (round 11): the restart epoch's merge
-    # touched exactly the groups named by the telescoped changelog —
+    # O(touched groups) write (round 11): the restart epoch's
+    # apply_changes diff holds exactly the groups named by the
+    # telescoped changelog (each one changes its count or its sum) —
     # deleted keys' groups ∪ updated keys' groups, computed here
     # independently from the replayed intermediate snapshots
     v2f = v1.filter("bal64 < 576000")
@@ -5003,8 +5005,9 @@ def _q_store_cdf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots VERSION-PINNED to the newest commit each feed
     delivered, and commits O(changed) on both downstream stores —
     the view as its own diff of the affected slice (``apply_changes``:
-    masked old images, appended new ones), the summary as signed
-    corrections through ``merge_into`` — under per-store txn markers
+    masked old images, appended new ones), the summary as the diff of
+    its touched groups after folding in the signed corrections —
+    under per-store txn markers
     (summary-then-view ordering makes a crash between them replay
     cleanly). The entry FORCES A RESTART: a dimension group move, a
     fact delete, a fact update, and an insert pointing at the moved

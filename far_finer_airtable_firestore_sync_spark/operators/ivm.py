@@ -23,11 +23,20 @@ Exactness contract: sum columns should be decimal (or integer) typed —
 decimal addition is associative, so base + delta is bit-identical to a
 direct recompute regardless of execution order. Double sums would
 drift in the last ulp between the two plans.
+
+One NULL limit remains, in the batch fold and in the streaming
+summaries that use it: when a changelog touches a group already in
+the summary, a sum column whose group values are then all NULL reads
+0 where the recompute's ``SUM`` reads NULL (the fold adds through
+``coalesce``). A group new to the summary takes its delta sums as
+they are, so an all-NULL new group stays NULL, and an untouched
+group keeps its stored value. An exact fix needs a non-NULL count
+per sum column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from far_finer_airtable_firestore_sync_spark.sources.store import diff_frames
@@ -75,6 +84,44 @@ def rollup_delta(
     )
 
 
+def _rollup_fold(
+    b_here: Column, d_here: Column, count_col: str, sum_map: dict[str, str]
+) -> dict[str, Column]:
+    """The per-group fold of a base rollup row (alias ``b``) and its
+    ``rollup_delta`` correction (alias ``d``), one expression per
+    rollup value column: counts add; sums of a group seen only in the
+    base carry over unchanged, a group seen only in the delta takes its
+    corrections as they are, a group in both adds them through
+    ``coalesce`` (the NULL limit in the module docstring). ``b_here``
+    and ``d_here`` say which side of the joined row is present."""
+    zero = F.lit(0)
+    fold = {
+        count_col: F.coalesce(F.col(f"b.{count_col}"), zero.cast("long"))
+        + F.coalesce(F.col("d.d_count"), zero.cast("long"))
+    }
+    for base_col, src in sum_map.items():
+        b_sum, d_sum = F.col(f"b.{base_col}"), F.col(f"d.d_{src}")
+        fold[base_col] = (
+            F.when(~d_here, b_sum)
+            .when(~b_here, d_sum)
+            .otherwise(F.coalesce(b_sum, zero) + F.coalesce(d_sum, zero))
+        )
+    return fold
+
+
+def _join_rollup_delta(
+    base: DataFrame, delta: DataFrame, group_col: str, how: str
+) -> DataFrame:
+    # eqNullSafe: a NULL group key is a legal group (Spark GROUP BY
+    # keeps it) — plain equality would never match base and delta NULL
+    # rows, leaving the stale base row AND dropping the correction.
+    return base.alias("b").join(
+        delta.alias("d"),
+        F.col(f"b.{group_col}").eqNullSafe(F.col(f"d.{group_col}")),
+        how,
+    )
+
+
 def apply_rollup_delta(
     base: DataFrame,
     delta: DataFrame,
@@ -87,7 +134,10 @@ def apply_rollup_delta(
     ``base`` has (``group_col``, ``count_col``, *sum_map keys*);
     ``sum_map`` maps each base sum column to its source column name in
     the changelog (so ``d_<source>`` lines up). Groups whose count
-    reaches zero disappear; groups seen only in the delta appear.
+    reaches zero disappear; groups seen only in the delta appear with
+    their corrections as they are; groups in both add, their sums
+    through ``coalesce`` (the NULL limit in the module docstring);
+    groups seen only in the base carry over unchanged.
 
     Scale shape: one outer join keyed on the group — the delta side is
     tiny (touched groups only), so AQE broadcasts it; the base is
@@ -96,33 +146,66 @@ def apply_rollup_delta(
     commit (see the `streaming_rollup_store` oracle for the
     checksum-upsert variant driven by Structured Streaming).
     """
-    d = delta.alias("d")
-    b = base.alias("b")
-    # eqNullSafe: a NULL group key is a legal group (Spark GROUP BY
-    # keeps it) — plain equality would never merge base and delta NULL
-    # rows, leaving the stale base row AND dropping the correction.
-    j = b.join(
-        d,
-        F.col(f"b.{group_col}").eqNullSafe(F.col(f"d.{group_col}")),
-        "full_outer",
-    )
-    zero = F.lit(0)
-    n = F.coalesce(F.col(f"b.{count_col}"), zero.cast("long")) + F.coalesce(
-        F.col("d.d_count"), zero.cast("long")
-    )
+    j = _join_rollup_delta(base, delta, group_col, "full_outer")
     # both sides carry the key when matched; either may be NULL-typed
-    # on an unmatched outer row — the marker column distinguishes a
-    # present-but-NULL key from an absent side
-    key = F.when(
-        F.col(f"b.{count_col}").isNotNull(), F.col(f"b.{group_col}")
-    ).otherwise(F.col(f"d.{group_col}"))
-    out = [key.alias(group_col), n.alias(count_col)]
-    for base_col, src in sum_map.items():
-        merged = F.coalesce(F.col(f"b.{base_col}"), zero) + F.coalesce(
-            F.col(f"d.d_{src}"), zero
+    # on an unmatched outer row — the count columns (never NULL on a
+    # present row) distinguish a present-but-NULL key from an absent
+    # side
+    b_here = F.col(f"b.{count_col}").isNotNull()
+    d_here = F.col("d.d_count").isNotNull()
+    key = F.when(b_here, F.col(f"b.{group_col}")).otherwise(
+        F.col(f"d.{group_col}")
+    )
+    fold = _rollup_fold(b_here, d_here, count_col, sum_map)
+    return j.select(
+        key.alias(group_col), *[v.alias(c) for c, v in fold.items()]
+    ).filter(F.col(count_col) > 0)
+
+
+def rollup_delta_changes(
+    base: DataFrame,
+    delta: DataFrame,
+    group_col: str,
+    count_col: str,
+    sum_map: dict[str, str],
+) -> DataFrame:
+    """The change set that :func:`apply_rollup_delta` makes to
+    ``base``, in :func:`diff_frames` ``include_old=True`` shape (group,
+    ``change_type``, post images, ``old_*`` pre images) — what
+    ``DocumentStore.apply_changes`` commits. It equals
+    ``diff_frames(old, apply_rollup_delta(old, delta, ...), group_col,
+    include_old=True)`` for ``old`` = the base rows of the delta's
+    groups, but is computed inside the fold's own join: ``base``
+    right-joined to ``delta`` null-safely reads only those rows, and
+    each joined row yields its own diff row — a group whose count
+    reaches zero is a ``delete``, a group new to the base an
+    ``insert``, a group whose values changed an ``update``, and a group
+    the fold leaves equal nothing. No second join re-matches the two
+    slices, so a commit pays one join fewer (Spark jobs per epoch
+    track joins: each is a shuffle or broadcast stage)."""
+    j = _join_rollup_delta(base, delta, group_col, "right")
+    b_here = F.col(f"b.{count_col}").isNotNull()
+    fold = _rollup_fold(b_here, F.lit(True), count_col, sum_map)
+    new_here = fold[count_col] > 0
+    same = F.lit(True)
+    for c, v in fold.items():
+        same = same & F.col(f"b.{c}").eqNullSafe(v)
+    change = (
+        F.when(~b_here, F.lit("insert"))
+        .when(~new_here, F.lit("delete"))
+        .when(~same, F.lit("update"))
+    )
+    return (
+        j.filter(b_here | new_here)
+        .withColumn("change_type", change)
+        .filter(F.col("change_type").isNotNull())
+        .select(
+            F.col(f"d.{group_col}").alias(group_col),
+            "change_type",
+            *[F.when(new_here, v).alias(c) for c, v in fold.items()],
+            *[F.col(f"b.{c}").alias(f"old_{c}") for c in fold],
         )
-        out.append(merged.alias(base_col))
-    return j.select(*out).filter(F.col(count_col) > 0)
+    )
 
 
 def incremental_rollup(
@@ -332,6 +415,50 @@ def incremental_rollup_extrema(
     )
 
 
+def affected_star_keys(
+    fact_new: DataFrame,
+    fact_changes: DataFrame,
+    dims: list,
+    fact_key: str,
+) -> DataFrame:
+    """Fact keys whose star-view rows may have changed: keys touched by
+    the fact changelog itself, plus, per dimension, fact rows (in the
+    NEW fact snapshot) whose foreign key that dimension's changelog
+    touched. A fact row whose OWN foreign key moved is in the fact
+    changelog; a deleted fact row likewise — so these legs cover every
+    row that can enter or leave the view (Gupta & Mumick delta rules
+    specialized to a key-preserving star).
+
+    ``dims`` holds one ``(dim_new, dim_changes, dim_fk, dim_key)`` per
+    dimension (``dim_new`` is not read here): ``dim_fk`` is the FACT
+    column joining to it and ``dim_key`` names the key column IN THE
+    DIM CHANGELOG — explicitly, not positionally (r8 ADVICE:
+    inferring it as ``dim_changes.columns[0]`` happened to work only
+    because ``diff_versions`` emits the key first; any other changelog
+    shape silently maintained the wrong rows).
+
+    Scale shape: the fact leg is the (delta-sized) changelog's key
+    column; each dimension leg is a semi-join of the fact table
+    against the (delta-sized) dim key set — with the fact bucketed on
+    the foreign key this is a pruned probe, never a full shuffle. No
+    forced broadcast: the dim key set is changelog-bounded for sliver
+    deltas but backfill-sized for a bulk load — AQE broadcasts small
+    sides at runtime and falls back to a shuffle join when the delta
+    outgrows the threshold (r8 VERDICT "what's wrong" #3: an
+    unconditional ``F.broadcast`` here is a driver OOM on a
+    backfill-sized CDC batch)."""
+    affected = fact_changes.select(F.col(fact_key))
+    for _dim_new, dim_changes, dim_fk, dim_key in dims:
+        dim_keys = dim_changes.select(
+            F.col(dim_key).alias("_dk")
+        ).distinct()
+        leg = fact_new.join(
+            dim_keys, fact_new[dim_fk] == F.col("_dk"), "left_semi"
+        ).select(F.col(fact_key))
+        affected = affected.unionByName(leg)
+    return affected.distinct()
+
+
 def affected_fact_keys(
     fact_new: DataFrame,
     fact_changes: DataFrame,
@@ -340,68 +467,37 @@ def affected_fact_keys(
     dim_fk: str,
     dim_key: str,
 ) -> DataFrame:
-    """Fact keys whose materialized-join rows may have changed:
-    keys touched by the fact changelog itself, plus fact rows (in the
-    NEW fact snapshot) whose dimension foreign key was touched by the
-    dim changelog. A fact row whose OWN foreign key moved is in the
-    fact changelog; a deleted fact row likewise — so these two legs
-    cover every row that can enter or leave the view (Gupta & Mumick
-    delta rules specialized to a key-preserving equi-join).
-
-    ``dim_key`` names the dimension key column IN THE DIM CHANGELOG —
-    explicitly, not positionally (r8 ADVICE: inferring it as
-    ``dim_changes.columns[0]`` happened to work only because
-    ``diff_versions`` emits the key first; any other changelog shape
-    silently maintained the wrong rows).
-
-    Scale shape: leg 1 is the (delta-sized) changelog's key column;
-    leg 2 is a semi-join of the fact table against the (delta-sized)
-    dim key set — with the fact bucketed on the foreign key this is a
-    pruned probe, never a full shuffle. No forced broadcast: the dim
-    key set is changelog-bounded for sliver deltas but backfill-sized
-    for a bulk load — AQE broadcasts small sides at runtime and falls
-    back to a shuffle join when the delta outgrows the threshold
-    (r8 VERDICT "what's wrong" #3: an unconditional ``F.broadcast``
-    here is a driver OOM on a backfill-sized CDC batch)."""
-    leg1 = fact_changes.select(F.col(fact_key))
-    dim_keys = dim_changes.select(F.col(dim_key).alias("_dk")).distinct()
-    leg2 = fact_new.join(
-        dim_keys,
-        fact_new[dim_fk] == F.col("_dk"),
-        "left_semi",
-    ).select(F.col(fact_key))
-    return leg1.unionByName(leg2).distinct()
+    """:func:`affected_star_keys` for a one-dimension join view."""
+    return affected_star_keys(
+        fact_new, fact_changes, [(None, dim_changes, dim_fk, dim_key)],
+        fact_key,
+    )
 
 
-def _join_view_slices(
+def _star_view_slices(
     m_prev: DataFrame,
     fact_new: DataFrame,
-    dim_new: DataFrame,
+    dims: list,
     fact_changes: DataFrame,
-    dim_changes: DataFrame,
     fact_key: str,
-    dim_fk: str,
-    dim_key: str,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three slices every join-view maintenance plan is built
+    """The three slices every star-view maintenance plan is built
     from: ``(carried, old_slice, fresh)`` where ``carried`` is the
-    untouched bulk of the prior view (anti-join on affected keys),
-    ``old_slice`` the prior view's rows being replaced (semi-join),
-    and ``fresh`` the re-joined affected slice of the new snapshots.
-    ``carried ∪ fresh`` is the refreshed view; ``old_slice`` vs
-    ``fresh`` is the view's own CDC (what aggregate maintenance
-    needs). All joins on the affected set are AQE-sized, not forced
-    broadcasts."""
-    affected = affected_fact_keys(
-        fact_new, fact_changes, dim_changes, fact_key, dim_fk, dim_key
-    )
+    untouched bulk of the prior view (anti-join on the
+    :func:`affected_star_keys`), ``old_slice`` the prior view's rows
+    being replaced (semi-join), and ``fresh`` the affected fact rows
+    re-joined against every new dimension snapshot, projected to
+    ``m_prev``'s columns. ``carried ∪ fresh`` is the refreshed view;
+    ``old_slice`` vs ``fresh`` is the view's own CDC (what aggregate
+    maintenance needs). All joins on the affected set are AQE-sized,
+    not forced broadcasts."""
+    affected = affected_star_keys(fact_new, fact_changes, dims, fact_key)
     carried = m_prev.join(affected, fact_key, "left_anti")
     old_slice = m_prev.join(affected, fact_key, "left_semi")
-    fresh = (
-        fact_new.join(affected, fact_key, "left_semi")
-        .join(dim_new, fact_new[dim_fk] == dim_new[dim_key])
-        .select(*[F.col(c) for c in m_prev.columns])
-    )
+    fresh = fact_new.join(affected, fact_key, "left_semi")
+    for dim_new, _chg, dim_fk, dim_key in dims:
+        fresh = fresh.join(dim_new, fresh[dim_fk] == dim_new[dim_key])
+    fresh = fresh.select(*[F.col(c) for c in m_prev.columns])
     return carried, old_slice, fresh
 
 
@@ -418,7 +514,7 @@ def incremental_join_refresh(
     """Maintain a materialized equi-join view ``M = F join D on
     F.dim_fk = D.dim_key`` (key-preserving: one row per surviving
     fact row) from the two CDC changelogs, touching only affected
-    keys:
+    keys — the one-dimension :func:`incremental_star_refresh`:
 
         M' = (M_prev anti-join affected) union
              ((F'[affected]) join D')
@@ -430,13 +526,11 @@ def incremental_join_refresh(
 
     Columns of ``m_prev`` define the view's schema; the fresh slice
     is projected to the same columns. ``dim_key`` also names the key
-    column in ``dim_changes`` (forwarded to
-    :func:`affected_fact_keys`; r8 ADVICE)."""
-    carried, _old, fresh = _join_view_slices(
-        m_prev, fact_new, dim_new, fact_changes, dim_changes,
-        fact_key, dim_fk, dim_key,
+    column in ``dim_changes`` (r8 ADVICE)."""
+    return incremental_star_refresh(
+        m_prev, fact_new, [(dim_new, dim_changes, dim_fk, dim_key)],
+        fact_changes, fact_key,
     )
-    return carried.unionByName(fresh)
 
 
 def incremental_join_rollup(
@@ -463,14 +557,15 @@ def incremental_join_rollup(
     feeds the aggregate's delta; r8 VERDICT next-round #3).
 
     Composition: the affected slice of the join view is re-derived
-    (:func:`_join_view_slices`), its before/after rows are diffed on
-    ``fact_key`` into a CDC changelog of the VIEW itself (the store's
-    public ``diff_frames`` seam — one null-safe full-outer join over two
-    changelog-bounded slices), and that changelog drives the existing
-    self-maintainable rollup path (:func:`incremental_rollup`): signed
-    per-group corrections, merged into ``summary_prev`` touching only
-    affected groups. Neither the fact nor the dim table is
-    re-aggregated; base-table access is one semi-join probe of F'.
+    (:func:`_star_view_slices` with one dimension), its before/after
+    rows are diffed on ``fact_key`` into a CDC changelog of the VIEW
+    itself (the store's public ``diff_frames`` seam — one null-safe
+    full-outer join over two changelog-bounded slices), and that
+    changelog drives the existing self-maintainable rollup path
+    (:func:`incremental_rollup`): signed per-group corrections,
+    merged into ``summary_prev`` touching only affected groups.
+    Neither the fact nor the dim table is re-aggregated; base-table
+    access is one semi-join probe of F'.
 
     Returns ``(view_new, summary_new)`` — the refreshed join view
     (``carried ∪ fresh``, shared slices, no recompute) and the
@@ -478,9 +573,9 @@ def incremental_join_rollup(
     (typically a dim attribute); ``sum_map`` maps summary sum columns
     to their view source columns, decimal/integer typed for exactness
     (module docstring contract)."""
-    carried, old_slice, fresh = _join_view_slices(
-        m_prev, fact_new, dim_new, fact_changes, dim_changes,
-        fact_key, dim_fk, dim_key,
+    carried, old_slice, fresh = _star_view_slices(
+        m_prev, fact_new, [(dim_new, dim_changes, dim_fk, dim_key)],
+        fact_changes, fact_key,
     )
     view_changes = diff_frames(
         old_slice, fresh, fact_key, include_old=True
@@ -501,12 +596,11 @@ def incremental_star_refresh(
     """Maintain a STAR-schema materialized view ``M = F join D1 join
     ... join Dn`` (each an equi-join on its own foreign key;
     key-preserving: one row per surviving fact row) from the n+1 CDC
-    changelogs — the multi-dimension generalization of
-    :func:`incremental_join_refresh` (Gupta & Mumick delta rules
-    applied join-by-join: a fact row's view output can change only if
-    the fact changelog touched it or ANY of its dimension rows was
-    touched, so the affected set is the union of one fact leg and one
-    semi-join leg per dimension).
+    changelogs (Gupta & Mumick delta rules applied join-by-join: a
+    fact row's view output can change only if the fact changelog
+    touched it or ANY of its dimension rows was touched, so the
+    affected set is the union of one fact leg and one semi-join leg
+    per dimension, :func:`affected_star_keys`).
 
     ``dims`` is a list of ``(dim_new, dim_changes, dim_fk, dim_key)``
     — the new dim snapshot, its changelog, the FACT column joining to
@@ -518,21 +612,9 @@ def incremental_star_refresh(
     dims (each dim join individually broadcastable by AQE); the
     untouched bulk of the view carries forward scan-free. No forced
     broadcasts anywhere."""
-    affected = fact_changes.select(F.col(fact_key))
-    for _dim_new, dim_changes, dim_fk, dim_key in dims:
-        dim_keys = dim_changes.select(
-            F.col(dim_key).alias("_dk")
-        ).distinct()
-        leg = fact_new.join(
-            dim_keys, fact_new[dim_fk] == F.col("_dk"), "left_semi"
-        ).select(F.col(fact_key))
-        affected = affected.unionByName(leg)
-    affected = affected.distinct()
-    carried = m_prev.join(affected, fact_key, "left_anti")
-    fresh = fact_new.join(affected, fact_key, "left_semi")
-    for dim_new, _chg, dim_fk, dim_key in dims:
-        fresh = fresh.join(dim_new, fresh[dim_fk] == dim_new[dim_key])
-    fresh = fresh.select(*[F.col(c) for c in m_prev.columns])
+    carried, _old, fresh = _star_view_slices(
+        m_prev, fact_new, dims, fact_changes, fact_key
+    )
     return carried.unionByName(fresh)
 
 

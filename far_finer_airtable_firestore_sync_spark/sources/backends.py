@@ -688,7 +688,6 @@ class TransactionalParquetBackend:
         test_hook=None,
         cdf: bool = False,
         schema_evolution: bool = False,
-        reject_null_source_key: bool = False,
     ) -> tuple[str, dict]:
         """Multi-clause MERGE INTO on the LOCK-FREE log — the
         cross-host form of ``DocumentStore.merge_into``, completing
@@ -725,7 +724,6 @@ class TransactionalParquetBackend:
                 self.key_col, when_matched_update, update_condition,
                 when_matched_delete, when_not_matched_insert,
                 when_not_matched_by_source_delete, schema_evolution,
-                reject_null_source_key,
             )
             return merge_into_build(
                 self.spark, base, out, plan, self.key_col,

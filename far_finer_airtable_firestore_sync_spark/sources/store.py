@@ -1033,7 +1033,6 @@ class DocumentStore:
         expected_version: Optional[str] = None,
         txn: Optional[tuple[str, str]] = None,
         schema_evolution: bool = False,
-        reject_null_source_key: bool = False,
     ) -> tuple[str, dict[str, int]]:
         """Multi-clause MERGE INTO as ONE deletion-vector commit — the
         capstone over the row-level DML machinery: the upsert shape
@@ -1077,9 +1076,9 @@ class DocumentStore:
 
         ``txn=(app_id, version)`` rides the pointer flip atomically
         (the Delta txnAppId/txnVersion pattern — see :meth:`commit`),
-        making merge-based streaming consumers exactly-once under
-        foreachBatch retries; a no-op merge records no marker, which
-        is safe because replaying a no-op is again a no-op.
+        making a foreachBatch writer exactly-once under retries; a
+        no-op merge records no marker, which is safe because replaying
+        a no-op is again a no-op.
 
         ``schema_evolution=True`` is Delta's ``withSchemaEvolution()``
         MERGE: source columns absent from the target WIDEN it —
@@ -1102,7 +1101,6 @@ class DocumentStore:
             self.key_col, when_matched_update, update_condition,
             when_matched_delete, when_not_matched_insert,
             when_not_matched_by_source_delete, schema_evolution,
-            reject_null_source_key,
         )
         rel, out = self._new_version()
         changed, counts = merge_into_build(
@@ -1781,7 +1779,6 @@ def derive_merge_clauses(
     when_not_matched_insert: bool,
     when_not_matched_by_source_delete: Optional[str] = None,
     schema_evolution: bool = False,
-    reject_null_source_key: bool = False,
 ) -> dict:
     """Validate and derive the clause outcomes of a MERGE — the
     engine-independent half shared by
@@ -1830,15 +1827,7 @@ def derive_merge_clauses(
     must mark the published version mixed-schema
     (:data:`_MIXED_SCHEMA_MARKER`) because untouched linked files
     still carry the narrow schema. Returns the evolved column list as
-    ``plan["columns"]`` and ``plan["evolved"]`` (the new columns).
-
-    ``reject_null_source_key=True`` (round 11) folds the streaming
-    consumers' NULL-group-key rejection into the same fused
-    validation action — a NULL source key would silently INSERT a
-    duplicate NULL row every epoch instead of merging (``t.k = s.k``
-    never matches NULL). Requires the fused-guards clause shape
-    (insert enabled, ungated update) so every source row is provably
-    present in the tagged frame."""
+    ``plan["columns"]`` and ``plan["evolved"]`` (the new columns)."""
     if when_matched_update is None and when_matched_delete is None \
             and not when_not_matched_insert \
             and when_not_matched_by_source_delete is None:
@@ -1970,10 +1959,10 @@ def derive_merge_clauses(
     tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
     # ONE action for all four clause counts (fused validation). On
     # the fused-guards path the same action ALSO carries the
-    # duplicate-source probe and the NULL-source-key count: a per-key
-    # pre-aggregation (which reuses the join's key partitioning — no
-    # extra exchange) feeds the global fold, so validation costs zero
-    # additional jobs on top of the counts the merge needs anyway.
+    # duplicate-source probe: a per-key pre-aggregation (which reuses
+    # the join's key partitioning — no extra exchange) feeds the global
+    # fold, so validation costs zero additional jobs on top of the
+    # counts the merge needs anyway.
     clause_names = ("delete", "update", "insert", "nbs_delete")
     try:
         if fused_guards:
@@ -2000,13 +1989,6 @@ def derive_merge_clauses(
                     ).otherwise(F.lit(0))
                 ).alias("_ffs_nullsrc"),
             ).first()
-            if reject_null_source_key and (crow["_ffs_nullsrc"] or 0) > 0:
-                raise ValueError(
-                    "cdf summary sync: NULL group key in the change "
-                    "feed — the merge-based summary commit cannot key "
-                    "on NULL (standard MERGE semantics); coalesce the "
-                    "group column upstream or use the batch IVM path"
-                )
             # the original guard groups NULL keys as one bucket too
             if (crow["_ffs_maxsrc"] or 0) > 1 \
                     or (crow["_ffs_nullsrc"] or 0) > 1:
@@ -2016,11 +1998,6 @@ def derive_merge_clauses(
                     "nondeterministic"
                 )
         else:
-            if reject_null_source_key:
-                raise ValueError(
-                    "reject_null_source_key requires the fused-guards "
-                    "clause shape (insert enabled, ungated update)"
-                )
             crow = tagged.agg(
                 *[
                     F.count(
@@ -2130,8 +2107,10 @@ def diff_frames(
     """PUBLIC CDC seam: the row-diff plan shared by
     :meth:`DocumentStore.diff_versions` (full snapshots),
     :meth:`DocumentStore.repair_rows` (bucket-pruned inputs), the
-    change feed, and ``operators.ivm.incremental_join_rollup`` (which
-    diffs the affected join-view slices into the view's own CDC) —
+    change feed, ``operators.ivm.incremental_join_rollup`` (which
+    diffs the affected join-view slices into the view's own CDC) and
+    every streaming IVM commit (``streaming.sync``, through
+    :meth:`DocumentStore.apply_changes`) —
     one null-safe full-outer join on ``key`` emitting
     (key, change_type, post-image columns[, old_<col> pre-images]).
 

@@ -24,8 +24,18 @@ from far_finer_airtable_firestore_sync_spark.functions import textsql as tx
 
 from far_finer_airtable_firestore_sync_spark.config import SyncSpec, UpdateType
 from far_finer_airtable_firestore_sync_spark.functions.canonical import Field
+from far_finer_airtable_firestore_sync_spark.operators.ivm import (
+    affected_star_keys,
+    collapse_changelog,
+    incremental_rollup_extrema,
+    rollup_delta,
+    rollup_delta_changes,
+)
 from far_finer_airtable_firestore_sync_spark.operators.strategies import get_strategy
-from far_finer_airtable_firestore_sync_spark.sources.store import DocumentStore
+from far_finer_airtable_firestore_sync_spark.sources.store import (
+    DocumentStore,
+    diff_frames,
+)
 
 #: Fallback stream schema for fixture generations whose events `ts` is
 #: NANOS parquet timestamps surfacing as int64 under ``nanosAsLong``
@@ -678,23 +688,6 @@ def continuous_rollup(
     )
 
 
-def _delta_merge_guard(delta: DataFrame, group_col: str) -> None:
-    """The merge-based summary commit keys on the group column with
-    standard MERGE semantics (``t.k = s.k`` — NULLs never match, as
-    in SQL/Delta), so a NULL group key would silently insert a
-    duplicate NULL row every epoch instead of merging. The batch
-    full-commit path (``apply_rollup_delta``) handles NULL groups
-    null-safely; the streaming merge path REJECTS them loudly —
-    bounded probe on the sliver-sized delta, not a full count."""
-    if delta.filter(F.col(group_col).isNull()).limit(1).count():
-        raise ValueError(
-            "cdf summary sync: NULL group key in the change feed — "
-            "the merge-based summary commit cannot key on NULL "
-            "(standard MERGE semantics); coalesce the group column "
-            "upstream or use the batch IVM path"
-        )
-
-
 def _checkpoint_key_unique(df: DataFrame, key: str, what: str) -> DataFrame:
     """``df.localCheckpoint(eager=True)``, raising ``ValueError`` when
     two rows share ``key``. The check rides the checkpoint job (a
@@ -717,20 +710,23 @@ def _checkpoint_key_unique(df: DataFrame, key: str, what: str) -> DataFrame:
         raise ValueError(msg) from e
 
 
-def _summary_delta(
-    changes: DataFrame, group_col: str, count_col: str, sum_map: dict
-) -> DataFrame:
-    """Signed per-group corrections of a changelog, named like the
-    summary's columns (``count_col`` + every ``sum_map`` target)."""
-    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-        rollup_delta,
-    )
-
-    return rollup_delta(changes, group_col, list(sum_map.values())).select(
-        F.col(group_col),
-        F.col("d_count").alias(count_col),
-        *[F.col(f"d_{src}").alias(dst) for dst, src in sum_map.items()],
-    )
+def _commit_changes(
+    store: DocumentStore, v_dir: str, changes: DataFrame,
+    txn: tuple[str, str],
+) -> dict:
+    """Commit ``changes`` — the diff a fold made to the touched slice
+    of version ``v_dir`` — through :meth:`DocumentStore.apply_changes`
+    under ``txn``; returns the commit's counts. The change set is
+    persisted: the counts aggregate, the mask and the append each
+    read it. An empty change set writes no version, only the
+    marker."""
+    changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return store.apply_changes(
+            changes, expected_version=v_dir, txn=txn
+        )[1]
+    finally:
+        changes.unpersist()
 
 
 def _fold_summary(
@@ -738,51 +734,42 @@ def _fold_summary(
     delta: DataFrame,
     group_col: str,
     count_col: str,
-    sum_cols,
+    sum_map: dict,
     txn: tuple[str, str],
 ) -> dict:
-    """Fold signed per-group corrections into an additive summary
-    store in ONE commit under ``txn``; returns the commit's stats.
+    """Fold ``rollup_delta`` corrections (``group_col``, ``d_count``,
+    ``d_<source>``) into an additive summary store in ONE commit under
+    ``txn``; returns the commit's stats.
 
     Bootstrap (empty store): the corrections ARE the summary — a
-    plain commit of the positive-count groups, behind the explicit
-    NULL-group probe (once per consumer lifetime). Otherwise one
-    deletion-vector MERGE, O(touched groups): matched groups add
-    (``t.n + s.n``, sums ``coalesce``-added), groups whose count
-    reaches zero take the matched-DELETE clause, new groups insert;
-    NULL-group rejection rides the merge's fused validation action
-    (``reject_null_source_key``) — no standalone guard job.
-
-    The bootstrap persists ``delta``: the guard and the commit each
-    execute its plan, and each execution would otherwise re-read the
-    micro-batch through the Python change-feed source (a foreachBatch
-    frame is not materialized; optimization guide §4/§5). The merge
-    needs no copy: its clause-tagged join is the one cached consumer.
+    plain commit of the positive-count groups. Otherwise the summary
+    rows of the delta's groups (matched null-safely: a NULL group is
+    an ordinary group) fold through the batch fold's expressions and
+    commit as their diff (:func:`operators.ivm.rollup_delta_changes`,
+    :func:`_commit_changes`): O(touched groups).
     The emptiness test reads the pointer, not ``read()``: a DataFrame
     build costs a footer/schema round-trip per epoch."""
-    if store.current_version_dir() is None:
-        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            _delta_merge_guard(delta, group_col)
-            store.commit(delta.filter(F.col(count_col) > 0), txn=txn)
-        finally:
-            delta.unpersist()
+    v_dir = store.current_version_dir()
+    if v_dir is None:
+        store.commit(
+            delta.filter(F.col("d_count") > 0).select(
+                F.col(group_col),
+                F.col("d_count").alias(count_col),
+                *[
+                    F.col(f"d_{src}").alias(dst)
+                    for dst, src in sum_map.items()
+                ],
+            ),
+            txn=txn,
+        )
         return {"bootstrap": True}
-    _out, counts = store.merge_into(
-        delta,
-        when_matched_update={
-            count_col: f"t.{count_col} + s.{count_col}",
-            **{
-                dst: f"coalesce(t.{dst}, 0) + coalesce(s.{dst}, 0)"
-                for dst in sum_cols
-            },
-        },
-        when_matched_delete=f"t.{count_col} + s.{count_col} <= 0",
-        when_not_matched_insert=True,
-        txn=txn,
-        reject_null_source_key=True,
+    return _commit_changes(
+        store, v_dir,
+        rollup_delta_changes(
+            store.read_version(v_dir), delta, group_col, count_col, sum_map
+        ),
+        txn,
     )
-    return counts
 
 
 class _FeedPin:
@@ -806,10 +793,6 @@ class _FeedPin:
         return store.read_as_of(int(pin))
 
     def collapse(self, rows: DataFrame, key: str) -> DataFrame:
-        from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-            collapse_changelog,
-        )
-
         if self.by_version:
             rows = rows.drop("commit_ms")
         return collapse_changelog(rows, key, order_col=self.col)
@@ -838,25 +821,29 @@ def cdf_rollup_sync(
     monotone-epoch rule as :func:`continuous_sync`.
 
     Scale shape (r10 VERDICT "what's wrong" #2 closed): per-batch
-    READ cost is the sliver changelog alone (signed per-group
-    corrections — no base rescan), and per-batch WRITE cost is
-    O(touched groups), not O(groups): the correction frame commits
-    through :meth:`DocumentStore.merge_into` on the summary store —
-    matched groups fold additively (``t.n + s.n``), groups whose
-    count reaches zero take the matched-DELETE clause, new groups
-    insert — as ONE deletion-vector commit under the same
+    READ cost is the sliver changelog plus the summary rows of the
+    groups it touches (no base rescan), and per-batch WRITE cost is
+    O(changed groups), not O(groups): the touched summary rows fold
+    through the batch fold's expressions (those of
+    :func:`operators.ivm.apply_rollup_delta` — counts add, sums
+    ``coalesce``-add, a group whose count reaches zero leaves, a new
+    group takes its corrections as they are) and their diff commits
+    through :meth:`DocumentStore.apply_changes` as ONE deletion-vector
+    version under the same
     ``txn=(query_name, epoch)`` marker (:func:`_fold_summary`). A
     10⁹-group rollup fed by a sliver batch links its files and
-    writes the sliver. ``stats``, when a list, receives one dict per
-    committed epoch: the merge clause counts — what the entry's
-    "write rows == touched groups" assertion pins."""
+    writes the sliver. A NULL group key is an ordinary group. An
+    epoch whose groups all fold back to their old rows writes no
+    version and records only the marker. ``stats``, when a list,
+    receives one dict per committed epoch: the commit's
+    updated/deleted/inserted counts — what the entry's "write rows ==
+    touched groups" assertion pins."""
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if _replayed(store, query_name, epoch_id):
             return
         counts = _fold_summary(
-            store,
-            _summary_delta(batch_df, group_col, count_col, sum_map),
+            store, rollup_delta(batch_df, group_col, list(sum_map.values())),
             group_col, count_col, sum_map, (query_name, str(epoch_id)),
         )
         if stats is not None:
@@ -916,20 +903,16 @@ def cdf_extrema_sync(
     (one shuffle of the batch's change rows + a flagged-groups probe
     of the base), never the table size.
 
-    Write cost is O(touched groups) (r10 VERDICT "what's wrong" #2):
-    the maintained summary is restricted to the batch's touched
-    groups (adds' group keys ∪ retractions' old-group keys from the
-    COLLAPSED changelog) and committed through
-    :meth:`DocumentStore.merge_into` — touched groups that survive
-    take the matched-UPDATE clause with the recomputed row, touched
-    groups that vanished (absent from the maintained frame) arrive
-    as NULL-count rows and take the matched-DELETE clause, genuinely
-    new groups insert — one deletion-vector commit, same txn marker.
-    Untouched groups stay in their hard-linked files. ``stats``
-    (a list) receives the per-epoch merge clause counts."""
-    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
-        incremental_rollup_extrema,
-    )
+    Write cost is O(changed groups) (r10 VERDICT "what's wrong" #2):
+    the summary rows of the batch's touched groups (adds' group keys ∪
+    retractions' old-group keys from the COLLAPSED changelog, matched
+    null-safely — a NULL group key is an ordinary group) are the
+    maintenance fold's prior summary, and the fold's output diffed
+    against them commits through :meth:`DocumentStore.apply_changes`
+    (:func:`_commit_changes`) — a vanished group is a delete, a new
+    group an insert, a group the fold leaves unchanged writes
+    nothing. Untouched groups stay in their hard-linked files.
+    ``stats`` (a list) receives the per-epoch commit counts."""
     from far_finer_airtable_firestore_sync_spark.sources.store import (
         _version_live_rows,
     )
@@ -974,7 +957,8 @@ def cdf_extrema_sync(
         hi, lo = batch_df.agg(F.max(pin.col), F.min(pin.col)).first()
         if hi is None:
             return  # empty batch: nothing to fold, no version churn
-        if store.current_version_dir() is None:
+        v_dir = store.current_version_dir()
+        if v_dir is None:
             if pin.by_version:
                 _check_feed_starts_at_genesis(int(lo))
             # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2): the
@@ -1020,75 +1004,37 @@ def cdf_extrema_sync(
         # construction — one cache, five consumers.
         changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            base = store.read()  # non-None: bootstrap returned above
             base_new = pin.read(upstream, hi)
             assert base_new is not None  # the batch came from a commit
             # touched groups: adds' group keys (non-delete rows carry a
             # post-image) ∪ retractions' old-group keys (non-insert
             # rows carry a pre-image) — structural NULLs excluded by
             # the change_type filters, so a surviving NULL is a genuine
-            # NULL group key, which the merge path rejects loudly.
-            touched = (
-                changes.filter("change_type <> 'delete'")
-                .select(F.col(group_col).alias("_g"))
-                .unionByName(
-                    changes.filter("change_type <> 'insert'").select(
-                        F.col(f"old_{group_col}").alias("_g")
-                    )
+            # NULL group key. Only touched groups can change, so the
+            # fold reads the summary restricted to them: at 10⁹ groups
+            # an epoch must not rescan the whole summary for a sliver
+            # batch (round-11 review).
+            touched = changes.filter("change_type <> 'delete'").select(
+                F.col(group_col)
+            ).unionByName(
+                changes.filter("change_type <> 'insert'").select(
+                    F.col(f"old_{group_col}").alias(group_col)
                 )
-                .distinct()
             )
-            # O(touched) COMPUTE, not just O(touched) write: only
-            # touched groups can change, so the maintenance fold
-            # reads the base summary restricted to them — at 10⁹
-            # groups the per-epoch merge join must not rescan the
-            # whole summary for a sliver batch (round-11 review).
-            base = base.join(
-                touched,
-                base[group_col] == touched["_g"],
+            t = store.read_version(v_dir)
+            old = t.join(
+                touched, t[group_col].eqNullSafe(touched[group_col]),
                 "left_semi",
             )
-            summary = incremental_rollup_extrema(
-                base, changes, base_new, group_col, count_col,
+            new = incremental_rollup_extrema(
+                old, changes, base_new, group_col, count_col,
                 sum_map, min_map, max_map,
             )
-            sn = summary.alias("sn")
-            value_cols = [
-                count_col, *sum_map, *min_map, *max_map,
-            ]
-            # Persist the merge source as well: its plan contains the
-            # whole maintenance fold INCLUDING the Gupta–Mumick base
-            # recompute probe, and the NULL-group guard plus the
-            # merge's own validation would otherwise re-run that probe
-            # per action (guide §5 — cache what is re-read).
-            source = (
-                touched.alias("tg")
-                .join(
-                    sn, F.col("tg._g") == F.col(f"sn.{group_col}"), "left"
-                )
-                .select(
-                    F.col("tg._g").alias(group_col),
-                    *[F.col(f"sn.{c}").alias(c) for c in value_cols],
-                )
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                # NULL-group rejection rides the merge's fused
-                # validation action — no standalone guard job
-                _out, counts = store.merge_into(
-                    source,
-                    # a touched group absent from the maintained
-                    # summary vanished this epoch: NULL count selects
-                    # the DELETE leg
-                    when_matched_delete=f"s.{count_col} is null",
-                    when_matched_update={
-                        c: f"s.{c}" for c in value_cols
-                    },
-                    when_not_matched_insert=True,
-                    txn=(query_name, str(epoch_id)),
-                    reject_null_source_key=True,
-                )
-            finally:
-                source.unpersist()
+            counts = _commit_changes(
+                store, v_dir,
+                diff_frames(old, new, group_col, include_old=True),
+                (query_name, str(epoch_id)),
+            )
         finally:
             changes.unpersist()
         if stats is not None:
@@ -1143,7 +1089,8 @@ def cdf_star_sync(
     4. diffs the affected slice of the view against the re-joined
        slice once (``view_changes``: updates, inserts and departures)
        and commits O(changed) on both stores — summary FIRST (signed
-       corrections of ``view_changes`` through the additive merge),
+       corrections of ``view_changes`` folded into the touched summary
+       rows and committed as their diff, :func:`_fold_summary`),
        view SECOND (``view_changes`` itself through
        :meth:`DocumentStore.apply_changes`, which masks, appends and
        records exactly those rows; an epoch that changes no view row
@@ -1159,10 +1106,10 @@ def cdf_star_sync(
 
     Constraints (fail-loud): all feeds' payload columns pairwise
     disjoint; ``view_cols`` must include ``fact_key``; no dimension
-    feed may lead the fact store's first cdf commit; NULL group keys
-    are rejected by the summary merge; a re-joined slice repeating a
-    fact key (a dimension store holding a duplicate key) is rejected
-    before either store commits.
+    feed may lead the fact store's first cdf commit; a re-joined
+    slice repeating a fact key (a dimension store holding a duplicate
+    key) is rejected before either store commits. A NULL group key
+    is an ordinary summary group.
 
     ``tagged_stream``/``feed_cols`` (round 11, optimization): a
     PRE-TAGGED multiplexed stream (``cdf_source.load_feeds`` with
@@ -1173,12 +1120,6 @@ def cdf_star_sync(
     N+1 (guide §4: the Python boundary's per-process fixed cost).
     ``feed_cols`` lists each feed's standalone columns (fact first),
     which the per-feed slicing below needs."""
-    from functools import reduce
-
-    from far_finer_airtable_firestore_sync_spark.sources.store import (
-        diff_frames,
-    )
-
     if tagged_stream is not None:
         if not feed_cols:
             raise ValueError(
@@ -1322,26 +1263,10 @@ def cdf_star_sync(
                 )
             return j.select(*view_cols)
 
-        # affected fact keys: the fact changelog's keys plus, per
-        # dimension, fact rows whose foreign key that dimension's
-        # changelog touched (Gupta & Mumick delta rules for a
-        # key-preserving star)
-        legs = [fact_changes.select(F.col(fact_key))]
-        for i in range(n_dims):
-            keys = dim_changes[i].select(
-                F.col(dim_keys[i]).alias("_dk")
-            ).distinct()
-            legs.append(
-                fact_new.join(
-                    keys, fact_new[dim_fks[i]] == F.col("_dk"),
-                    "left_semi",
-                ).select(F.col(fact_key))
-            )
-        affected = (
-            reduce(lambda a, b: a.unionByName(b), legs)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        affected = affected_star_keys(
+            fact_new, fact_changes,
+            list(zip(dim_news, dim_changes, dim_fks, dim_keys)), fact_key,
+        ).localCheckpoint(eager=True)
         fresh = _checkpoint_key_unique(
             star_join(fact_new.join(affected, fact_key, "left_semi")),
             fact_key, "cdf_star_sync: the re-joined view slice",
@@ -1370,15 +1295,15 @@ def cdf_star_sync(
                 # semantics: sum-of-ones count, sum over post-images).
                 if view_bootstrap:
                     delta = fresh.groupBy(F.col(group_col)).agg(
-                        F.sum(F.lit(1).cast("long")).alias(count_col),
+                        F.sum(F.lit(1).cast("long")).alias("d_count"),
                         *[
-                            F.sum(src).alias(dst)
-                            for dst, src in sum_map.items()
+                            F.sum(src).alias(f"d_{src}")
+                            for src in sum_map.values()
                         ],
                     )
                 else:
-                    delta = _summary_delta(
-                        view_changes, group_col, count_col, sum_map
+                    delta = rollup_delta(
+                        view_changes, group_col, list(sum_map.values())
                     )
                 s_counts = _fold_summary(
                     summary_store, delta, group_col, count_col, sum_map,

@@ -613,31 +613,172 @@ class TestDeltaSummaryCommits:
         }
         assert got == want
 
-    def test_rollup_sync_null_group_rejected_loudly(self, spark, tmp_root):
-        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
-            cdf_rollup_sync,
-        )
-
+    @staticmethod
+    def _null_group_source(spark, tmp_root):
+        """20 rows; k % 4 = 0 (vals 0..160, max at k = 16) is the NULL
+        group."""
         src = DocumentStore(spark, os.path.join(tmp_root, "src"), "k")
         src.commit(
             spark.createDataFrame(
-                [(1, None, 5), (2, "g", 6)],
+                [
+                    (i, None if i % 4 == 0 else f"g{i % 4}", i * 10)
+                    for i in range(20)
+                ],
                 "k long, grp string, val long",
             ),
             cdf=True,
         )
+        return src
+
+    @staticmethod
+    def _null_group_epochs(q, steps, summary, recompute) -> list:
+        """One epoch per step; after each, the summary must equal the
+        recompute. Returns whether each epoch left a NULL group."""
+        has_null = []
+        try:
+            for name, step in steps:
+                step()
+                q.processAllAvailable()
+                got = sorted(map(tuple, summary.read().collect()), key=repr)
+                want = sorted(map(tuple, recompute().collect()), key=repr)
+                assert got == want, (name, got, want)
+                has_null.append(any(r[0] is None for r in got))
+        finally:
+            q.stop()
+        return has_null
+
+    def test_rollup_sync_maintains_the_null_group(self, spark, tmp_root):
+        """A NULL group key is an ordinary group: a row enters it, one
+        leaves it, then it empties, and the summary tracks each epoch."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_rollup_sync,
+        )
+
+        src = self._null_group_source(spark, tmp_root)
         roll = DocumentStore(spark, os.path.join(tmp_root, "roll"), "grp")
         q = cdf_rollup_sync(
             _cdf_stream(spark, src.root), roll,
             os.path.join(tmp_root, "ck"),
             "grp", "n", {"s": "val"}, "nullroll",
         )
-        try:
-            with pytest.raises(Exception, match="NULL group key"):
-                q.processAllAvailable()
-                raise AssertionError("stream should have failed")
-        finally:
-            q.stop()
+        steps = [
+            ("bootstrap", lambda: None),
+            ("enter", lambda: src.update_where(
+                "k = 1", {"grp": "cast(null as string)"}, cdf=True)),
+            ("leave", lambda: src.update_where(
+                "k = 4", {"grp": "'g2'"}, cdf=True)),
+            ("empty", lambda: src.delete_where("grp is null", cdf=True)),
+        ]
+        has_null = self._null_group_epochs(
+            q, steps, roll,
+            lambda: src.read().groupBy("grp").agg(
+                F.count("*").alias("n"), F.sum("val").alias("s")
+            ),
+        )
+        assert has_null == [True, True, True, False]
+
+    def test_extrema_sync_maintains_the_null_group(self, spark, tmp_root):
+        """The extrema summary keeps a NULL group too, including the
+        recompute leg when the NULL group's max is retracted."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_extrema_sync,
+        )
+
+        src = self._null_group_source(spark, tmp_root)
+        summ = DocumentStore(spark, os.path.join(tmp_root, "summ"), "grp")
+        q = cdf_extrema_sync(
+            _cdf_stream(spark, src.root), src, summ,
+            os.path.join(tmp_root, "ck"),
+            "grp", "n", {"s": "val"}, {"mn": "val"}, {"mx": "val"},
+            "nullxtr",
+        )
+        steps = [
+            ("bootstrap", lambda: None),
+            ("enter", lambda: src.update_where(
+                "k = 1", {"grp": "cast(null as string)"}, cdf=True)),
+            ("retract the max, leave", lambda: (
+                src.delete_where("k = 16", cdf=True),
+                src.update_where("k = 4", {"grp": "'g2'"}, cdf=True),
+            )),
+            ("empty", lambda: src.delete_where("grp is null", cdf=True)),
+        ]
+        has_null = self._null_group_epochs(
+            q, steps, summ,
+            lambda: src.read().groupBy("grp").agg(
+                F.count("*").alias("n"),
+                F.sum("val").alias("s"),
+                F.min("val").alias("mn"),
+                F.max("val").alias("mx"),
+            ),
+        )
+        assert has_null == [True, True, True, False]
+
+    def test_join_sync_summary_keeps_a_null_dimension_group(
+        self, spark, tmp_root
+    ):
+        """A join summary grouped on a dimension attribute that is NULL
+        for some dimension rows keeps that NULL group, and the view
+        stays equal to the recompute."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_join_sync,
+        )
+
+        fact = DocumentStore(spark, os.path.join(tmp_root, "fact"), "k")
+        dim = DocumentStore(spark, os.path.join(tmp_root, "dim"), "d")
+        dim.commit(
+            spark.createDataFrame(
+                [(i, None if i == 0 else f"seg{i % 3}") for i in range(10)],
+                "d long, seg string",
+            ),
+            cdf=True,
+        )
+        fact.commit(
+            spark.createDataFrame(
+                [(i, i % 10, i * 100) for i in range(60)],
+                "k long, dk long, amt long",
+            ),
+            cdf=True,
+        )
+        view = DocumentStore(spark, os.path.join(tmp_root, "view"), "k")
+        summ = DocumentStore(spark, os.path.join(tmp_root, "summ"), "seg")
+        cols = ["k", "dk", "amt", "seg"]
+        q = cdf_join_sync(
+            _cdf_stream(spark, fact.root), _cdf_stream(spark, dim.root),
+            fact, dim, view, summ, os.path.join(tmp_root, "ck"),
+            fact_key="k", dim_fk="dk", dim_key="d", view_cols=cols,
+            group_col="seg", count_col="n", sum_map={"s": "amt"},
+            query_name="nulljoin",
+        )
+
+        def recompute_view():
+            f, d = fact.read().alias("f"), dim.read().alias("d")
+            return f.join(d, F.col("f.dk") == F.col("d.d")).select(*cols)
+
+        views_equal = []
+
+        def recompute_summary():
+            views_equal.append(
+                sorted(view.read().select(*cols).collect())
+                == sorted(recompute_view().collect())
+            )
+            return recompute_view().groupBy("seg").agg(
+                F.count("*").alias("n"), F.sum("amt").alias("s")
+            )
+
+        steps = [
+            ("bootstrap", lambda: None),
+            ("enter", lambda: dim.update_where(
+                "d = 1", {"seg": "cast(null as string)"}, cdf=True)),
+            ("leave", lambda: fact.update_where(
+                "k = 10", {"dk": "5"}, cdf=True)),
+            ("empty", lambda: dim.update_where(
+                "seg is null", {"seg": "'segZ'"}, cdf=True)),
+        ]
+        has_null = self._null_group_epochs(
+            q, steps, summ, recompute_summary
+        )
+        assert has_null == [True, True, True, False]
+        assert views_equal == [True] * 4
 
     def test_extrema_sync_writes_touched_groups_only(self, spark, tmp_root):
         from far_finer_airtable_firestore_sync_spark.streaming.sync import (

@@ -780,3 +780,134 @@ class TestStarViewEpochs:
                 F.count(F.lit(1)).alias("n"), F.sum("amt").alias("s")
             ),
         )
+
+
+# ---------------------------------------------------------------------------
+# Summary epochs commit their own diff too (no MERGE in streaming/sync.py)
+# ---------------------------------------------------------------------------
+
+
+def _run_query(start):
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+class TestSummariesApplyTheirDiff:
+    def test_no_summary_epoch_calls_merge_into(
+        self, spark, tmp_root, monkeypatch
+    ):
+        """With ``DocumentStore.merge_into`` replaced by a function that
+        raises, non-bootstrap epochs of the rollup, extrema and star
+        consumers commit and equal the recompute."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_extrema_sync,
+            cdf_rollup_sync,
+            cdf_star_sync,
+        )
+
+        fact, dim, view, summ = _join_stores(spark, tmp_root)
+        roll = DocumentStore(spark, os.path.join(tmp_root, "roll"), "dk")
+        ext = DocumentStore(spark, os.path.join(tmp_root, "ext"), "dk")
+        cols = ["k", "dk", "amt", "seg"]
+        stats = {"roll": [], "ext": [], "star": []}
+        starts = [
+            lambda: cdf_rollup_sync(
+                _feed(spark, fact.root), roll,
+                os.path.join(tmp_root, "ck_roll"),
+                "dk", "n", {"s": "amt"}, "roll", stats=stats["roll"],
+            ),
+            lambda: cdf_extrema_sync(
+                _feed(spark, fact.root), fact, ext,
+                os.path.join(tmp_root, "ck_ext"),
+                "dk", "n", {"s": "amt"}, {"mn": "amt"}, {"mx": "amt"},
+                "ext", stats=stats["ext"],
+            ),
+            lambda: cdf_star_sync(
+                _feed(spark, fact.root), [_feed(spark, dim.root)],
+                fact, [dim], view, summ, os.path.join(tmp_root, "ck_star"),
+                fact_key="k", dim_fks=["dk"], dim_keys=["d"],
+                view_cols=cols, group_col="seg", count_col="n",
+                sum_map={"s": "amt"}, query_name="star",
+                stats=stats["star"],
+            ),
+        ]
+        for start in starts:  # bootstrap
+            _run_query(start)
+
+        def refuse(*_a, **_k):
+            raise AssertionError("a summary epoch called merge_into")
+
+        monkeypatch.setattr(DocumentStore, "merge_into", refuse)
+        fact.update_where("k % 7 = 0", {"amt": "amt + 3"}, cdf=True)
+        fact.delete_where("k = 59", cdf=True)  # group 9's max: recompute leg
+        dim.update_where("d = 4", {"seg": "'segX'"}, cdf=True)
+        for start in starts:
+            _run_query(start)
+        assert [len(v) for v in stats.values()] == [2, 2, 2]
+        assert not any("bootstrap" in v[-1] for v in stats.values())
+        assert stats["star"][-1]["summary"]["updated"] > 0
+        f = fact.read()
+        _assert_same(
+            roll.read(),
+            f.groupBy("dk").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("amt").alias("s")
+            ),
+        )
+        _assert_same(
+            ext.read(),
+            f.groupBy("dk").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("amt").alias("s"),
+                F.min("amt").alias("mn"), F.max("amt").alias("mx"),
+            ),
+        )
+        vx, sx = _join_recompute(fact, dim, cols)
+        _assert_same(view.read().select(*cols), vx)
+        _assert_same(summ.read(), sx)
+
+    def test_net_zero_epoch_writes_no_summary_version(self, spark, tmp_root):
+        """Two updates in one upstream commit cancel inside one group:
+        the epoch writes no summary version, the summary's txn marker
+        advances, and a restart that replays the epoch re-applies
+        nothing."""
+        from far_finer_airtable_firestore_sync_spark.streaming.sync import (
+            cdf_rollup_sync,
+        )
+
+        src = DocumentStore(spark, os.path.join(tmp_root, "src"), "k")
+        src.commit(_docs(spark, 40), cdf=True)
+        roll = DocumentStore(spark, os.path.join(tmp_root, "roll"), "grp")
+        ck = os.path.join(tmp_root, "ck")
+        stats: list = []
+
+        def start():
+            return cdf_rollup_sync(
+                _feed(spark, src.root), roll, ck,
+                "grp", "n", {"s": "val"}, "nz", stats=stats,
+            )
+
+        _run_query(start)  # bootstrap
+        versions, summary = roll.list_versions(), sorted(roll.read().collect())
+        # k = 1 and k = 6 are both in grp 1: +5 and -5 cancel
+        src.update_where(
+            "k in (1, 6)", {"val": "if(k = 1, val + 5, val - 5)"}, cdf=True
+        )
+        _run_query(start)
+        assert stats[-1] == {
+            "epoch": 1, "updated": 0, "deleted": 0, "inserted": 0,
+            "deleted_by_source": 0,
+        }
+        assert roll.list_versions() == versions
+        assert roll.last_txn("nz") == "1"
+        assert sorted(roll.read().collect()) == summary
+        # drop the stream's record of epoch 1: the restart runs it again
+        for name in ("1", ".1.crc"):
+            path = os.path.join(ck, "commits", name)
+            if os.path.exists(path):
+                os.remove(path)
+        _run_query(start)
+        assert len(stats) == 2
+        assert roll.list_versions() == versions
+        assert sorted(roll.read().collect()) == summary

@@ -441,6 +441,70 @@ def test_incremental_rollup_null_group_key(spark):
     assert got == sorted([("a", 2, 20), (None, 4, 37)], key=repr)
 
 
+def test_incremental_rollup_new_all_null_group_keeps_null_sum(spark):
+    """A group present only in the delta takes its delta sums as they
+    are: a new group whose values are all NULL sums to NULL, like the
+    recompute's SUM — not to 0. A group the delta does not touch keeps
+    its stored NULL sum."""
+    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
+        incremental_rollup,
+    )
+
+    base = spark.createDataFrame(
+        [("a", 1, 5), ("c", 1, None)], "g string, n long, tv long"
+    )
+    cdc = spark.createDataFrame(
+        [("insert", "b", None, None, None)],
+        "change_type string, g string, v long, old_g string, old_v long",
+    )
+    got = {
+        r["g"]: (r["n"], r["tv"])
+        for r in incremental_rollup(base, cdc, "g", "n", {"tv": "v"}).collect()
+    }
+    assert got == {"a": (1, 5), "b": (1, None), "c": (1, None)}
+
+
+def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark):
+    """The change set the fold emits from its own join equals
+    diff_frames of the touched base slice against apply_rollup_delta
+    of it: updates, a group leaving, a new group, a NULL group, a
+    net-zero group that writes nothing and a new group that nets to
+    zero rows."""
+    from far_finer_airtable_firestore_sync_spark.operators.ivm import (
+        apply_rollup_delta,
+        rollup_delta_changes,
+    )
+    from far_finer_airtable_firestore_sync_spark.sources.store import (
+        diff_frames,
+    )
+
+    base = spark.createDataFrame(
+        [("a", 2, 10), ("b", 1, 5), ("z", 3, 7), (None, 2, None),
+         ("u", 4, 40)],
+        "g string, n long, tv long",
+    )
+    delta = spark.createDataFrame(
+        [("a", 1, 3), ("b", -1, -5), ("c", 2, None), (None, 1, 4),
+         ("z", 0, 0), ("e", 0, 0)],
+        "g string, d_count long, d_v long",
+    )
+    old = base.join(
+        delta, base["g"].eqNullSafe(delta["g"]), "left_semi"
+    )
+    want = diff_frames(
+        old, apply_rollup_delta(old, delta, "g", "n", {"tv": "v"}), "g",
+        include_old=True,
+    )
+    got = rollup_delta_changes(base, delta, "g", "n", {"tv": "v"})
+    cols = want.columns
+    assert sorted(got.select(*cols).collect(), key=repr) == sorted(
+        want.collect(), key=repr
+    )
+    assert {r["g"]: r["change_type"] for r in got.collect()} == {
+        "a": "update", "b": "delete", "c": "insert", None: "update",
+    }
+
+
 def test_read_as_of_time_travel(spark, tmp_path):
     import os
     import time
