@@ -1,7 +1,11 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ...}.
+"queries": {...}, "sf": ...}. The session is sized from the host by
+default — the CPUs this process may run on and a quarter of host
+memory capped at 4g (``perfbench.harness.host_cpus`` /
+``driver_memory_mb``, as ``scripts/count_jobs.py`` does);
+$SPARK_GRAFT_CPUS and $SPARK_GRAFT_MEM override them.
 
 Each query is executed via a noop write that forces full evaluation
 without collecting result rows to the driver.
@@ -37,12 +41,20 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Python workers (the record_feed and change-feed sources run there) are
+# started by the JVM and must import the engine from this checkout too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from perfbench.harness import driver_memory_mb, host_cpus
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 
     from pyspark.sql import SparkSession
 
@@ -80,7 +92,10 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_MEM", f"{driver_memory_mb()}m"),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
@@ -245,7 +260,7 @@ def main() -> None:
     # (round-2 BENCH artifact had parsed:null from head truncation).
     try:
         with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
+            os.path.join(ROOT, "BENCH_LOCAL.json"),
             "w",
         ) as f:
             json.dump({**payload, "samples": samples}, f, indent=1)

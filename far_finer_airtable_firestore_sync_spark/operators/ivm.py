@@ -39,7 +39,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from far_finer_airtable_firestore_sync_spark.sources.store import diff_frames
+from far_finer_airtable_firestore_sync_spark.sources.store import (
+    _POS_COLS,
+    diff_frames,
+)
 
 
 def rollup_delta(
@@ -182,7 +185,15 @@ def rollup_delta_changes(
     ``insert``, a group whose values changed an ``update``, and a group
     the fold leaves equal nothing. No second join re-matches the two
     slices, so a commit pays one join fewer (Spark jobs per epoch
-    track joins: each is a shuffle or broadcast stage)."""
+    track joins: each is a shuffle or broadcast stage).
+
+    When ``base`` is a position-carrying scan
+    (``store._masked_scan_with_positions``), each change row ends with
+    its base row's position columns, unchanged — the mask
+    ``apply_changes`` writes, NULL on ``insert`` rows. They take no
+    part in the fold or the comparison (the :func:`diff_frames`
+    carry rule)."""
+    pos = [c for c in _POS_COLS if c in base.columns]
     j = _join_rollup_delta(base, delta, group_col, "right")
     b_here = F.col(f"b.{count_col}").isNotNull()
     fold = _rollup_fold(b_here, F.lit(True), count_col, sum_map)
@@ -204,6 +215,7 @@ def rollup_delta_changes(
             "change_type",
             *[F.when(new_here, v).alias(c) for c, v in fold.items()],
             *[F.col(f"b.{c}").alias(f"old_{c}") for c in fold],
+            *[F.col(f"b.{c}").alias(c) for c in pos],
         )
     )
 

@@ -1117,12 +1117,17 @@ class DocumentStore:
         txn: Optional[tuple[str, str]] = None, cdf: bool = False,
     ) -> tuple[str, dict[str, int]]:
         """Commit a change set computed against the current version
-        (key-unique, :func:`diff_frames` ``include_old=True`` shape) as
-        ONE deletion-vector version: old images of ``update``/``delete``
-        keys masked, ``update``/``insert`` post images appended, and
-        with ``cdf`` the change rows as the version's change feed (see
-        :func:`apply_changes_build`). Nothing is re-derived, so a
-        maintained view commits its delta at the cost of writing it.
+        (key-unique, :func:`diff_frames` ``include_old=True`` shape,
+        its old side a :func:`_masked_scan_with_positions` scan of that
+        version) as ONE deletion-vector version: the positions the
+        change set carries on its ``update``/``delete`` rows are
+        masked, ``update``/``insert`` post images appended, and with
+        ``cdf`` the change rows as the version's change feed (see
+        :func:`apply_changes_build`). Nothing is re-derived and the
+        version's data is not read again, so a maintained view commits
+        its delta at the cost of writing it. A change set without
+        positions, or whose positions name another version, raises
+        ``ValueError`` and publishes nothing.
 
         ``txn`` rides the pointer flip. Unlike :meth:`merge_into`, an
         EMPTY change set still records it: the pointer re-flips to the
@@ -1137,7 +1142,7 @@ class DocumentStore:
         cur = self._base_for(expected_version, "apply changes to")
         rel, out = self._new_version()
         changed, counts = apply_changes_build(
-            self.spark, cur, out, changes, self.key_col, cdf
+            self.spark, cur, out, changes, cdf
         )
         if changed:
             self._flip_pointer(rel, out, expected_version, None, txn)
@@ -1511,7 +1516,7 @@ def delete_where_build(
                 # (already-masked rows can't re-delete): predicate DML
                 # knows its own delta, no diff join needed
                 _changes_write(
-                    _delete_changes(matched.drop(_POS_FP, _POS_RI), key), out
+                    _delete_changes(matched.drop(*_POS_COLS), key), out
                 )()
     finally:
         if matched is not None:
@@ -1547,7 +1552,7 @@ def update_where_build(
     Returns ``(publish, n_updated)``; an empty match removes ``out`` and
     returns ``(False, 0)``."""
     snap_pos = _masked_scan_with_positions(spark, base)
-    data_cols = [c for c in snap_pos.columns if c not in (_POS_FP, _POS_RI)]
+    data_cols = [c for c in snap_pos.columns if c not in _POS_COLS]
     unknown = [c for c in set_exprs if c not in data_cols]
     if unknown:
         raise ValueError(f"update_where: unknown columns {unknown}")
@@ -1626,64 +1631,77 @@ def merge_into_build(
 
 
 def apply_changes_build(
-    spark: SparkSession, base: str, out: str, changes: DataFrame, key: str,
-    cdf: bool,
+    spark: SparkSession, base: str, out: str, changes: DataFrame, cdf: bool,
 ) -> tuple[bool, dict[str, int]]:
     """Apply a change set the caller already computed against version
     ``base`` into candidate ``out`` — how a maintained view integrates
     its own delta instead of re-deriving it through a MERGE.
     ``changes`` is key-unique and in :func:`diff_frames`
     ``include_old=True`` shape (key, ``change_type``, post images,
-    ``old_*`` pre-images). ``base``'s files hard-link in, the live row
-    of every ``update``/``delete`` key is masked positionally (one
-    null-safe semi-join of the masked scan against those keys), the
-    ``update``/``insert`` post images append right-sized, and with
-    ``cdf`` the change rows themselves are the ``_changes`` sidecar
-    (:func:`_write_dml`).
+    ``old_*`` pre-images) plus the position columns of the pass that
+    found its old rows: its old side is
+    :func:`_masked_scan_with_positions` of ``base``, whose positions
+    :func:`diff_frames` and ``operators.ivm.rollup_delta_changes``
+    carry onto every ``update``/``delete`` row. ``base``'s files
+    hard-link in, those positions ARE the mask (Delta's rule: DML
+    masks the rows the pass that located them found; ``base``'s data
+    is not read again), the ``update``/``insert`` post images append
+    right-sized, cast to the types of ``base``'s footer, and with
+    ``cdf`` the change rows without their positions are the
+    ``_changes`` sidecar (:func:`_write_dml`).
 
     One counts aggregate over ``changes`` runs first, so a caller
-    should cache an expensive change frame. A mask that does not hit
-    exactly one live row per ``update``/``delete`` row means the
-    changes were not computed against ``base``: the candidate is
-    removed and ``ValueError`` raised.
+    should cache an expensive change frame. The same aggregate counts
+    the ``update``/``delete`` rows whose positions were not read from
+    ``base`` (``_ffs_pos_v``): any such row means the change set was
+    not computed against this version, and ``ValueError`` is raised
+    before a candidate exists. A change set without the position
+    columns is refused with ``ValueError`` as well.
 
     Returns ``(publish, counts)`` with :func:`merge_into_build`'s count
     keys; an empty change set creates no candidate and returns
     ``(False, counts)``."""
+    missing = [c for c in _POS_COLS if c not in changes.columns]
+    if missing:
+        raise ValueError(
+            f"apply_changes: the change set lacks the position columns "
+            f"{missing} — diff against _masked_scan_with_positions of "
+            "the version it applies to"
+        )
     kind = F.col("change_type")
-    row = changes.agg(*[
-        F.count(F.when(kind == c, 1)).alias(c)
-        for c in ("update", "delete", "insert")
-    ]).first()
+    masked = kind.isin("update", "delete")
+    named = F.col(_POS_V).eqNullSafe(
+        F.lit(os.path.basename(os.path.normpath(base)))
+    )
+    row = changes.agg(
+        *[
+            F.count(F.when(kind == c, 1)).alias(c)
+            for c in ("update", "delete", "insert")
+        ],
+        F.count(F.when(masked & ~named, 1)).alias("stale"),
+    ).first()
+    if row["stale"]:
+        raise ValueError(
+            f"apply_changes: {row['stale']} update/delete rows carry "
+            f"positions not read from {base} — the change set was not "
+            "computed against this version"
+        )
     counts = {"updated": row["update"], "deleted": row["delete"],
               "inserted": row["insert"], "deleted_by_source": 0}
     if not any(counts.values()):
         return False, counts
-    snap = _masked_scan_with_positions(spark, base)
-    types = [(c, t) for c, t in snap.dtypes if c not in (_POS_FP, _POS_RI)]
-    n_masked = counts["updated"] + counts["deleted"]
-    prior_total = _dv_position_count(base)
+    types = _version_reader(spark, base).parquet(base).dtypes
     with _candidate(base, out):
         _write_dml(
             spark, base, out,
-            snap.alias("t").join(
-                changes.filter(kind.isin("update", "delete")).alias("c"),
-                F.col(f"t.{key}").eqNullSafe(F.col(f"c.{key}")),
-                "left_semi",
-            ).select(_POS_FP, _POS_RI) if n_masked else None,
+            changes.filter(masked).select(_POS_FP, _POS_RI)
+            if counts["updated"] or counts["deleted"] else None,
             changes.filter(kind.isin("update", "insert")).select(
                 *[F.col(c).cast(t).alias(c) for c, t in types]
             ),
             counts["updated"] + counts["inserted"],
-            changes if cdf else None,
+            changes.drop(*_POS_COLS) if cdf else None,
         )
-        n_hit = _dv_position_count(out) - prior_total
-        if n_hit != n_masked:
-            raise ValueError(
-                f"apply_changes: {n_masked} update/delete rows masked "
-                f"{n_hit} live rows of {base} — the change set was not "
-                "computed against this version"
-            )
     return True, counts
 
 
@@ -1840,13 +1858,13 @@ def derive_merge_clauses(
     # (``plan["touched_positions"]``) — the previous shape re-scanned
     # the whole version and semi-joined the touched keys a second
     # time just to learn the positions.
-    for pos_col in (_POS_FP, _POS_RI):
+    for pos_col in _POS_COLS:
         if pos_col in source.columns:
             raise ValueError(
                 f"column {pos_col!r} is reserved by merge_into's "
                 "one-pass position path; rename it in the source"
             )
-    payload = [c for c in snap.columns if c not in (_POS_FP, _POS_RI)]
+    payload = [c for c in snap.columns if c not in _POS_COLS]
     extra = [c for c in source.columns if c not in payload]
     if extra and not schema_evolution:
         raise ValueError(
@@ -2112,7 +2130,8 @@ def diff_frames(
     every streaming IVM commit (``streaming.sync``, through
     :meth:`DocumentStore.apply_changes`) —
     one null-safe full-outer join on ``key`` emitting
-    (key, change_type, post-image columns[, old_<col> pre-images]).
+    (key, change_type, post-image columns[, old_<col> pre-images]
+    [, the old side's position columns]).
 
     NULL-key handling (review finding): the join is NULL-SAFE and
     presence comes from literal marker columns, never from the key
@@ -2131,7 +2150,19 @@ def diff_frames(
     newly-populated (or dropped) field is correctly an 'update'
     and the payload carries the new snapshot's view (NULL for
     dropped columns). A key-column TYPE change across versions
-    remains out of scope (rewrite, not evolve)."""
+    remains out of scope (rewrite, not evolve).
+
+    POSITION CARRY: when ``old_df`` is a
+    :func:`_masked_scan_with_positions` scan (or a slice of one), its
+    position columns (``_ffs_pos_fp``, ``_ffs_pos_ri``,
+    ``_ffs_pos_v``) ride the join unchanged and close each change
+    row: the positions of the old row on ``update``/``delete`` rows
+    (a NULL-key row's too — the join is null-safe), NULL on
+    ``insert`` rows. They are never compared or backfilled, so an
+    unchanged row emits nothing whatever its position; ``new_df``'s
+    own position columns, if any, are dropped. That is what lets
+    :meth:`DocumentStore.apply_changes` mask the old rows without
+    searching ``old_df``'s version for them again."""
     for reserved in ("_ffs_diff_o", "_ffs_diff_n"):
         if reserved in old_df.columns or reserved in new_df.columns:
             raise ValueError(
@@ -2144,10 +2175,13 @@ def diff_frames(
     # comparison below — treating it as missing would make
     # withColumn REPLACE the existing data with NULLs on both
     # sides and silently drop every value change from the diff.
+    pos = [c for c in _POS_COLS if c in old_df.columns]
+    new_df = new_df.drop(*_POS_COLS)
     old_names = {c.lower() for c in old_df.columns}
     new_names = {c.lower() for c in new_df.columns}
     dropped = [
-        (c, t) for c, t in old_df.dtypes if c.lower() not in new_names
+        (c, t) for c, t in old_df.dtypes
+        if c.lower() not in new_names and c not in pos
     ]
     for c, t in new_df.dtypes:
         if c.lower() not in old_names:
@@ -2180,6 +2214,7 @@ def diff_frames(
     ]
     if include_old:
         out_cols += [F.col(f"o.{c}").alias(f"old_{c}") for c in cols]
+    out_cols += [F.col(f"o.{c}").alias(c) for c in pos]
     return (
         j.withColumn("change_type", change)
         .filter(F.col("change_type").isNotNull())
@@ -2992,10 +3027,14 @@ def binpack_build(
     }
 
 
-#: Position columns the one-pass DML scan carries (version-relative
-#: file path + row index). Reserved in DML-visible snapshots.
+#: Position columns the one-pass DML scan carries: version-relative
+#: file path, row index and the name of the version they were read
+#: from (a mask built from them is valid for that version only).
+#: Reserved in DML-visible snapshots.
 _POS_FP = "_ffs_pos_fp"
 _POS_RI = "_ffs_pos_ri"
+_POS_V = "_ffs_pos_v"
+_POS_COLS = (_POS_FP, _POS_RI, _POS_V)
 
 
 def _masked_scan_with_positions(
@@ -3012,13 +3051,15 @@ def _masked_scan_with_positions(
     (positions, images, change rows, clause tags) is a projection of
     it. Positions from the PREDECESSOR directory are valid for the
     hard-linked successor: ``_link_tree`` preserves relative layout
-    and the files are the same inodes."""
+    and the files are the same inodes. ``_ffs_pos_v`` names the
+    version scanned, so a change set built over this scan names the
+    version its mask belongs to (:func:`apply_changes_build`)."""
     data = _version_reader(spark, version_dir).parquet(version_dir)
     # same reserved-name set as _apply_deletion_vectors: the DV
     # anti-join below aliases the sidecar to _ffs_dv_*, so a snapshot
     # carrying such a column would fail with an ambiguous-reference
     # AnalysisException instead of this clear error (r11 ADVICE)
-    for reserved in (_POS_FP, _POS_RI, "_ffs_dv_fp", "_ffs_dv_ri"):
+    for reserved in (*_POS_COLS, "_ffs_dv_fp", "_ffs_dv_ri"):
         if reserved in data.columns:
             raise ValueError(
                 f"column {reserved!r} is reserved by the DML read "
@@ -3028,6 +3069,7 @@ def _masked_scan_with_positions(
         "*",
         _dv_rel_expr(version_dir, "_metadata.file_path").alias(_POS_FP),
         F.col("_metadata.row_index").alias(_POS_RI),
+        F.lit(os.path.basename(os.path.normpath(version_dir))).alias(_POS_V),
     )
     dv = _dv_sidecar(spark, version_dir)
     if dv is None:

@@ -33,7 +33,9 @@ from far_finer_airtable_firestore_sync_spark.operators.ivm import (
 )
 from far_finer_airtable_firestore_sync_spark.operators.strategies import get_strategy
 from far_finer_airtable_firestore_sync_spark.sources.store import (
+    _POS_COLS,
     DocumentStore,
+    _masked_scan_with_positions,
     diff_frames,
 )
 
@@ -715,11 +717,14 @@ def _commit_changes(
     txn: tuple[str, str],
 ) -> dict:
     """Commit ``changes`` — the diff a fold made to the touched slice
-    of version ``v_dir`` — through :meth:`DocumentStore.apply_changes`
-    under ``txn``; returns the commit's counts. The change set is
-    persisted: the counts aggregate, the mask and the append each
-    read it. An empty change set writes no version, only the
-    marker."""
+    of version ``v_dir``, read with its positions
+    (``store._masked_scan_with_positions``) — through
+    :meth:`DocumentStore.apply_changes` under ``txn``; returns the
+    commit's counts. The positions the diff carries on its
+    ``update``/``delete`` rows are the mask, so the commit reads no
+    data of ``v_dir``. The change set is persisted: the counts
+    aggregate, the mask and the append each read it. An empty change
+    set writes no version, only the marker."""
     changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return store.apply_changes(
@@ -744,8 +749,10 @@ def _fold_summary(
     Bootstrap (empty store): the corrections ARE the summary — a
     plain commit of the positive-count groups. Otherwise the summary
     rows of the delta's groups (matched null-safely: a NULL group is
-    an ordinary group) fold through the batch fold's expressions and
-    commit as their diff (:func:`operators.ivm.rollup_delta_changes`,
+    an ordinary group), read with their positions, fold through the
+    batch fold's expressions and commit as their diff
+    (:func:`operators.ivm.rollup_delta_changes`, which carries each
+    base row's position onto its change row;
     :func:`_commit_changes`): O(touched groups).
     The emptiness test reads the pointer, not ``read()``: a DataFrame
     build costs a footer/schema round-trip per epoch."""
@@ -766,7 +773,8 @@ def _fold_summary(
     return _commit_changes(
         store, v_dir,
         rollup_delta_changes(
-            store.read_version(v_dir), delta, group_col, count_col, sum_map
+            _masked_scan_with_positions(store.spark, v_dir), delta,
+            group_col, count_col, sum_map,
         ),
         txn,
     )
@@ -1021,14 +1029,16 @@ def cdf_extrema_sync(
                     F.col(f"old_{group_col}").alias(group_col)
                 )
             )
-            t = store.read_version(v_dir)
+            # the slice carries its positions into the diff: they are
+            # the mask apply_changes writes
+            t = _masked_scan_with_positions(store.spark, v_dir)
             old = t.join(
                 touched, t[group_col].eqNullSafe(touched[group_col]),
                 "left_semi",
             )
             new = incremental_rollup_extrema(
-                old, changes, base_new, group_col, count_col,
-                sum_map, min_map, max_map,
+                old.drop(*_POS_COLS), changes, base_new, group_col,
+                count_col, sum_map, min_map, max_map,
             )
             counts = _commit_changes(
                 store, v_dir,
@@ -1086,15 +1096,18 @@ def cdf_star_sync(
        newest commit EACH feed delivered; a silent feed pins to its
        last consumed commit, carried in the composite txn marker
        ``"epoch:fact_ms:d0_ms:...:dN_ms"`` riding the view flip);
-    4. diffs the affected slice of the view against the re-joined
-       slice once (``view_changes``: updates, inserts and departures)
-       and commits O(changed) on both stores — summary FIRST (signed
+    4. diffs the affected slice of the view, read with its positions
+       (``store._masked_scan_with_positions``), against the re-joined
+       slice once (``view_changes``: updates, inserts and departures,
+       each update/departure carrying its old row's position) and
+       commits O(changed) on both stores — summary FIRST (signed
        corrections of ``view_changes`` folded into the touched summary
        rows and committed as their diff, :func:`_fold_summary`),
        view SECOND (``view_changes`` itself through
-       :meth:`DocumentStore.apply_changes`, which masks, appends and
-       records exactly those rows; an epoch that changes no view row
-       still records the marker and its feed pins) — the one
+       :meth:`DocumentStore.apply_changes`, which masks the carried
+       positions, appends and records exactly those rows — no second
+       read of the view; an epoch that changes no view row still
+       records the marker and its feed pins) — the one
        crash-replayable order.
 
     ``view_cdf=True`` makes the maintained view emit its OWN change
@@ -1273,9 +1286,9 @@ def cdf_star_sync(
         )
         old_slice = fresh.limit(0)  # bootstrap: no prior view
         if not view_bootstrap:
-            old_slice = view_store.read_version(v_dir).join(
-                affected, fact_key, "left_semi"
-            )
+            old_slice = _masked_scan_with_positions(
+                view_store.spark, v_dir
+            ).join(affected, fact_key, "left_semi")
         # persisted once: the summary fold populates it, the view
         # commit reads it back
         view_changes = diff_frames(

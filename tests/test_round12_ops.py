@@ -21,8 +21,10 @@ from far_finer_airtable_firestore_sync_spark.sources import cdf_source
 from far_finer_airtable_firestore_sync_spark.sources.backends import (
     TransactionalParquetBackend,
 )
+from far_finer_airtable_firestore_sync_spark.sources import store as store_mod
 from far_finer_airtable_firestore_sync_spark.sources.store import (
     _LIVE_ROWS_CACHE,
+    _POS_COLS,
     DocumentStore,
     _dv_position_count,
     _masked_scan_with_positions,
@@ -448,20 +450,78 @@ def _join_recompute(fact, dim, view_cols):
     return vx, sx
 
 
+def _target_of(s, spark):
+    """A target differing from ``s``'s 200 documents by updates,
+    deletes and inserts."""
+    return (
+        s.read().filter("k % 10 <> 3")
+        .withColumn("val", F.expr("if(k % 7 = 0, val + 1, val)"))
+        .unionByName(_docs(spark, 205).filter("k >= 200"))
+    )
+
+
+def _job_window(spark, run):
+    """Ids of the Spark jobs submitted while ``run()`` runs, job group
+    or not: one marker job before and one after (job ids are dense in
+    submission order), so the commit's concurrent writes, which run on
+    pool threads outside the caller's job group, count too."""
+    sc = spark.sparkContext
+
+    def marker():
+        group = f"mark-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "job-id marker")
+        try:
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        (jid,) = sc.statusTracker().getJobIdsForGroup(group)
+        return jid
+
+    lo = marker()
+    group = f"commit-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "one apply_changes commit")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    hi = marker()
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    window = set(range(lo + 1, hi))
+    assert in_group <= window
+    return sorted(window)
+
+
+def _scanned_roots(df):
+    """Root paths of the file relations ``df``'s optimized plan reads
+    (a cached frame's own scans stay inside its in-memory relation)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            paths = leaf.relation().location().rootPaths()
+            roots += [
+                paths.apply(j).toUri().getPath() for j in range(paths.size())
+            ]
+    return roots
+
+
 class TestApplyChanges:
     def test_applies_a_diff_and_records_it(self, spark, tmp_root):
         """A diff_frames change set commits as one DV version: the
         store then reads as the target, the sidecar holds exactly the
-        change rows and the txn marker rides the flip."""
+        change rows (without their positions) and the txn marker rides
+        the flip."""
         s = DocumentStore(spark, tmp_root, "k")
         s.commit(_docs(spark, 200))
         cur = s.current_version_dir()
-        target = (
-            s.read().filter("k % 10 <> 3")
-            .withColumn("val", F.expr("if(k % 7 = 0, val + 1, val)"))
-            .unionByName(_docs(spark, 205).filter("k >= 200"))
+        target = _target_of(s, spark)
+        changes = diff_frames(
+            _masked_scan_with_positions(spark, cur), target, "k",
+            include_old=True,
         )
-        changes = diff_frames(s.read(), target, "k", include_old=True)
         out, counts = s.apply_changes(
             changes, expected_version=cur, txn=("app", "1"), cdf=True
         )
@@ -472,7 +532,8 @@ class TestApplyChanges:
         }
         _assert_same(s.read(), target)
         _assert_same(
-            spark.read.parquet(os.path.join(out, "_changes")), changes
+            spark.read.parquet(os.path.join(out, "_changes")),
+            changes.drop(*_POS_COLS),
         )
         assert s.last_txn("app") == "1"
 
@@ -480,7 +541,10 @@ class TestApplyChanges:
         s = DocumentStore(spark, tmp_root, "k")
         s.commit(_docs(spark, 50))
         cur = s.current_version_dir()
-        changes = diff_frames(s.read(), s.read(), "k", include_old=True)
+        changes = diff_frames(
+            _masked_scan_with_positions(spark, cur), s.read(), "k",
+            include_old=True,
+        )
         out, counts = s.apply_changes(
             changes, expected_version=cur, txn=("app", "7")
         )
@@ -491,11 +555,12 @@ class TestApplyChanges:
     def test_change_set_of_another_version_is_refused(
         self, spark, tmp_root
     ):
-        """Deleting keys the version no longer holds masks fewer rows
-        than the change set claims: nothing is published."""
+        """A change set diffed against the version before a delete
+        names that version in its positions, so it is refused against
+        the version the delete published: nothing is published."""
         s = DocumentStore(spark, tmp_root, "k")
         s.commit(_docs(spark, 50))
-        old = s.read()
+        old = _masked_scan_with_positions(spark, s.current_version_dir())
         changes = diff_frames(
             old, old.filter("k >= 10"), "k", include_old=True
         ).localCheckpoint()
@@ -504,6 +569,53 @@ class TestApplyChanges:
         with pytest.raises(ValueError, match="not computed against"):
             s.apply_changes(changes)
         assert s.list_versions() == versions
+
+    def test_change_set_without_positions_is_refused(self, spark, tmp_root):
+        """A change set whose old side was not read with its positions
+        has no mask to commit: refused, nothing published."""
+        s = DocumentStore(spark, tmp_root, "k")
+        s.commit(_docs(spark, 50))
+        changes = diff_frames(
+            s.read(), s.read().filter("k >= 10"), "k", include_old=True
+        )
+        versions = s.list_versions()
+        with pytest.raises(ValueError, match="position columns"):
+            s.apply_changes(changes)
+        assert s.list_versions() == versions
+
+    def test_commit_reads_no_base_data(self, spark, tmp_root, monkeypatch):
+        """The mask is the change set's own positions: with the change
+        set cached (as every IVM commit caches it), the positions frame
+        scans no file of the base version, and the commit runs exactly
+        the counts aggregate (two jobs under AQE: its map stage and its
+        result), the mask write and the append."""
+        s = DocumentStore(spark, tmp_root, "k")
+        s.commit(_docs(spark, 200))
+        cur = s.current_version_dir()
+        target = _target_of(s, spark)
+        changes = diff_frames(
+            _masked_scan_with_positions(spark, cur), target, "k",
+            include_old=True,
+        ).persist()
+        changes.count()
+        seen = {}
+        write_dv = store_mod.write_deletion_vectors
+
+        def spy(*args, **kwargs):
+            seen["positions"] = kwargs["positions"]
+            return write_dv(*args, **kwargs)
+
+        monkeypatch.setattr(store_mod, "write_deletion_vectors", spy)
+        try:
+            jobs = _job_window(
+                spark, lambda: s.apply_changes(changes, expected_version=cur)
+            )
+            scanned = _scanned_roots(seen["positions"])
+        finally:
+            changes.unpersist()
+        assert os.path.realpath(cur) not in map(os.path.realpath, scanned)
+        assert len(jobs) == 4, jobs
+        _assert_same(s.read(), target)
 
 
 class TestViewAppliesItsDiff:
@@ -546,6 +658,42 @@ class TestViewAppliesItsDiff:
         assert versions == nv
         epoch, _fact_ms, pin = marker.split(":")
         assert (int(epoch), int(pin)) == (1, dim_ms)
+
+    def test_update_to_identical_values_changes_nothing(
+        self, spark, tmp_root
+    ):
+        """A fact merge that rewrites a row to the values it already
+        holds is an ``update`` in the fact feed, but the re-joined view
+        row equals the stored one: the epoch writes no view change row
+        and no summary version, and records only its markers."""
+        fact, dim, view, summ = _join_stores(spark, tmp_root)
+        cols = ["k", "dk", "amt", "seg"]
+        stats = []
+        q = _start_join(spark, tmp_root, fact, dim, view, summ, cols, stats)
+        try:
+            q.processAllAvailable()  # bootstrap
+            views, summs = view.list_versions(), summ.list_versions()
+            summary = sorted(summ.read().collect())
+            _o, counts = fact.merge_into(
+                spark.createDataFrame([(7, 7, 700)], "k long, dk long, amt long"),
+                when_matched_update={"dk": "s.dk", "amt": "s.amt"},
+                cdf=True,
+            )
+            assert counts["updated"] == 1
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        nothing = {
+            "updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0,
+        }
+        assert stats[-1]["view"] == nothing
+        assert stats[-1]["summary"] == nothing
+        assert view.list_versions() == views
+        assert summ.list_versions() == summs
+        assert sorted(summ.read().collect()) == summary
+        epoch = str(stats[-1]["epoch"])
+        assert view.last_txn("jv").split(":")[0] == epoch
+        assert summ.last_txn("jv") == epoch
 
     def test_duplicate_dimension_key_rejects_the_epoch(
         self, spark, tmp_root

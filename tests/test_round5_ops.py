@@ -464,25 +464,32 @@ def test_incremental_rollup_new_all_null_group_keeps_null_sum(spark):
     assert got == {"a": (1, 5), "b": (1, None), "c": (1, None)}
 
 
-def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark):
+def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark, tmp_path):
     """The change set the fold emits from its own join equals
     diff_frames of the touched base slice against apply_rollup_delta
     of it: updates, a group leaving, a new group, a NULL group, a
     net-zero group that writes nothing and a new group that nets to
-    zero rows."""
+    zero rows. Over a base read with its positions, every change row
+    of a base group carries that group's position and an insert
+    carries NULLs."""
     from far_finer_airtable_firestore_sync_spark.operators.ivm import (
         apply_rollup_delta,
         rollup_delta_changes,
     )
     from far_finer_airtable_firestore_sync_spark.sources.store import (
+        _POS_COLS,
+        DocumentStore,
+        _masked_scan_with_positions,
         diff_frames,
     )
 
-    base = spark.createDataFrame(
+    store = DocumentStore(spark, str(tmp_path / "summary"), "g")
+    store.commit(spark.createDataFrame(
         [("a", 2, 10), ("b", 1, 5), ("z", 3, 7), (None, 2, None),
          ("u", 4, 40)],
         "g string, n long, tv long",
-    )
+    ))
+    base = _masked_scan_with_positions(spark, store.current_version_dir())
     delta = spark.createDataFrame(
         [("a", 1, 3), ("b", -1, -5), ("c", 2, None), (None, 1, 4),
          ("z", 0, 0), ("e", 0, 0)],
@@ -490,7 +497,7 @@ def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark):
     )
     old = base.join(
         delta, base["g"].eqNullSafe(delta["g"]), "left_semi"
-    )
+    ).drop(*_POS_COLS)
     want = diff_frames(
         old, apply_rollup_delta(old, delta, "g", "n", {"tv": "v"}), "g",
         include_old=True,
@@ -502,6 +509,13 @@ def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark):
     )
     assert {r["g"]: r["change_type"] for r in got.collect()} == {
         "a": "update", "b": "delete", "c": "insert", None: "update",
+    }
+    where = {r["g"]: tuple(r[c] for c in _POS_COLS) for r in base.collect()}
+    assert {
+        r["g"]: tuple(r[c] for c in _POS_COLS) for r in got.collect()
+    } == {
+        "a": where["a"], "b": where["b"], None: where[None],
+        "c": (None,) * len(_POS_COLS),
     }
 
 

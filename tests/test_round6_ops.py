@@ -947,6 +947,30 @@ def test_diff_frames_null_key_semantics(spark, tmp_path):
         for r in store.repair_rows(v2, v3, row_expr).collect()
     }
     assert rep == d2
+    # position carry: an old side read with its positions hands each
+    # old row's position to its change row without comparing it — the
+    # unchanged row emits nothing, the NULL-key update and the delete
+    # carry their own positions, the insert carries NULLs
+    from far_finer_airtable_firestore_sync_spark.sources.store import (
+        _POS_COLS,
+        _masked_scan_with_positions,
+        diff_frames,
+    )
+
+    old_pos = _masked_scan_with_positions(spark, v1)
+    where = {r["pk"]: tuple(r[c] for c in _POS_COLS) for r in old_pos.collect()}
+    target = spark.createDataFrame(
+        [(1, "a"), (None, "moved"), (3, "new")], "pk long, name string"
+    )
+    got = diff_frames(old_pos, target, "pk", include_old=True)
+    assert got.columns[-len(_POS_COLS):] == list(_POS_COLS)
+    rows = {r["pk"]: r for r in got.collect()}
+    assert {k: r["change_type"] for k, r in rows.items()} == {
+        None: "update", 2: "delete", 3: "insert",
+    }
+    for k in (None, 2):
+        assert tuple(rows[k][c] for c in _POS_COLS) == where[k]
+    assert [rows[3][c] for c in _POS_COLS] == [None] * len(_POS_COLS)
 
 
 def test_read_where_partitioned_store_keeps_partition_columns(spark, tmp_path):
