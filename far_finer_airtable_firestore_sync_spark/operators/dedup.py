@@ -64,14 +64,25 @@ def keep_latest(
 
     One row out per distinct valid pk; deterministic under ties via
     ``tiebreak_col`` (MAX wins).
+
+    The pk comes out as the grouping column itself, not as
+    ``_row.<pk>``: the aggregate's output is hash-partitioned on that
+    attribute, and a join on the pk downstream (the sync strategies)
+    reuses the partitioning instead of shuffling the source again.
+    Read from the struct, the pk would be a new attribute and that
+    partitioning would be lost. (A floating-point pk therefore comes out as the
+    normalized group key: ``-0.0`` reads ``0.0``.)
     """
     valid = filter_valid_pk(df, primary_key)
     payload = F.max_by(
-        F.struct(*[F.col(c) for c in df.columns]),
+        F.struct(*[F.col(c) for c in df.columns if c != primary_key]),
         _order_key(df, order_col, tiebreak_col),
     ).alias("_row")
     out = valid.groupBy(primary_key).agg(payload)
-    return out.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])
+    return out.select(
+        *[F.col(c) if c == primary_key else F.col(f"_row.{c}").alias(c)
+          for c in df.columns]
+    )
 
 
 def keep_latest_sql(

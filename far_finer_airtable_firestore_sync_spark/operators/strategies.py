@@ -10,8 +10,12 @@ by an aggregate gate broadcast back into the plan (M8/M9/M10), so a
 
 Scale design:
 - every strategy is a single equi-join (or union) on the primary key —
-  the natural shuffle key; AQE picks broadcast-hash automatically when
-  the incoming batch is small (the common sync case);
+  the natural shuffle key. The checksum classify join (M3/M4/M5/M7/M8)
+  is pinned to a sort-merge join: in the sync pipeline the source is
+  already hash-partitioned on the pk by the dedup aggregate, and the
+  ranked target of M3/M4/M5/M7 by its window, so the join shuffles
+  nothing more, where a broadcast would ship the whole target through
+  the driver (see :func:`_classify`);
 - M3/M4/M5 read each input ONCE: the source joins every ranked target
   row, and duplicate target keys are a CASE branch of that join, not a
   second join against ``source.select(pk).distinct()`` (which scanned
@@ -193,6 +197,16 @@ def _classify(
     Output columns: ``s.*``/``t.*`` qualified, plus ``_s_cs``/``_t_cs``
     and presence flags. Checksums are computed *before* the join so the
     expressions resolve unambiguously and evaluate in the scan stage.
+
+    The join is a shuffle-merge join (``merge`` hint on the target).
+    In the sync pipeline both inputs arrive hash-partitioned on the pk
+    already (the source by :func:`~..dedup.keep_latest`'s aggregate,
+    the target by :func:`_pick_one_per_key`'s window), so the join adds
+    no exchange. Left to itself, Spark broadcasts a target under the
+    broadcast threshold (as planned, or as AQE measures it once the
+    shuffles ran): one more job, and the whole target collected and
+    hashed on the driver. A source that is not pre-shuffled (a direct
+    call) trades the target's broadcast for its own shuffle.
     """
     # backfill is TARGET-only: a stored doc predating a spec field is
     # the graceful schema-evolution case; a SOURCE feed missing a spec
@@ -200,7 +214,12 @@ def _classify(
     # (backfilling it would silently overwrite real target values
     # with NULL on every matched row)
     s = source.withColumn("_s_cs", _checksum(spec)).alias("s")
-    t = _ensure_payload_cols(target, spec).withColumn("_t_cs", _checksum(spec)).alias("t")
+    t = (
+        _ensure_payload_cols(target, spec)
+        .withColumn("_t_cs", _checksum(spec))
+        .hint("merge")
+        .alias("t")
+    )
     return s.join(
         t, F.col(f"s.{spec.primary_key}") == F.col(f"t.{spec.primary_key}"), how
     )
@@ -233,8 +252,9 @@ def _pick_one_per_key(t: DataFrame, spec: SyncSpec) -> DataFrame:
     (version_id DESC NULLS LAST, doc_id DESC); ``_rn = 1`` is the row a
     point-update would touch, ``_rn > 1`` are untouched duplicates.
 
-    One window shuffle on the pk — the same key the strategy join uses,
-    so Catalyst reuses the partitioning for the sort-merge join side.
+    One window shuffle on the pk — the same key the strategy join uses:
+    :func:`_classify` plans that join as a sort-merge join, which reads
+    the window's partitioning as it is.
     """
     from pyspark.sql import Window
 

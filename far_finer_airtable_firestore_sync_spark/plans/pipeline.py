@@ -8,9 +8,12 @@ lazy DataFrame plan finished by a single store commit:
     source df -> typed_projection -> filter_valid_pk -> keep_latest
               -> strategy post-state -> DocumentStore.commit
 
-Catalyst pipelines the stages (the reference materializes each one);
-the only shuffles are the dedup aggregation and the strategy join,
-both keyed on the primary key.
+Catalyst pipelines the stages (the reference materializes each one).
+For the checksum strategies (M3/M4/M5) the plan shuffles each input
+once, both on the primary key: the source in the dedup aggregation,
+the target in the window that ranks its rows per key. The strategy
+join is a sort-merge join that reuses both partitionings, so it adds
+no exchange and broadcasts nothing.
 
 Concurrency: the pipeline accepts ANY store backend exposing
 ``read``/``commit`` (``DocumentStore``,
@@ -108,15 +111,20 @@ class SyncPipeline:
         strategy = get_strategy(self.spec.update_type)
         post = strategy(df, target, self.spec)
         if observations is not None:
+            # a table-document post-state (M9/M10) has no pk column:
+            # its documents are keyed by doc_id
+            key = (
+                self.spec.primary_key
+                if self.spec.primary_key in post.columns
+                else "doc_id"
+            )
             obs_out = Observation("sync_out")
             post = post.observe(
                 obs_out,
                 F.count(F.lit(1)).alias("rows"),
                 # DISTINCT aggregates are rejected in observed metrics;
                 # the sketch version is allowed and advisory-accurate
-                F.approx_count_distinct(F.col(self.spec.primary_key)).alias(
-                    "approx_distinct_keys"
-                ),
+                F.approx_count_distinct(F.col(key)).alias("approx_distinct_keys"),
             )
             observations.append(obs_out)
         return post

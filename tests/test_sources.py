@@ -198,12 +198,29 @@ def test_connector_to_store_e2e(spark, page_dir, tmp_path):
     assert res.metrics["sync_out"]["rows"] == 9
 
 
+def _final_plan_of_noop_write(spark, df) -> tuple[str, str]:
+    """Run ``df`` into a ``noop`` sink and return the ``Final Plan``
+    tree of that execution's adaptive plan and the formatted node
+    details, as the SQL status store recorded them."""
+    df.write.format("noop").mode("overwrite").save()
+    # the status store is fed by the listener bus; let it catch up
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = runs.apply(runs.size() - 1).physicalPlanDescription()
+    assert "isFinalPlan=true" in plan, plan
+    tree, details = plan.split("\n\n", 1)
+    return tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0], details
+
+
 @pytest.mark.parametrize(
     "update_type", ["soft_delete", "upsert_checksum", "upsert_checksum_with_delete"]
 )
 def test_sync_plan_scans_feed_and_target_once(spark, page_dir, tmp_path, update_type):
     """M3/M4/M5 over the connector against a committed target plan
-    exactly one record_feed scan and one target parquet scan."""
+    exactly one record_feed scan and one target parquet scan. The
+    executed plan shuffles each input once on the pk (the dedup
+    aggregate, the rank window) and the strategy join reuses both: a
+    sort-merge join, no third exchange, no broadcast of the target."""
     import re
 
     from far_finer_airtable_firestore_sync_spark.config import (
@@ -241,6 +258,17 @@ def test_sync_plan_scans_feed_and_target_once(spark, page_dir, tmp_path, update_
     # the formatted plan details each node once, as "(<id>) <node>"
     assert len(re.findall(r"^\(\d+\) BatchScan record_feed", plan, re.M)) == 1, plan
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+
+    final, details = _final_plan_of_noop_write(spark, post)
+    exchanges = re.findall(r"\bExchange \((\d+)\)", final)
+    assert len(exchanges) == 2, final
+    for i in exchanges:
+        args = re.search(
+            rf"^\({i}\) Exchange\n(?:.+\n)*?Arguments: (.+)$", details, re.M
+        ).group(1)
+        assert re.match(r"hashpartitioning\(Name#\d+, \d+\)", args), args
+    assert "SortMergeJoin" in final, final
+    assert "Broadcast" not in final, final
 
 
 # ---------------------------------------------------------------------------

@@ -126,9 +126,14 @@ def test_keep_latest_uses_partial_aggregation(spark):
     from far_finer_airtable_firestore_sync_spark.operators.dedup import keep_latest
 
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    plan = _plan(keep_latest(orders, "o_custkey", "o_orderdate", "o_orderkey"))
+    latest = keep_latest(orders, "o_custkey", "o_orderdate", "o_orderkey")
+    plan = _plan(latest)
     assert "partial_max_by" in plan  # map-side combine before the exchange
     assert plan.count("Exchange") == 1  # exactly one shuffle
+    # the pk is the grouping column, not a struct field: a consumer
+    # keyed on it (in the sync, the strategy join) reuses that shuffle
+    assert latest.columns == orders.columns
+    assert _plan(latest.groupBy("o_custkey").count()).count("Exchange") == 1
 
 
 def test_checksum_is_codegen_not_udf(spark):

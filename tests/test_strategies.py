@@ -330,10 +330,33 @@ def _ins_id(s, key):
     ).hexdigest()
 
 
-def test_upsert_checksum_duplicate_target_keys_golden(spark, dup_source):
-    s = spec_for(UpdateType.UPSERT_CHECKSUM)
-    target = spark.createDataFrame(dup_target_rows(s.update_type))
-    assert _golden(st.upsert_checksum(dup_source, target, s)) == sorted([
+def _dup_expected(s):
+    """Golden post-state of :func:`dup_target_rows` under ``dup_source``."""
+    ut = s.update_type
+    new = (_ins_id(s, "new"), "new", 3.0, RUN_TS,
+           False if ut is UpdateType.SOFT_DELETE else None)
+    if ut is UpdateType.UPSERT_CHECKSUM_WITH_DELETE:
+        # duplicates of keys in the batch survive; absent keys go entirely
+        return sorted([
+            ("d1", "same", 1.0, D_OLD, False),
+            ("d2", "chg", 2.0, RUN_TS, False),
+            ("d6", "chg", 50.0, D_OLD, False),
+            new,
+        ])
+    if ut is UpdateType.SOFT_DELETE:
+        # duplicates of keys in the batch are kept as they are; alive
+        # duplicates of absent keys are tombstoned, dead ones untouched
+        return sorted([
+            ("d1", "same", 1.0, D_OLD, False),
+            ("d2", "chg", 2.0, RUN_TS, False),
+            ("d6", "chg", 50.0, D_OLD, False),
+            ("d3", "gone", 4.0, RUN_TS, True),
+            ("d7", "gone", 40.0, RUN_TS, True),
+            ("d9", "husk", 8.0, RUN_TS, True),
+            ("d8", "husk", 80.0, D_OLD, True),
+            new,
+        ])
+    return sorted([
         ("d1", "same", 1.0, D_OLD, False),
         ("d2", "chg", 2.0, RUN_TS, False),
         ("d6", "chg", 50.0, D_OLD, False),
@@ -341,8 +364,14 @@ def test_upsert_checksum_duplicate_target_keys_golden(spark, dup_source):
         ("d7", "gone", 40.0, D_OLD, False),
         ("d9", "husk", 8.0, D_OLD, False),
         ("d8", "husk", 80.0, D_OLD, True),
-        (_ins_id(s, "new"), "new", 3.0, RUN_TS, None),
+        new,
     ])
+
+
+def test_upsert_checksum_duplicate_target_keys_golden(spark, dup_source):
+    s = spec_for(UpdateType.UPSERT_CHECKSUM)
+    target = spark.createDataFrame(dup_target_rows(s.update_type))
+    assert _golden(st.upsert_checksum(dup_source, target, s)) == _dup_expected(s)
 
 
 def test_upsert_checksum_with_delete_duplicate_target_keys_golden(
@@ -350,27 +379,38 @@ def test_upsert_checksum_with_delete_duplicate_target_keys_golden(
 ):
     s = spec_for(UpdateType.UPSERT_CHECKSUM_WITH_DELETE)
     target = spark.createDataFrame(dup_target_rows(s.update_type))
-    # duplicates of keys in the batch survive; absent keys go entirely
-    assert _golden(st.upsert_checksum_with_delete(dup_source, target, s)) == sorted([
-        ("d1", "same", 1.0, D_OLD, False),
-        ("d2", "chg", 2.0, RUN_TS, False),
-        ("d6", "chg", 50.0, D_OLD, False),
-        (_ins_id(s, "new"), "new", 3.0, RUN_TS, None),
-    ])
+    assert _golden(st.upsert_checksum_with_delete(dup_source, target, s)) == (
+        _dup_expected(s)
+    )
 
 
 def test_soft_delete_duplicate_target_keys_golden(spark, dup_source):
     s = spec_for(UpdateType.SOFT_DELETE)
     target = spark.createDataFrame(dup_target_rows(s.update_type))
-    # duplicates of keys in the batch are kept as they are; alive
-    # duplicates of absent keys are tombstoned, dead ones untouched
-    assert _golden(st.soft_delete(dup_source, target, s)) == sorted([
-        ("d1", "same", 1.0, D_OLD, False),
-        ("d2", "chg", 2.0, RUN_TS, False),
-        ("d6", "chg", 50.0, D_OLD, False),
-        ("d3", "gone", 4.0, RUN_TS, True),
-        ("d7", "gone", 40.0, RUN_TS, True),
-        ("d9", "husk", 8.0, RUN_TS, True),
-        ("d8", "husk", 80.0, D_OLD, True),
-        (_ins_id(s, "new"), "new", 3.0, RUN_TS, False),
-    ])
+    assert _golden(st.soft_delete(dup_source, target, s)) == _dup_expected(s)
+
+
+@pytest.mark.parametrize(
+    "ut",
+    [UpdateType.UPSERT_CHECKSUM, UpdateType.UPSERT_CHECKSUM_WITH_DELETE,
+     UpdateType.SOFT_DELETE],
+)
+def test_duplicate_target_keys_golden_through_pipeline(spark, tmp_path, ut):
+    """The same goldens through ``SyncPipeline.run`` on a committed
+    store: the source is deduped (a stale ``chg`` row drops out) and
+    arrives hash-partitioned on the key, so the classify join is the
+    sort-merge join over the dedup's and the rank window's shuffles."""
+    from far_finer_airtable_firestore_sync_spark.plans.pipeline import SyncPipeline
+    from far_finer_airtable_firestore_sync_spark.sources.store import DocumentStore
+
+    s = spec_for(ut)
+    store = DocumentStore(spark, str(tmp_path / "store"))
+    store.commit(spark.createDataFrame(dup_target_rows(ut)))
+    source = spark.createDataFrame(
+        [Row(name="same", score=1.0, Created=datetime(2024, 1, 2)),
+         Row(name="chg", score=2.0, Created=datetime(2024, 1, 2)),
+         Row(name="chg", score=77.0, Created=datetime(2024, 1, 1)),
+         Row(name="new", score=3.0, Created=datetime(2024, 1, 2))]
+    )
+    SyncPipeline(s, store).run(source)
+    assert _golden(store.read()) == _dup_expected(s)
