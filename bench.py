@@ -1,11 +1,11 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ...}. The session is sized from the host by
-default — the CPUs this process may run on and a quarter of host
-memory capped at 4g (``perfbench.harness.host_cpus`` /
-``driver_memory_mb``, as ``scripts/count_jobs.py`` does);
-$SPARK_GRAFT_CPUS and $SPARK_GRAFT_MEM override them.
+"queries": {...}, "sf": ...}. The session is the engine's
+``conf.local_session``, as the tests and scripts use it: sized from
+the host (the CPUs this process may run on, a quarter of host memory
+capped at 4g) unless $SPARK_GRAFT_CPUS / $SPARK_GRAFT_MEM say
+otherwise, with AQE allowed to re-plan cached plans' partitioning.
 
 Each query is executed via a noop write that forces full evaluation
 without collecting result rows to the driver.
@@ -43,63 +43,13 @@ import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
-# Python workers (the record_feed and change-feed sources run there) are
-# started by the JVM and must import the engine from this checkout too
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from perfbench.harness import driver_memory_mb, host_cpus
+    from far_finer_airtable_firestore_sync_spark.conf import local_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ffs-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE post-shuffle coalescing mode (round 11, parameterized
-        # for A/B): "true" (Spark default) first maximizes
-        # parallelism; "false" respects advisoryPartitionSizeInBytes,
-        # the production-recommended setting for size-targeted
-        # partitions (guide §2.2). Default stays the Spark default so
-        # the driver's bench remains comparable across rounds.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        # Round 12: let AQE re-plan the output partitioning of CACHED
-        # plans (persist()), instead of pinning them at the static
-        # shuffle-partition count. The engine persists sliver-sized
-        # multi-consumer frames on every DML/merge/IVM path (guide §5);
-        # without this, each cached sliver holds `shuffle.partitions`
-        # partitions and EVERY consumer pays that task fan-out — the
-        # r11-documented "cached partitions scan wider" trade, now
-        # reversed. Scale-adaptive by construction (AQE sizes by bytes:
-        # a sliver coalesces, a backfill keeps its width), so the same
-        # default is right at 100 TB. A/B evidence in
-        # OPTIMIZATION_r12.md; parameterized for re-testing.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHE_AQE_PARTITIONING", "true"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_MEM", f"{driver_memory_mb()}m"),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ffs-bench")
 
     import __spark_entry__ as e
 

@@ -23,9 +23,14 @@ guidance:
 - streaming state partitions come from key arrival rate, NOT batch
   shuffle width (streaming/sync.py:run_stream_to_memory rationale);
   exposed here so jobs size both from one place.
+
+:func:`local_session` is the one local session the bench, the tests
+and the scripts run the engine under.
 """
 
 from __future__ import annotations
+
+import os
 
 TARGET_SHUFFLE_PARTITION_BYTES = 128 * 1024 * 1024
 MEDIA_MAX_PARTITION_BYTES = 32 * 1024 * 1024
@@ -80,3 +85,63 @@ def apply_conf(spark, conf: dict[str, str]) -> None:
     """Apply a conf dict to a live session (runtime-settable keys)."""
     for k, v in conf.items():
         spark.conf.set(k, v)
+
+
+#: the checkout this package is imported from
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on (cpuset-aware, unlike os.cpu_count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_mem_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def local_conf(cores: int | None = None, **extra_conf: str) -> dict[str, str]:
+    """The conf :func:`local_session` starts Spark with.
+
+    ``local[cores]`` with as many shuffle partitions; ``cores`` defaults
+    to $SPARK_GRAFT_CPUS, else the host's CPUs. The driver gets
+    $SPARK_GRAFT_MEM, else a quarter of host memory capped at 4g (the
+    host may be shared). Only confs that differ from Spark's defaults
+    are set, and ``extra_conf`` wins over all of them.
+    """
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
+    mem_mb = max(1024, min(4096, host_mem_bytes() // 4 // (1024 * 1024)))
+    return {
+        "spark.master": f"local[{cores}]",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_MEM") or f"{mem_mb}m",
+        "spark.sql.shuffle.partitions": str(cores),
+        # AQE re-plans the output partitioning of cached plans: the
+        # engine persists sliver-sized multi-consumer frames on every
+        # DML/merge/IVM path, and a cache pinned at the static shuffle
+        # width makes each consumer pay that task fan-out
+        # (OPTIMIZATION_r12.md)
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        **extra_conf,
+    }
+
+
+def local_session(app: str, cores: int | None = None, **extra_conf: str):
+    """A local SparkSession sized by :func:`local_conf`. Python workers
+    are started by the JVM and import the engine (the record-feed and
+    change-feed sources run there), so this checkout goes on their
+    PYTHONPATH."""
+    from pyspark.sql import SparkSession
+
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
+    builder = SparkSession.builder.appName(app)
+    for k, v in local_conf(cores, **extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

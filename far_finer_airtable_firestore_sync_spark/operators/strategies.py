@@ -514,8 +514,11 @@ def versioned_set(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataF
     otherwise no-op.
 
     The reference's driver-side ``if changes_detected:`` (:304) becomes
-    a 1-row aggregate gate cross-joined into both branches — still one
-    declarative plan, broadcast-safe at any scale.
+    a 1-row aggregate gate cross-joined into the union of the old rows
+    and the batch: one declarative plan, broadcast-safe at any scale.
+    One join, so the gate is computed and broadcast once; a gate
+    joined into each branch is filtered differently per branch and
+    computed twice.
     """
     t = _ensure_engine_cols(
         purge_other_update_types(target, spec),
@@ -535,29 +538,33 @@ def versioned_set(source: DataFrame, target: DataFrame, spec: SyncSpec) -> DataF
         (F.count_if(diff) > 0).alias("_changed")
     )  # 1 row; broadcast cross join below
 
-    old = (
-        t.crossJoin(F.broadcast(gate))
+    new_rows = source.withColumns(
+        {
+            "doc_id": _new_doc_id(spec),
+            "update_type": F.lit(spec.update_type.value),
+            "write_timestamp": _run_ts(spec),
+            "version_id": F.lit(spec.version_id).cast("bigint"),
+            "latest": F.lit(True),
+        }
+    )
+    is_new = F.col("_new")
+    return (
+        _union(
+            t.withColumn("_new", F.lit(False)),
+            new_rows.withColumn("_new", F.lit(True)),
+        )
+        .crossJoin(F.broadcast(gate))
+        # the batch lands only on a change; on a change every old row
+        # stops being latest
+        .filter(~is_new | F.col("_changed"))
         .withColumn(
             "latest",
-            F.when(F.col("_changed"), F.lit(False)).otherwise(F.col("latest")),
+            F.when(~is_new & F.col("_changed"), F.lit(False)).otherwise(
+                F.col("latest")
+            ),
         )
-        .drop("_changed")
+        .drop("_new", "_changed")
     )
-    new_rows = (
-        source.crossJoin(F.broadcast(gate))
-        .filter(F.col("_changed"))
-        .drop("_changed")
-        .withColumns(
-            {
-                "doc_id": _new_doc_id(spec),
-                "update_type": F.lit(spec.update_type.value),
-                "write_timestamp": _run_ts(spec),
-                "version_id": F.lit(spec.version_id).cast("bigint"),
-                "latest": F.lit(True),
-            }
-        )
-    )
-    return _union(old, new_rows)
 
 
 # ---------------------------------------------------------------------------

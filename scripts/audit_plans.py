@@ -63,22 +63,14 @@ def main() -> None:
     sf_dir = positional[0] if positional else "/root/testdata/sf0.001"
     write_md = "--write-md" in sys.argv
 
-    from pyspark.sql import SparkSession
+    from far_finer_airtable_firestore_sync_spark.conf import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ffs-plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        # AQE off: an un-executed adaptive plan hides the codegen
-        # stage markers (`*(N)`) the audit counts; the static plan
-        # shows the same shape the bench runs with.
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    # AQE off: an un-executed adaptive plan hides the codegen stage
+    # markers (`*(N)`) the audit counts; the static plan shows the same
+    # shape the bench runs with.
+    spark = local_session(
+        "ffs-plan-audit", **{"spark.sql.adaptive.enabled": "false"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
 

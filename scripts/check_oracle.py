@@ -6,6 +6,9 @@ schema (sorted column names) and an order-insensitive value multiset.
 
 Usage: python scripts/check_oracle.py [sf_dir] [name ...]   (from any directory)
 
+The session is ``conf.local_session``, sized from the host;
+SPARK_GRAFT_CPUS / SPARK_GRAFT_MEM override it.
+
 Set ORACLE_JSON_OUT=<path> to also write a machine-readable artifact
 (one record per entry: status/rows/error) — committed per round as
 ORACLE_LOCAL_r{N}.json so the half of the contract the driver's
@@ -23,11 +26,6 @@ import duckdb
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# Python workers (the record_feed and change-feed sources run there) are
-# started by the JVM and must import the engine from this checkout too
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -61,32 +59,9 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
-    from pyspark.sql import SparkSession
+    from far_finer_airtable_firestore_sync_spark.conf import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracle")
-        .config("spark.sql.shuffle.partitions", "8")
-        # mirror bench.py's cached-plan AQE partitioning (round 12) so
-        # the correctness gate exercises the config the bench runs with
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHE_AQE_PARTITIONING", "true"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        # the default 1g heap survives sf0.01 but a full 268-entry
-        # sf0.1 session accumulates enough broadcast/GC pressure to
-        # flake late entries (observed: dedup_pagerank broadcast OOM
-        # at minute ~14, green standalone) — size like bench.py does
-        .config(
-            "spark.driver.memory",
-            os.environ.get("ORACLE_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("check-oracle")
 
     con = duckdb.connect()
     for t in TABLES:

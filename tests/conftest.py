@@ -1,19 +1,10 @@
 import pytest
-from pyspark.sql import SparkSession
+
+from far_finer_airtable_firestore_sync_spark.conf import local_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("ffs-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    # four cores on any host: the job and task counts tests pin follow
+    # the shuffle width
+    yield local_session("ffs-tests", cores=4)

@@ -271,6 +271,58 @@ def test_sync_plan_scans_feed_and_target_once(spark, page_dir, tmp_path, update_
     assert "Broadcast" not in final, final
 
 
+def test_versioned_set_plans_one_gate(spark, page_dir, tmp_path):
+    """VERSIONED_SET decides all-or-nothing with a 1-row change gate.
+    Its post-state plans the gate once: one classify join, one
+    aggregate, one broadcast, cross-joined into the union of the old
+    rows and the batch. A gate joined into each branch separately
+    differs per branch (the batch's filter is pushed into it), so it
+    is computed and broadcast twice and scans the feed three times."""
+    import re
+
+    from far_finer_airtable_firestore_sync_spark.config import (
+        SyncSpecBuilder,
+        UpdateType,
+    )
+    from far_finer_airtable_firestore_sync_spark.plans.pipeline import SyncPipeline
+    from far_finer_airtable_firestore_sync_spark.sources.store import DocumentStore
+
+    record_source.register(spark)
+    raw = (
+        spark.read.format("record_feed")
+        .option("path", page_dir)
+        .option("fields", "Name, Score")
+        .load()
+        .withColumnRenamed("_created_time", "Created")
+        .drop("_record_id")
+    )
+    spec = (
+        SyncSpecBuilder()
+        .with_primary_key("Name")
+        .with_update_type(UpdateType.VERSIONED_SET)
+        .with_field("Name", "string")
+        .with_field("Created", "timestamp")
+        .with_field("Score", "double")
+        .build()
+    )
+    catalog = {"Name": "singleLineText", "Created": "dateTime", "Score": "number"}
+    pipe = SyncPipeline(spec, DocumentStore(spark, str(tmp_path / "store")), catalog)
+    pipe.run(raw)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        pipe.build_post_state(raw)._jdf.queryExecution(), "formatted"
+    )
+
+    def nodes(name):
+        return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+
+    assert nodes("BroadcastExchange") == 1, plan
+    assert nodes("BroadcastNestedLoopJoin") == 1, plan
+    # the gate's partial and final aggregate
+    assert nodes("HashAggregate") == 2, plan
+    # the gate's classify join and the batch itself
+    assert nodes("BatchScan record_feed") == 2, plan
+
+
 # ---------------------------------------------------------------------------
 # HTTP fetch hook (VERDICT round-1 item 5)
 # ---------------------------------------------------------------------------
