@@ -188,7 +188,7 @@ def rollup_delta_changes(
     track joins: each is a shuffle or broadcast stage).
 
     When ``base`` is a position-carrying scan
-    (``store._masked_scan_with_positions``), each change row ends with
+    (``store._masked_scan`` ``positions=True``), each change row ends with
     its base row's position columns, unchanged — the mask
     ``apply_changes`` writes, NULL on ``insert`` rows. They take no
     part in the fold or the comparison (the :func:`diff_frames`

@@ -44,7 +44,7 @@ from far_finer_airtable_firestore_sync_spark.sources.store import (
     _binpack_classify,
     _drop_skip_manifests,
     _link_candidate,
-    _masked_scan_with_positions,
+    _masked_scan,
     _version_live_rows,
     _write_commit_changes,
     _write_json_durable,
@@ -720,7 +720,7 @@ class TransactionalParquetBackend:
             # ONE-PASS (round 11): positions ride the clause-tagged
             # join; the DV mask projects off the same cached frame
             plan = derive_merge_clauses(
-                _masked_scan_with_positions(self.spark, base), source,
+                _masked_scan(self.spark, base, positions=True), source,
                 self.key_col, when_matched_update, update_condition,
                 when_matched_delete, when_not_matched_insert,
                 when_not_matched_by_source_delete, schema_evolution,

@@ -26,6 +26,7 @@ import shutil
 import time
 import uuid
 from typing import Any, Optional
+from urllib.parse import unquote
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -466,10 +467,9 @@ class DocumentStore:
         ride this method — see the post-delete state for free.
         ``apply_deletion_vectors=False`` exposes the raw physical
         rows (compaction internals, forensics)."""
-        df = _version_reader(self.spark, version_dir).parquet(version_dir)
         if apply_deletion_vectors:
-            df = _apply_deletion_vectors(self.spark, df, version_dir)
-        return df
+            return _masked_scan(self.spark, version_dir)
+        return _version_reader(self.spark, version_dir).parquet(version_dir)
 
     def delete_where(
         self,
@@ -806,16 +806,9 @@ class DocumentStore:
             return _version_reader(self.spark, vd).parquet(vd).filter(
                 F.lit(False)
             )
-        # basePath pins partition discovery to the version root, so a
-        # hive-partitioned snapshot keeps its partition columns when
-        # individual leaf files are read (review finding)
-        scan = (
-            _version_reader(self.spark, vd)
-            .option("basePath", vd)
-            .parquet(*keep)
-            .filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
+        return _masked_scan(self.spark, vd, keep).filter(
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
-        return _apply_deletion_vectors(self.spark, scan, vd)
 
     def read_where_eq(
         self, col: str, values: list, build_if_missing: bool = True
@@ -829,17 +822,18 @@ class DocumentStore:
         files; blooms answer "can this file contain THIS key?".
         Blooms have no false negatives and the predicate is re-applied
         on the pruned scan, so pruning is loss-free by construction;
-        deletion vectors are applied, so a deleted key does NOT
-        resurrect through the point-lookup path. Returns None on an
-        empty store.
+        the kept files' deletion vectors are applied
+        (:func:`_masked_scan`), so a deleted key does NOT resurrect
+        through the point-lookup path. Returns None on an empty store.
 
         ``build_if_missing`` controls the lazy sidecar build: it
         reads one column per file ON THE DRIVER, which is the right
         trade for a maintenance-built index serving many lookups but
         the wrong one for a single ad-hoc read of a large un-indexed
         version (review finding). With ``build_if_missing=False`` an
-        un-indexed version falls back to the distributed masked
-        filter scan (parquet min/max skipping still applies)."""
+        un-indexed version is read whole through :func:`_masked_scan`
+        and filtered (parquet footer min/max still skips row groups).
+        :meth:`get_document` prunes by zone instead."""
         vd = self.current_version_dir()
         if vd is None:
             return None
@@ -847,25 +841,13 @@ class DocumentStore:
         if not build_if_missing and not os.path.exists(
             os.path.join(vd, f"_bloom_{col}.json")
         ):
-            return _apply_deletion_vectors(
-                self.spark,
-                _version_reader(self.spark, vd)
-                .parquet(vd)
-                .filter(F.col(col).isin(vals)),
-                vd,
-            )
+            return _masked_scan(self.spark, vd).filter(F.col(col).isin(vals))
         keep, _total = prune_files_by_bloom(vd, col, vals)
         if not keep:
             return _version_reader(self.spark, vd).parquet(vd).filter(
                 F.lit(False)
             )
-        scan = (
-            _version_reader(self.spark, vd)
-            .option("basePath", vd)
-            .parquet(*keep)
-            .filter(F.col(col).isin(vals))
-        )
-        return _apply_deletion_vectors(self.spark, scan, vd)
+        return _masked_scan(self.spark, vd, keep).filter(F.col(col).isin(vals))
 
     def compact(
         self,
@@ -1006,7 +988,7 @@ class DocumentStore:
 
         ONE-PASS (round 11, guide §1.2/§2.3): the masked snapshot is
         scanned once, carrying its physical positions
-        (:func:`_masked_scan_with_positions`); the matched sliver is
+        (:func:`_masked_scan` ``positions=True``); the matched sliver is
         persisted and the deletion-vector positions, the updated
         images and the CDF rows are all projections of it — the
         previous shape paid three predicate scans of the full version
@@ -1097,7 +1079,7 @@ class DocumentStore:
         # physical positions through the clause-tagged join, so the
         # deletion-vector mask projects off the SAME cached frame
         plan = derive_merge_clauses(
-            _masked_scan_with_positions(self.spark, cur), source,
+            _masked_scan(self.spark, cur, positions=True), source,
             self.key_col, when_matched_update, update_condition,
             when_matched_delete, when_not_matched_insert,
             when_not_matched_by_source_delete, schema_evolution,
@@ -1118,8 +1100,8 @@ class DocumentStore:
     ) -> tuple[str, dict[str, int]]:
         """Commit a change set computed against the current version
         (key-unique, :func:`diff_frames` ``include_old=True`` shape,
-        its old side a :func:`_masked_scan_with_positions` scan of that
-        version) as ONE deletion-vector version: the positions the
+        its old side a :func:`_masked_scan` ``positions=True`` scan of
+        that version) as ONE deletion-vector version: the positions the
         change set carries on its ``update``/``delete`` rows are
         masked, ``update``/``insert`` post images appended, and with
         ``cdf`` the change rows as the version's change feed (see
@@ -1214,20 +1196,33 @@ class DocumentStore:
     # -- reads (S5-S8) -------------------------------------------------------
 
     def get_document(self, doc_id: Any) -> Optional[dict]:
-        """S5 point read (lib/FirestoreWrapper.py:72-84), served
-        through the composed point-lookup path (:meth:`read_where_eq`):
-        Bloom-sidecar file skipping WHEN the index exists (built by
-        maintenance via ``write_bloom_manifest`` — Firestore's
-        server-side key index as a sidecar riding the version) +
-        deletion-vector masking, so a point read never resurrects a
-        deleted row. An un-indexed version falls back to the
-        distributed min/max-pruned scan rather than paying a
-        driver-side index build on the read path (review finding)."""
-        df = self.read_where_eq(self.key_col, [doc_id], build_if_missing=False)
-        if df is None:
+        """S5 point read (lib/FirestoreWrapper.py:72-84): the files
+        whose zone (:func:`prune_files_by_zone`, footer min/max of the
+        key) can hold ``doc_id`` are scanned in ONE Spark job, each
+        matching row with its physical position, and the deletion
+        vectors of those files are applied to the collected rows on the
+        driver — a point read never resurrects a deleted row, whatever
+        the size of the mask."""
+        vd = self.current_version_dir()
+        if vd is None:
             return None
-        rows = df.limit(1).collect()
-        return rows[0].asDict(recursive=True) if rows else None
+        keep, _total = prune_files_by_zone(vd, self.key_col, doc_id, doc_id)
+        if not keep:
+            return None
+        scan = _version_reader(self.spark, vd).option("basePath", vd)
+        rows = _with_positions(scan.parquet(*keep), vd).filter(
+            F.col(self.key_col).isin([doc_id])
+        ).collect()
+        dv = _dv_positions(vd, keep) if rows else None
+        dead = set() if dv is None else set(zip(
+            dv["file_path"].to_pylist(), dv["row_index"].to_pylist()
+        ))
+        for row in rows:
+            doc = row.asDict(recursive=True)
+            pos = tuple(doc.pop(c) for c in _POS_COLS)
+            if pos[:2] not in dead:
+                return doc
+        return None
 
     def query_documents(self, field: str, op: str, value: Any) -> DataFrame:
         """S6 predicate scan (lib/FirestoreWrapper.py:86-92)."""
@@ -1497,7 +1492,7 @@ def delete_where_build(
     try:
         with _candidate(base, out):
             if cdf:
-                matched = _masked_scan_with_positions(spark, base).filter(
+                matched = _masked_scan(spark, base, positions=True).filter(
                     predicate
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 n_total = write_deletion_vectors(
@@ -1551,7 +1546,7 @@ def update_where_build(
 
     Returns ``(publish, n_updated)``; an empty match removes ``out`` and
     returns ``(False, 0)``."""
-    snap_pos = _masked_scan_with_positions(spark, base)
+    snap_pos = _masked_scan(spark, base, positions=True)
     data_cols = [c for c in snap_pos.columns if c not in _POS_COLS]
     unknown = [c for c in set_exprs if c not in data_cols]
     if unknown:
@@ -1639,8 +1634,8 @@ def apply_changes_build(
     ``changes`` is key-unique and in :func:`diff_frames`
     ``include_old=True`` shape (key, ``change_type``, post images,
     ``old_*`` pre-images) plus the position columns of the pass that
-    found its old rows: its old side is
-    :func:`_masked_scan_with_positions` of ``base``, whose positions
+    found its old rows: its old side is :func:`_masked_scan`
+    ``positions=True`` of ``base``, whose positions
     :func:`diff_frames` and ``operators.ivm.rollup_delta_changes``
     carry onto every ``update``/``delete`` row. ``base``'s files
     hard-link in, those positions ARE the mask (Delta's rule: DML
@@ -1665,8 +1660,8 @@ def apply_changes_build(
     if missing:
         raise ValueError(
             f"apply_changes: the change set lacks the position columns "
-            f"{missing} — diff against _masked_scan_with_positions of "
-            "the version it applies to"
+            f"{missing} — diff against _masked_scan(..., positions=True) "
+            "of the version it applies to"
         )
     kind = F.col("change_type")
     masked = kind.isin("update", "delete")
@@ -1807,7 +1802,7 @@ def derive_merge_clauses(
     only the commit protocol differs.
 
     ``snap`` is the MASKED current snapshot carrying its physical
-    positions (:func:`_masked_scan_with_positions`; deleted rows must
+    positions (:func:`_masked_scan` ``positions=True``; deleted rows must
     never resurrect through a merge). Eagerly counts every clause so a bad
     expression fails BEFORE the caller links a candidate directory —
     and all four counts come from ONE aggregate over ONE clause-tagged
@@ -2152,8 +2147,8 @@ def diff_frames(
     dropped columns). A key-column TYPE change across versions
     remains out of scope (rewrite, not evolve).
 
-    POSITION CARRY: when ``old_df`` is a
-    :func:`_masked_scan_with_positions` scan (or a slice of one), its
+    POSITION CARRY: when ``old_df`` is a :func:`_masked_scan`
+    ``positions=True`` scan (or a slice of one), its
     position columns (``_ffs_pos_fp``, ``_ffs_pos_ri``,
     ``_ffs_pos_v``) ride the join unchanged and close each change
     row: the positions of the old row on ``update``/``delete`` rows
@@ -2342,7 +2337,11 @@ def write_zone_manifest(version_dir: str) -> dict:
                     if st is None or not st.has_min_max:
                         poisoned.add(name)
                         continue
-                    mn, mx = st.min, st.max
+                    try:
+                        mn, mx = st.min, st.max
+                    except NotImplementedError:  # INT96 timestamps
+                        poisoned.add(name)
+                        continue
                     if isinstance(mn, bytes):
                         try:
                             mn, mx = mn.decode(), mx.decode()
@@ -2351,6 +2350,9 @@ def write_zone_manifest(version_dir: str) -> dict:
                             continue
                     if hasattr(mn, "isoformat"):
                         mn, mx = mn.isoformat(), mx.isoformat()
+                    if not isinstance(mn, (bool, int, float, str)):
+                        poisoned.add(name)  # no JSON form (decimals)
+                        continue
                     if name in cols:
                         cols[name] = [min(cols[name][0], mn),
                                       max(cols[name][1], mx)]
@@ -2395,7 +2397,11 @@ def prune_files_by_zone(
             continue  # an empty file is always safely prunable
         n_nonempty += 1
         zone = meta["columns"].get(col)
-        if zone is None or (zone[0] <= hi and zone[1] >= lo):
+        try:
+            hit = zone is None or (zone[0] <= hi and zone[1] >= lo)
+        except TypeError:  # a probe the zone's type cannot order
+            hit = True
+        if hit:
             keep.append(os.path.join(version_dir, rel))
     # total counts NON-empty files only: otherwise a skip-rate
     # assertion (len(keep) < total) could be satisfied purely by empty
@@ -2534,7 +2540,7 @@ def _dv_rel_expr(version_dir: str, path_col: str) -> F.Column:
     definition shared by the DV writer and every DV-masked reader.
     Positions are stored version-relative (r8 ADVICE, medium): an
     absolute-URI ``file_path`` breaks the moment the version moves —
-    a shallow clone's sidecar would anti-join against the clone's own
+    a shallow clone's sidecar would be matched against the clone's own
     paths, match nothing, and silently resurrect every deleted row.
     Relative paths are layout-stable across clone/move because
     ``_link_tree`` preserves file names.
@@ -2720,10 +2726,11 @@ def write_deletion_vectors(
 
     Returns the TOTAL number of distinct masked positions after this
     call. The mask is computed once by a distributed scan of only the
-    matching rows; readers (:func:`read_with_deletion_vectors` / the
-    DV-aware ``DocumentStore`` read paths) never re-evaluate the
-    predicate — masking is purely positional, so it also covers
-    deletes whose predicate columns were later dropped or renamed.
+    matching rows; readers (:func:`_masked_scan`, under every
+    ``DocumentStore`` read path and :func:`read_with_deletion_vectors`)
+    never re-evaluate the predicate — masking is purely positional, so
+    it also covers deletes whose predicate columns were later dropped
+    or renamed.
 
     ``legacy_dir`` names the directory an INHERITED sidecar came from
     (``delete_where``/``update_where`` pass the predecessor version):
@@ -2743,7 +2750,7 @@ def write_deletion_vectors(
     mask. ``positions`` (round 11) is the ONE-PASS form used by the
     fused DML paths: a frame of already-version-relative
     ``(_ffs_pos_fp, _ffs_pos_ri)`` positions taken from
-    :func:`_masked_scan_with_positions` — no scan of the version
+    :func:`_masked_scan` ``positions=True`` — no scan of the version
     happens here at all; the caller's single matched-sliver pass
     decided the mask."""
     if (predicate is None) == (positions is None):
@@ -2758,9 +2765,9 @@ def write_deletion_vectors(
             F.col(_POS_RI).alias("row_index"),
         )
         # One-pass positions are distinct BY CONSTRUCTION: they come
-        # from :func:`_masked_scan_with_positions`, which emits each
-        # live physical row exactly once AND anti-joins the existing
-        # mask — so they are also disjoint from any inherited sidecar.
+        # from :func:`_masked_scan`, which emits each live physical
+        # row exactly once AND drops the existing mask — so they are
+        # also disjoint from any inherited sidecar.
         # The dedup shuffle the predicate form needs (a raw scan
         # can re-match already-masked rows) is a provable no-op here;
         # skipping it removes one exchange from EVERY one-pass DML and
@@ -2795,7 +2802,12 @@ def write_deletion_vectors(
     if predicate is not None:
         new_dv = new_dv.distinct()
     tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
-    new_dv.write.mode("errorifexists").parquet(tmp)
+    # rows reach the write in shuffle-fetch order, so the same mask
+    # wrote files a few bytes apart run to run; a local sort (no
+    # exchange, no job) makes the sidecar's bytes repeat
+    new_dv.sortWithinPartitions("file_path", "row_index").write.mode(
+        "errorifexists"
+    ).parquet(tmp)
     # total = rows of the sidecar just written: sum the parquet
     # FOOTERS driver-side instead of paying a whole Spark count job —
     # the sidecar is local, just-written, and O(masked positions)
@@ -2817,35 +2829,6 @@ def write_deletion_vectors(
     return total
 
 
-def _dv_masked_files(version_dir: str) -> set:
-    """Relative paths of data files with at least one deletion-vector
-    position — what bin selection needs to know whether rewriting a
-    LONE small file pays (it materializes that file's mask). Reads
-    ONE column of the sidecar (pyarrow projection + unique), which is
-    O(masked positions) — sliver-sized for routine DML, and exactly
-    when it is large (a bulk delete) is when compaction is due
-    anyway. Handles both the current version-relative path format and
-    the retired absolute-URI one."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    dv = os.path.join(version_dir, _DV_DIR)
-    if not os.path.isdir(dv):
-        return set()
-    base = os.path.basename(os.path.normpath(version_dir))
-    out: set = set()
-    for f in os.listdir(dv):
-        if not f.endswith(".parquet"):
-            continue
-        col = pq.read_table(
-            os.path.join(dv, f), columns=["file_path"]
-        ).column("file_path")
-        for v in pc.unique(col).to_pylist():
-            marker = f"/{base}/"
-            out.add(v.split(marker, 1)[1] if marker in v else v)
-    return out
-
-
 def _binpack_classify(
     version_dir: str,
     min_rows_per_file: int,
@@ -2854,7 +2837,7 @@ def _binpack_classify(
     """Select a committed version's bin-pack candidates by FOOTER row
     count — O(filecount) metadata, the same listing the commit itself
     performs; no data scan (plus one sidecar-column read when a DV
-    mask exists, see :func:`_dv_masked_files`). ``partition_values``
+    mask exists, see :func:`_dv_positions`). ``partition_values``
     restricts candidacy to files under the named hive partitions
     (``col=value`` path components) — files outside the scope always
     link, the Delta ``OPTIMIZE ... WHERE`` shape.
@@ -2892,9 +2875,8 @@ def _binpack_classify(
                 )
             else:
                 linked.append((rel, n))
-    masked = (
-        _dv_masked_files(version_dir) if by_parent else set()
-    )
+    dv = _dv_positions(version_dir) if by_parent else None
+    masked = set() if dv is None else set(dv["file_path"].unique().to_pylist())
     selected: list[tuple[str, int]] = []
     for _parent, group in by_parent.items():
         if len(group) >= 2 or any(rel in masked for rel, _n in group):
@@ -2968,46 +2950,32 @@ def binpack_build(
     marker = os.path.join(src, _MIXED_SCHEMA_MARKER)
     if os.path.exists(marker):
         shutil.copy2(marker, os.path.join(out, _MIXED_SCHEMA_MARKER))
-    # Rewrite the small files through the DV mask (a partial scan
-    # anti-joins a mask superset — harmless, per _apply_deletion_
-    # vectors). Sizing is footer-only: the mask can only shrink the
-    # slice, so ceil(footer_rows/target) never under-sizes.
+    # Rewrite the small files through their DV positions. Sizing is
+    # footer-only: the mask can only shrink the slice, so
+    # ceil(footer_rows/target) never under-sizes.
     small_rels = [rel for rel, _n in small]
     rows_small = sum(n for _rel, n in small)
     n_files = max(1, -(-rows_small // target_rows_per_file))
-    scan = (
-        _version_reader(spark, src)
-        .option("basePath", src)
-        .parquet(*[os.path.join(src, rel) for rel in small_rels])
+    scan = _masked_scan(
+        spark, src, [os.path.join(src, rel) for rel in small_rels]
     )
-    scan = _apply_deletion_vectors(spark, scan, src)
     pcols = _hive_partition_cols(src)
     writer = scan.coalesce(n_files).write.mode("append")
     if pcols:
         writer = writer.partitionBy(*pcols)
     writer.parquet(out)
-    # DV sidecar: keep ONLY the linked files' positions. The filter
-    # anti-joins the (bounded) rewrite set — never a driver IN-list.
+    # DV sidecar: keep ONLY the linked files' positions. The rewrite
+    # set is bounded by the small-file count, so it filters as a
+    # literal IN list inside the sidecar's write job.
     dv_src = os.path.join(src, _DV_DIR)
     if os.path.isdir(dv_src) and big:
-        dv = _version_reader(spark, dv_src).parquet(dv_src).select(
+        kept = _version_reader(spark, dv_src).parquet(dv_src).select(
             _dv_rel_expr(src, "file_path").alias("file_path"),
             "row_index",
-        )
-        rewritten = spark.createDataFrame(
-            [(r,) for r in small_rels], "file_path string"
-        )
-        kept = dv.join(F.broadcast(rewritten), "file_path", "left_anti")
+        ).filter(~F.col("file_path").isin(small_rels))
         tmp = os.path.join(out, _DV_DIR + ".tmp-" + uuid.uuid4().hex[:8])
         kept.write.mode("errorifexists").parquet(tmp)
-        import pyarrow.parquet as pq
-
-        n_kept = sum(
-            pq.read_metadata(os.path.join(tmp, f)).num_rows
-            for f in os.listdir(tmp)
-            if f.endswith(".parquet")
-        )
-        if n_kept:
+        if _parquet_footer_rows(tmp):
             os.rename(tmp, os.path.join(out, _DV_DIR))
         else:
             shutil.rmtree(tmp)
@@ -3037,127 +3005,160 @@ _POS_V = "_ffs_pos_v"
 _POS_COLS = (_POS_FP, _POS_RI, _POS_V)
 
 
-def _masked_scan_with_positions(
-    spark: SparkSession, version_dir: str
-) -> DataFrame:
-    """Masked snapshot of a version CARRYING its physical positions
-    (version-relative file path + row index) as ordinary columns —
-    the one-pass DML scan (round 11, guide §1.2/§2.3: scan once,
-    decide everything from that pass). ``update_where`` /
-    ``delete_where`` / ``merge_into`` previously scanned the version
-    up to three times per commit (deletion-vector positions, updated
-    images, CDF rows); with the positions riding the masked scan, the
-    matched sliver is computed ONCE and every downstream frame
-    (positions, images, change rows, clause tags) is a projection of
-    it. Positions from the PREDECESSOR directory are valid for the
-    hard-linked successor: ``_link_tree`` preserves relative layout
-    and the files are the same inodes. ``_ffs_pos_v`` names the
-    version scanned, so a change set built over this scan names the
-    version its mask belongs to (:func:`apply_changes_build`)."""
-    data = _version_reader(spark, version_dir).parquet(version_dir)
-    # same reserved-name set as _apply_deletion_vectors: the DV
-    # anti-join below aliases the sidecar to _ffs_dv_*, so a snapshot
-    # carrying such a column would fail with an ambiguous-reference
-    # AnalysisException instead of this clear error (r11 ADVICE)
+#: Most deletion-vector positions (of the files a scan reads) that
+#: :func:`_masked_scan` drops with an in-plan filter; a larger mask is
+#: anti-joined. Building and analysing the filter costs time per
+#: position on the driver, the anti-join one Spark job (AQE broadcasts
+#: the mask) per action; the bound sits where the two costs meet on a
+#: 4-core host (measured curve in CHANGES.md).
+_DV_FILTER_MAX_POSITIONS = 2000
+
+
+def _dv_positions(
+    version_dir: str, files: Optional[list[str]] = None
+) -> Optional["pa.Table"]:
+    """``version_dir``'s deletion-vector positions read on the driver
+    with pyarrow — no Spark job — as a (``file_path``, ``row_index``)
+    table whose paths are normalized exactly as :func:`_dv_rel_expr`
+    normalizes them (a legacy absolute-URI sidecar of this directory
+    resolves too). ``files``, the data files of a pruned scan, keeps
+    only the positions of those files (a path matches raw or
+    URL-decoded, as Spark's ``_metadata.file_path`` encodes it). None
+    when the version carries no mask — after first self-healing an
+    interrupted sidecar swap, so a crash mid-swap is never served as
+    "no mask" (:func:`_dv_recover_interrupted_swap`)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dv_dir = os.path.join(version_dir, _DV_DIR)
+    if not os.path.isdir(dv_dir):
+        try:
+            _dv_recover_interrupted_swap(version_dir)
+        except OSError:
+            pass  # a concurrent reader won the recovery rename
+        if not os.path.isdir(dv_dir):
+            return None
+    dv = pq.read_table(dv_dir, columns=["file_path", "row_index"])
+    marker = f"/{os.path.basename(os.path.normpath(version_dir))}/"
+    raw = pc.unique(dv["file_path"])
+    rel = [p.rsplit(marker, 1)[-1] for p in raw.to_pylist()]
+    dv = pa.table({
+        "file_path": pc.take(pa.array(rel, pa.string()),
+                             pc.index_in(dv["file_path"], value_set=raw)),
+        "row_index": dv["row_index"],
+    })
+    if files is not None:
+        scanned = {os.path.relpath(f, version_dir) for f in files}
+        kept = [r for r in set(rel) if r in scanned or unquote(r) in scanned]
+        dv = dv.filter(pc.is_in(dv["file_path"], pa.array(kept, pa.string())))
+    return dv
+
+
+def _dv_filter(dv: "pa.Table") -> F.Column:
+    """A mask as an in-plan filter over the :data:`_POS_FP`/
+    :data:`_POS_RI` columns: one SQL ``IN`` list of row indices per
+    file, parsed through ONE ``F.expr`` call (no Py4J call per
+    position). The indices are BIGINT literals (``7L``), the type of
+    ``row_index``: an INT literal would make the analyzer wrap each one
+    in a cast, which measured about three times the analysis time."""
+    def quote(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    groups = dv.group_by("file_path").aggregate([("row_index", "list")])
+    whens = " ".join(
+        f"WHEN {quote(fp)} THEN {_POS_RI} IN ({','.join(f'{r}L' for r in ris)})"
+        for fp, ris in zip(
+            groups["file_path"].to_pylist(),
+            groups["row_index_list"].to_pylist(),
+        )
+    )
+    return F.expr(f"NOT (CASE {_POS_FP} {whens} ELSE false END)")
+
+
+def _with_positions(data: DataFrame, version_dir: str) -> DataFrame:
+    """``data``, a scan of ``version_dir``'s files, with each row's
+    physical position: the :data:`_POS_COLS` columns."""
     for reserved in (*_POS_COLS, "_ffs_dv_fp", "_ffs_dv_ri"):
         if reserved in data.columns:
             raise ValueError(
-                f"column {reserved!r} is reserved by the DML read "
+                f"column {reserved!r} is reserved by the masked read "
                 "path; rename it in the snapshot"
             )
-    data = data.select(
+    return data.select(
         "*",
         _dv_rel_expr(version_dir, "_metadata.file_path").alias(_POS_FP),
         F.col("_metadata.row_index").alias(_POS_RI),
         F.lit(os.path.basename(os.path.normpath(version_dir))).alias(_POS_V),
     )
-    dv = _dv_sidecar(spark, version_dir)
-    if dv is None:
-        return data
-    return data.join(
-        dv,
-        (F.col(_POS_FP) == F.col("_ffs_dv_fp"))
-        & (F.col(_POS_RI) == F.col("_ffs_dv_ri")),
-        "left_anti",
-    )
 
 
-def _dv_sidecar(
-    spark: SparkSession, version_dir: str
-) -> Optional[DataFrame]:
-    """``version_dir``'s deletion-vector positions as
-    (``_ffs_dv_fp``, ``_ffs_dv_ri``), path normalized version-relative,
-    or None when the version carries no mask — after first self-healing
-    any interrupted sidecar swap, so a crash mid-rewrite can never be
-    silently served as "no mask" (review finding)."""
-    dv_path = os.path.join(version_dir, _DV_DIR)
-    if not os.path.isdir(dv_path):
-        try:
-            _dv_recover_interrupted_swap(version_dir)
-        except OSError:
-            pass  # a concurrent reader won the recovery rename
-        if not os.path.isdir(dv_path):
-            return None
-    return _version_reader(spark, dv_path).parquet(dv_path).select(
-        _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
-        F.col("row_index").alias("_ffs_dv_ri"),
-    )
-
-
-def _apply_deletion_vectors(
-    spark: SparkSession, data: DataFrame, version_dir: str
+def _masked_scan(
+    spark: SparkSession,
+    version_dir: str,
+    files: Optional[list[str]] = None,
+    positions: bool = False,
 ) -> DataFrame:
-    """Apply ``version_dir``'s deletion-vector sidecar (if any) to a
-    scan rooted in that directory: a positional LEFT ANTI join of the
-    scan (tagged with the ``_metadata`` file/row position, path
-    normalized version-relative) against the mask. Works for the full
-    scan and for pruned partial scans (zone/bloom paths) alike — a
-    pruned scan simply anti-joins a mask superset, which is harmless.
-    The join keys are (relative file_path, row_index); no data column
-    takes part in masking. The DV side is left to AQE to size (a
-    sliver for typical deletes — runtime broadcast; no forced hint,
-    so a bulk delete cannot OOM the driver). Without a sidecar
-    (:func:`_dv_sidecar`) the scan returns unchanged."""
-    dv = _dv_sidecar(spark, version_dir)
-    if dv is None:
+    """THE deletion-vector-masked scan of a version — every masked read
+    (``read_version``, ``read_where``, ``read_where_eq``, binpack, the
+    DML/merge builders, the IVM old side, the CAS log's reads) comes
+    through here. ``files`` narrows the scan to a pruned file list
+    (``basePath``-pinned, so hive partition columns survive).
+
+    The mask is read on the driver (:func:`_dv_positions`) and only
+    the positions of the scanned files are kept. Up to
+    :data:`_DV_FILTER_MAX_POSITIONS` of them drop rows through an
+    in-plan filter on ``_metadata.file_path``/``_metadata.row_index``
+    (:func:`_dv_filter`): no Spark job beyond the read's own. A larger
+    mask is a positional LEFT ANTI join against the sidecar, left to
+    AQE to size. Scanned files with no position add nothing to the
+    plan. No data column takes part in masking.
+
+    ``positions=True`` keeps the physical position of every row as
+    ordinary columns — ``_ffs_pos_fp``/``_ffs_pos_ri`` (version-relative
+    file path, row index) and ``_ffs_pos_v`` (the version scanned) —
+    the one-pass DML scan: the matched sliver is computed once and the
+    DV mask, images, change rows and clause tags all project from it.
+    Positions from the predecessor directory stay valid in a
+    hard-linked successor (``_link_tree`` keeps relative layout and the
+    inodes), and a change set built over this scan names the version
+    its mask belongs to (:func:`apply_changes_build`)."""
+    reader = _version_reader(spark, version_dir)
+    data = (
+        reader.parquet(version_dir)
+        if files is None
+        else reader.option("basePath", version_dir).parquet(*files)
+    )
+    dv = _dv_positions(version_dir, files)
+    n = 0 if dv is None else dv.num_rows
+    if not (positions or n):
         return data
-    for reserved in ("_ffs_dv_fp", "_ffs_dv_ri", "_ffs_dvd_fp", "_ffs_dvd_ri"):
-        if reserved in data.columns:
-            raise ValueError(
-                f"column {reserved!r} is reserved by the deletion-vector "
-                "read path; rename it in the snapshot"
-            )
     cols = data.columns
-    return (
-        data.select(
-            "*",
-            _dv_rel_expr(version_dir, "_metadata.file_path").alias(
-                "_ffs_dvd_fp"
-            ),
-            F.col("_metadata.row_index").alias("_ffs_dvd_ri"),
+    data = _with_positions(data, version_dir)
+    if n > _DV_FILTER_MAX_POSITIONS:
+        dv_dir = os.path.join(version_dir, _DV_DIR)
+        side = _version_reader(spark, dv_dir).parquet(dv_dir).select(
+            _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
+            F.col("row_index").alias("_ffs_dv_ri"),
         )
-        .join(
-            dv,
-            (F.col("_ffs_dvd_fp") == F.col("_ffs_dv_fp"))
-            & (F.col("_ffs_dvd_ri") == F.col("_ffs_dv_ri")),
+        data = data.join(
+            side,
+            (F.col(_POS_FP) == F.col("_ffs_dv_fp"))
+            & (F.col(_POS_RI) == F.col("_ffs_dv_ri")),
             "left_anti",
         )
-        .select(*cols)
-    )
+    elif n:
+        data = data.filter(_dv_filter(dv))
+    return data if positions else data.select(*cols)
 
 
 def read_with_deletion_vectors(
     spark: SparkSession, version_dir: str
 ) -> DataFrame:
     """Snapshot of a version with its deletion vectors applied — the
-    free-function form of the mask every ``DocumentStore`` read path
-    now applies by default (:meth:`DocumentStore.read_version`); kept
-    for callers working with bare version directories."""
-    return _apply_deletion_vectors(
-        spark,
-        _version_reader(spark, version_dir).parquet(version_dir),
-        version_dir,
-    )
+    free-function form of :func:`_masked_scan` for callers working with
+    bare version directories."""
+    return _masked_scan(spark, version_dir)
 
 
 def _link_tree(src_dir: str, dest_dir: str) -> None:

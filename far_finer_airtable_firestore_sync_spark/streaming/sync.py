@@ -35,7 +35,7 @@ from far_finer_airtable_firestore_sync_spark.operators.strategies import get_str
 from far_finer_airtable_firestore_sync_spark.sources.store import (
     _POS_COLS,
     DocumentStore,
-    _masked_scan_with_positions,
+    _masked_scan,
     diff_frames,
 )
 
@@ -718,7 +718,7 @@ def _commit_changes(
 ) -> dict:
     """Commit ``changes`` — the diff a fold made to the touched slice
     of version ``v_dir``, read with its positions
-    (``store._masked_scan_with_positions``) — through
+    (``store._masked_scan`` ``positions=True``) — through
     :meth:`DocumentStore.apply_changes` under ``txn``; returns the
     commit's counts. The positions the diff carries on its
     ``update``/``delete`` rows are the mask, so the commit reads no
@@ -773,7 +773,7 @@ def _fold_summary(
     return _commit_changes(
         store, v_dir,
         rollup_delta_changes(
-            _masked_scan_with_positions(store.spark, v_dir), delta,
+            _masked_scan(store.spark, v_dir, positions=True), delta,
             group_col, count_col, sum_map,
         ),
         txn,
@@ -1031,7 +1031,7 @@ def cdf_extrema_sync(
             )
             # the slice carries its positions into the diff: they are
             # the mask apply_changes writes
-            t = _masked_scan_with_positions(store.spark, v_dir)
+            t = _masked_scan(store.spark, v_dir, positions=True)
             old = t.join(
                 touched, t[group_col].eqNullSafe(touched[group_col]),
                 "left_semi",
@@ -1097,7 +1097,7 @@ def cdf_star_sync(
        last consumed commit, carried in the composite txn marker
        ``"epoch:fact_ms:d0_ms:...:dN_ms"`` riding the view flip);
     4. diffs the affected slice of the view, read with its positions
-       (``store._masked_scan_with_positions``), against the re-joined
+       (``store._masked_scan`` ``positions=True``), against the re-joined
        slice once (``view_changes``: updates, inserts and departures,
        each update/departure carrying its old row's position) and
        commits O(changed) on both stores — summary FIRST (signed
@@ -1286,8 +1286,8 @@ def cdf_star_sync(
         )
         old_slice = fresh.limit(0)  # bootstrap: no prior view
         if not view_bootstrap:
-            old_slice = _masked_scan_with_positions(
-                view_store.spark, v_dir
+            old_slice = _masked_scan(
+                view_store.spark, v_dir, positions=True
             ).join(affected, fact_key, "left_semi")
         # persisted once: the summary fold populates it, the view
         # commit reads it back

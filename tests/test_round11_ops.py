@@ -15,8 +15,8 @@ from far_finer_airtable_firestore_sync_spark.sources.backends import (
 from far_finer_airtable_firestore_sync_spark.sources.store import (
     DocumentStore,
     _binpack_classify,
-    _dv_masked_files,
     _dv_position_count,
+    _dv_positions,
 )
 
 
@@ -362,7 +362,7 @@ def test_dv_masked_files_normalizes_paths(spark, tmp_root):
     s.commit(_docs(spark).coalesce(2))
     s.delete_where("k % 10 = 0")
     vd = s.current_version_dir()
-    masked = _dv_masked_files(vd)
+    masked = _dv_positions(vd)["file_path"].unique().to_pylist()
     assert masked  # both data files carry positions
     for rel in masked:
         assert not rel.startswith("/") and not rel.startswith("file:")
@@ -1391,7 +1391,7 @@ class TestOnePassDml:
         from far_finer_airtable_firestore_sync_spark.sources.store import (
             _POS_FP,
             _POS_RI,
-            _masked_scan_with_positions,
+            _masked_scan,
             write_deletion_vectors,
         )
 
@@ -1403,7 +1403,7 @@ class TestOnePassDml:
         # predicate form on a, positions form on b — identical mask
         va, _ = a.delete_where("k % 7 = 0")
         vb_dir = b.current_version_dir()
-        pos = _masked_scan_with_positions(spark, vb_dir).filter(
+        pos = _masked_scan(spark, vb_dir, positions=True).filter(
             "k % 7 = 0"
         ).select(_POS_FP, _POS_RI)
         n = write_deletion_vectors(spark, vb_dir, positions=pos)

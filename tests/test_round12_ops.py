@@ -27,7 +27,7 @@ from far_finer_airtable_firestore_sync_spark.sources.store import (
     _POS_COLS,
     DocumentStore,
     _dv_position_count,
-    _masked_scan_with_positions,
+    _masked_scan,
     _run_concurrently,
     _version_live_rows,
     diff_frames,
@@ -306,7 +306,7 @@ class TestFooterSchemaReads:
             "read_version": lambda: s.read_version(vd),
             "read_as_of": lambda: s.read_as_of(now_ms + 60_000),
             "read_where": lambda: s.read_where("k", 10, 20),
-            "masked_scan": lambda: _masked_scan_with_positions(spark, vd),
+            "masked_scan": lambda: _masked_scan(spark, vd, positions=True),
             "txn_read": b.read,
         }
         for name, build in builds.items():
@@ -519,7 +519,7 @@ class TestApplyChanges:
         cur = s.current_version_dir()
         target = _target_of(s, spark)
         changes = diff_frames(
-            _masked_scan_with_positions(spark, cur), target, "k",
+            _masked_scan(spark, cur, positions=True), target, "k",
             include_old=True,
         )
         out, counts = s.apply_changes(
@@ -542,7 +542,7 @@ class TestApplyChanges:
         s.commit(_docs(spark, 50))
         cur = s.current_version_dir()
         changes = diff_frames(
-            _masked_scan_with_positions(spark, cur), s.read(), "k",
+            _masked_scan(spark, cur, positions=True), s.read(), "k",
             include_old=True,
         )
         out, counts = s.apply_changes(
@@ -560,7 +560,7 @@ class TestApplyChanges:
         the version the delete published: nothing is published."""
         s = DocumentStore(spark, tmp_root, "k")
         s.commit(_docs(spark, 50))
-        old = _masked_scan_with_positions(spark, s.current_version_dir())
+        old = _masked_scan(spark, s.current_version_dir(), positions=True)
         changes = diff_frames(
             old, old.filter("k >= 10"), "k", include_old=True
         ).localCheckpoint()
@@ -597,7 +597,7 @@ class TestApplyChanges:
         cur = s.current_version_dir()
         target = _target_of(s, spark)
         changes = diff_frames(
-            _masked_scan_with_positions(spark, cur), target, "k",
+            _masked_scan(spark, cur, positions=True), target, "k",
             include_old=True,
         ).persist()
         changes.count()

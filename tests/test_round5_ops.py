@@ -479,7 +479,7 @@ def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark, tmp_path):
     from far_finer_airtable_firestore_sync_spark.sources.store import (
         _POS_COLS,
         DocumentStore,
-        _masked_scan_with_positions,
+        _masked_scan,
         diff_frames,
     )
 
@@ -489,7 +489,7 @@ def test_rollup_delta_changes_equal_the_diff_of_the_fold(spark, tmp_path):
          ("u", 4, 40)],
         "g string, n long, tv long",
     ))
-    base = _masked_scan_with_positions(spark, store.current_version_dir())
+    base = _masked_scan(spark, store.current_version_dir(), positions=True)
     delta = spark.createDataFrame(
         [("a", 1, 3), ("b", -1, -5), ("c", 2, None), (None, 1, 4),
          ("z", 0, 0), ("e", 0, 0)],

@@ -953,11 +953,11 @@ def test_diff_frames_null_key_semantics(spark, tmp_path):
     # carry their own positions, the insert carries NULLs
     from far_finer_airtable_firestore_sync_spark.sources.store import (
         _POS_COLS,
-        _masked_scan_with_positions,
+        _masked_scan,
         diff_frames,
     )
 
-    old_pos = _masked_scan_with_positions(spark, v1)
+    old_pos = _masked_scan(spark, v1, positions=True)
     where = {r["pk"]: tuple(r[c] for c in _POS_COLS) for r in old_pos.collect()}
     target = spark.createDataFrame(
         [(1, "a"), (None, "moved"), (3, "new")], "pk long, name string"
