@@ -726,8 +726,7 @@ class TransactionalParquetBackend:
                 when_not_matched_by_source_delete, schema_evolution,
             )
             return merge_into_build(
-                self.spark, base, out, plan, self.key_col,
-                when_matched_update, cdf,
+                self.spark, base, out, plan, self.key_col, cdf
             )
 
         return self._dml_publish(

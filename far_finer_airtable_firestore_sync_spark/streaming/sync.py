@@ -722,9 +722,10 @@ def _commit_changes(
     :meth:`DocumentStore.apply_changes` under ``txn``; returns the
     commit's counts. The positions the diff carries on its
     ``update``/``delete`` rows are the mask, so the commit reads no
-    data of ``v_dir``. The change set is persisted: the counts
-    aggregate, the mask and the append each read it. An empty change
-    set writes no version, only the marker."""
+    data of ``v_dir``. The change set is persisted: the commit's one
+    collect of its mask and images reads it (and, past the driver-write
+    bound, the counts aggregate, the mask write and the append each
+    do). An empty change set writes no version, only the marker."""
     changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return store.apply_changes(

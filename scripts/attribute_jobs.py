@@ -12,8 +12,10 @@ bench.py times it. Workload mode runs ``perfbench/run.py`` in this
 process for BENCHMARK.json's ``run_seconds``, in perfbench's own
 session; its output lines go to stderr.
 
-Every classic DataFrame action and DataFrameReader/DataFrameWriter call
-(a read without a schema runs a job to infer one) is a window of job
+Every classic DataFrame action (the Arrow collect ``_collect_as_arrow``
+too, which the store's sliver DML commits call directly) and
+DataFrameReader/DataFrameWriter call (a read without a schema runs a
+job to infer one) is a window of job
 ids, marked by ``perfbench.harness.JobCounter`` as it starts and
 ends. A job is charged to the window whose thread submitted it (the
 window names itself in the job's description, which the stage jobs of
@@ -56,7 +58,7 @@ REPEATS = 2
 ACTIONS = (
     "collect", "count", "first", "head", "take", "tail", "isEmpty", "show",
     "toPandas", "toArrow", "toLocalIterator", "foreach", "foreachPartition",
-    "checkpoint", "localCheckpoint",
+    "checkpoint", "localCheckpoint", "_collect_as_arrow",
 )
 READS = ("load", "parquet", "json", "csv", "orc", "text", "table")
 WRITES = ("save", "parquet", "json", "csv", "orc", "text", "saveAsTable", "insertInto")

@@ -585,12 +585,16 @@ class TestApplyChanges:
 
     def test_commit_reads_no_base_data(self, spark, tmp_root, monkeypatch):
         """The mask is the change set's own positions: with the change
-        set cached (as every IVM commit caches it), the positions frame
-        scans no file of the base version, and the commit runs exactly
-        the counts aggregate, the mask write and the append. The
-        aggregate is one job: the cache keeps the partitioning AQE gave
-        it (``canChangeCachedPlanOutputPartitioning``, as every session
-        of the repo runs), one partition for this sliver, so the global
+        set cached (as every IVM commit caches it), no frame the commit
+        collects or writes scans a file of the base version. Below the
+        driver-write bound the commit is ONE job, the collect of the
+        mask and the images (``store._collect_sliver``). With the bound
+        at 0 (the Spark writers, ``tests/test_driver_dml.py`` re-runs
+        this class so) it is exactly the counts aggregate, the mask
+        write and the append. The aggregate is one job: the cache keeps
+        the partitioning AQE gave it
+        (``canChangeCachedPlanOutputPartitioning``, as every session of
+        the repo runs), one partition for this sliver, so the global
         aggregate needs no shuffle."""
         s = DocumentStore(spark, tmp_root, "k")
         s.commit(_docs(spark, 200))
@@ -602,22 +606,36 @@ class TestApplyChanges:
         ).persist()
         changes.count()
         seen = {}
+        collect = store_mod._collect_sliver
         write_dv = store_mod.write_deletion_vectors
 
-        def spy(*args, **kwargs):
+        def spy_collect(base, source, parts, n_rows=None):
+            seen.update({
+                name: store_mod._project(source, part)
+                for name, part in parts.items()
+            })
+            return collect(base, source, parts, n_rows)
+
+        def spy_dv(*args, **kwargs):
             seen["positions"] = kwargs["positions"]
             return write_dv(*args, **kwargs)
 
-        monkeypatch.setattr(store_mod, "write_deletion_vectors", spy)
+        monkeypatch.setattr(store_mod, "_collect_sliver", spy_collect)
+        monkeypatch.setattr(store_mod, "write_deletion_vectors", spy_dv)
         try:
             jobs = _job_window(
                 spark, lambda: s.apply_changes(changes, expected_version=cur)
             )
-            scanned = _scanned_roots(seen["positions"])
+            scanned = [
+                r for df in seen.values() if df is not None
+                for r in _scanned_roots(df)
+            ]
         finally:
             changes.unpersist()
+        on_driver = store_mod._DML_DRIVER_MAX_ROWS > 0
+        assert ("positions" in seen) != on_driver
         assert os.path.realpath(cur) not in map(os.path.realpath, scanned)
-        assert len(jobs) == 3, jobs
+        assert len(jobs) == (1 if on_driver else 3), jobs
         _assert_same(s.read(), target)
 
 
